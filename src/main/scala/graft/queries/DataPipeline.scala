@@ -375,9 +375,11 @@ object DataPipeline {
       .withColumn("lo_i", floor(col("pos")))
       .withColumn("hi_i", ceil(col("pos")))
     val w = Window.partitionBy(k).orderBy(v)
+    // null-safe: percentile() returns a row for the NULL-key group too
     df.filter(v.isNotNull)
       .select(k, v)
-      .join(broadcast(counts), Seq(keyCol))
+      .join(broadcast(counts.withColumnRenamed(keyCol, "__k")), k <=> col("__k"))
+      .drop("__k")
       .withColumn("rk", row_number().over(w).cast("long") - 1L)
       .filter(col("rk") === col("lo_i") || col("rk") === col("hi_i"))
       .groupBy(k, col("pos"), col("lo_i"), col("hi_i"))

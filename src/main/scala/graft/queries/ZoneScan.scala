@@ -64,14 +64,29 @@ object ZoneScan {
     * admit's straggler tail with the second's map work. Used ONLY where
     * the operator contract has no admission-order requirement — the
     * chronological event slices (IncrementalGraph) and the
-    * admit→compact→admit interleavings (q83/q84) stay sequential. */
-  private def bothAdmits[A, B](a: => A, b: => B): (A, B) = {
+    * admit→compact→admit interleavings (q83/q84) stay sequential.
+    *
+    * BOTH halves are awaited before anything is rethrown: callers delete
+    * the temp store in a `finally`, which must never run under a sibling
+    * that is still writing. The first failure surfaces, with the second
+    * attached as suppressed. There is deliberately no timeout — a wait
+    * that gave up would return while the sibling still writes, the same
+    * race again. */
+  private[graft] def bothAdmits[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
+    import scala.util.{Failure, Success}
     implicit val ec: ExecutionContext = ExecutionContext.global
     val fa = Future(a)
     val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    (Await.ready(fa, Duration.Inf).value.get,
+      Await.ready(fb, Duration.Inf).value.get) match {
+      case (Success(x), Success(y)) => (x, y)
+      case (Failure(e), rb) =>
+        rb.failed.foreach(e.addSuppressed)
+        throw e
+      case (_, Failure(e)) => throw e
+    }
   }
 
   def q79ZonemapScan(spark: SparkSession, dir: String): DataFrame = {

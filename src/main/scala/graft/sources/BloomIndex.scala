@@ -175,27 +175,11 @@ object BloomIndex {
     new java.io.File(statsDir + ".keycols")
 
   private def ensureKeyCols(statsDir: String, keyCols: Seq[String]): Unit = {
-    val f = keyColsFile(statsDir)
-    val parent = f.getAbsoluteFile.getParentFile
-    if (parent != null) parent.mkdirs(): Unit
     val want = keyCols.mkString(",")
-    // publish via write-temp-then-atomic-rename (r14): the old CREATE_NEW
-    // write created the sidecar BEFORE its bytes landed, so a concurrent
-    // admit (two writers are legal — the Store protocol is built for them)
-    // could read an empty key list and wrongly reject its own probe. A
-    // rename publishes fully-written bytes or nothing; the loser of the
-    // rename race falls through to the verification read.
-    if (!f.exists()) {
-      val tmp = new java.io.File(parent,
-        s".${f.getName}.tmp-${java.util.UUID.randomUUID()}")
-      java.nio.file.Files.write(tmp.toPath,
-        want.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-      try java.nio.file.Files.move(tmp.toPath, f.toPath): Unit
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally { tmp.delete(): Unit }
-    }
-    val got = new String(java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
+    // published once (r14): concurrent admits are legal — the Store
+    // protocol is built for them — so the sidecar must appear with its
+    // bytes or not at all, and the rename-race loser verifies the winner's
+    val got = Store.publishOnce(keyColsFile(statsDir), want)
     require(got == want,
       s"index at $statsDir is keyed by ($got), not ($want)")
   }
@@ -267,7 +251,7 @@ object BloomIndex {
           log.warn(s"bloom stats for delta-$id skipped (data admitted; " +
             s"file stays uncovered until maintainIndex heals)", e)
       }
-      invalidateServeCache(statsDir)
+      serveCache.invalidate(statsDir)
     }
     admitted
   }
@@ -277,87 +261,30 @@ object BloomIndex {
   // The distributed probe is the 100 TB-safe default, but a SERVING
   // deployment answering point lookups pays a full Spark job per probe
   // just to decide "which files?" — a scheduler round-trip in front of
-  // every lookup (bench p50 was ~0.5 s). This cache keeps the
-  // DESERIALIZED filters on the driver for stats stores under a declared
-  // byte budget, keyed by the store's CONTENT VERSION (its top-level
-  // listing — every admission, heal, compaction, and retirement commits
-  // by renaming into the top level, so any change is visible there):
-  //
-  //  - version match -> probe the cached filters in-process (no job);
-  //  - version drift -> one refresh pass, then in-process probes again;
-  //  - over budget, or non-literal probe keys -> the distributed pass.
-  //
-  // Staleness degrades to SCANNING, by construction rather than by
-  // invalidation: the live file listing is taken fresh on every lookup, a
-  // live file the cached stats do not cover is read unconditionally, and
-  // a cached row for a dead file falls out of the live set. File names
-  // are never reused (admission ids are unique, rewrites mint fresh UUID
-  // part names), so a cached name can never resolve to different bytes.
-  // Writers in THIS JVM also invalidate proactively; other writers are
-  // caught by the version key. Spec: ServeCacheSpec.
+  // every lookup (bench p50 was ~0.5 s). Stats stores under the
+  // [[ServeCache]] budget keep their DESERIALIZED filters on the driver
+  // and literal probes test them in-process; over budget, or with
+  // non-literal probe keys, lookups run the distributed pass. Spec:
+  // ServeCacheSpec.
 
-  private final case class ServeEntry(version: String,
-      blooms: Map[String, org.apache.spark.util.sketch.BloomFilter])
   private val serveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ServeEntry]()
-
-  /** Driver-side budget for cached filters, per stats store (mutable so a
-    * serving deployment — and the spec — can size it to its driver). */
-  @volatile private[graft] var serveCacheMaxBytes: Long =
-    sys.env.get("GRAFT_SERVE_CACHE_MAX_BYTES").map(_.toLong)
-      .getOrElse(256L << 20)
-
-  private def cacheKey(statsDir: String): String =
-    new java.io.File(statsDir).getAbsolutePath
-
-  private[graft] def invalidateServeCache(statsDir: String): Unit =
-    serveCache.remove(cacheKey(statsDir)): Unit
-
-  /** Content-version fingerprint: the top-level listing with kinds,
-    * sizes, and mtimes. Commit protocol guarantees every visible change
-    * renames something into (or out of) the top level. */
-  private[graft] def contentVersion(statsDir: String): String = {
-    val fs = new java.io.File(statsDir).listFiles()
-    if (fs == null) "absent"
-    else fs.iterator.map(f =>
-      s"${f.getName}/${f.isDirectory}/${f.length()}/${f.lastModified()}")
-      .toSeq.sorted.mkString("|")
-  }
-
-  private def diskBytes(f: java.io.File): Long =
-    if (f.isFile) f.length()
-    else {
-      val kids = f.listFiles()
-      if (kids == null) 0L else kids.iterator.map(diskBytes).sum
-    }
+    new ServeCache[Map[String, org.apache.spark.util.sketch.BloomFilter]]
 
   /** The cached (or freshly refreshed) filter map; None when the store
-    * exceeds the driver budget — callers run the distributed pass. The
-    * version is taken BEFORE the refresh read, so a stats append racing
-    * the refresh leaves a cache newer than its recorded version (the next
-    * lookup refreshes again) — never the reverse. */
+    * exceeds the driver budget — callers run the distributed pass. */
   private def cachedBlooms(spark: SparkSession, statsDir: String)
-      : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-    val key = cacheKey(statsDir)
-    val ver = contentVersion(statsDir)
-    val hit = serveCache.get(key)
-    if (hit != null && hit.version == ver) return Some(hit.blooms)
-    if (diskBytes(new java.io.File(statsDir)) > serveCacheMaxBytes) {
-      serveCache.remove(key)
-      return None
+      : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] =
+    serveCache.get(statsDir) {
+      // liveFiles + readFiles: the refresh pays ONE collect job — Store.read's
+      // mergeSchema option would add a distributed footer-merge job first
+      val rows = Store.readFiles(spark, Store.liveFiles(statsDir))
+        .select(col("file"), col("bloom")).collect()
+      // duplicate rows for one file (heal racing admit): either is correct
+      rows.iterator.map { r =>
+        r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+      }.toMap
     }
-    // liveFiles + readFiles: the refresh pays ONE collect job — Store.read's
-    // mergeSchema option would add a distributed footer-merge job first
-    val rows = Store.readFiles(spark, Store.liveFiles(statsDir))
-      .select(col("file"), col("bloom")).collect()
-    // duplicate rows for one file (heal racing admit): either is correct
-    val m = rows.iterator.map { r =>
-      r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-    }.toMap
-    serveCache.put(key, ServeEntry(ver, m)): Unit
-    Some(m)
-  }
 
   /** xxhash64 of the probe tuple computed in-process — only when every
     * key is a foldable deterministic literal (the serving case);
@@ -692,7 +619,7 @@ object BloomIndex {
           stats.join(broadcast(liveNow), Seq("file"), "left_semi")
         }): Unit
     }
-    invalidateServeCache(statsDir)
+    serveCache.invalidate(statsDir)
   }
 
   /** Stats-store delta budget between hygiene rewrites (heal appends one

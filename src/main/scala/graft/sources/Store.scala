@@ -529,27 +529,37 @@ object Store {
   private def tombstoneKeyFile(tsd: String) = new File(tsd + ".keycol")
 
   private def ensureTombstoneKey(tsd: String, keyCol: String): Unit = {
-    val f = tombstoneKeyFile(tsd)
-    val parent = f.getAbsoluteFile.getParentFile
-    if (parent != null) parent.mkdirs(): Unit
-    // write-temp-then-atomic-rename (r14, same fix as BloomIndex
-    // .keycols): a bare CREATE_NEW write creates the sidecar before its
-    // bytes land, so a concurrent first delete could read an empty key
-    // name. The rename publishes fully-written bytes or nothing; the
-    // rename-race loser falls through to the verification read.
-    if (!f.exists()) {
-      val tmp = new File(parent,
-        s".${f.getName}.tmp-${java.util.UUID.randomUUID()}")
-      java.nio.file.Files.write(tmp.toPath,
-        keyCol.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-      try java.nio.file.Files.move(tmp.toPath, f.toPath): Unit
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally { tmp.delete(): Unit }
-    }
-    val got = new String(java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val got = publishOnce(tombstoneKeyFile(tsd), keyCol)
     require(got == keyCol,
       s"store deletes are keyed by '$got'; got '$keyCol'")
+  }
+
+  /** Publish a small sidecar file exactly once across racing writers and
+    * return its contents — this caller's, or those of whoever published
+    * first — for the caller to verify. The bytes go to a hidden temp
+    * sibling that is renamed into place atomically (r14): a bare
+    * CREATE_NEW write creates the file BEFORE its bytes land, so a
+    * concurrent reader could see it empty. Every step that can leave the
+    * temp file behind sits inside the `try` that deletes it, so a failed
+    * write (disk full) leaks no `.tmp-` file; the rename-race loser falls
+    * through to the read. */
+  private[graft] def publishOnce(file: File, content: String): String = {
+    val parent = file.getAbsoluteFile.getParentFile
+    if (parent != null) parent.mkdirs(): Unit
+    if (!file.exists()) {
+      val tmp = new File(parent, s".${file.getName}.tmp-${UUID.randomUUID()}")
+      try {
+        val out = java.nio.file.Files.newOutputStream(tmp.toPath)
+        try {
+          ProtocolPoints.pause("publish.write") // the temp file exists, empty
+          out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        } finally out.close()
+        java.nio.file.Files.move(tmp.toPath, file.toPath): Unit
+      } catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      finally { tmp.delete(): Unit }
+    }
+    new String(java.nio.file.Files.readAllBytes(file.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
   }
 
   /** Admit a delete: `keys` is a single-column frame named after the data

@@ -49,13 +49,51 @@ object ZoneMaps {
       .write.mode(SaveMode.Overwrite).parquet(statsDir)
   }
 
+  // ── Decision predicates over a stats row, shared by every read face ───
+
   /** Files whose `[min_c, max_c]` range intersects `[lo, hi)` for EVERY
     * conjunct — the candidate set a conjunction of range predicates must
-    * read. NULL bounds (all-null file slice) are kept: the zone map may
-    * only ever prune files that provably cannot match. Conjuncts compose
-    * multiplicatively on a layout that correlates several columns with
-    * file boundaries (z-order): each dimension independently excludes
-    * files the other cannot. */
+    * read. NULL bounds (all-null file slice, or a live file the stats do
+    * not cover) are kept: the zone map may only ever prune files that
+    * provably cannot match. Conjuncts compose multiplicatively on a layout
+    * that correlates several columns with file boundaries (z-order): each
+    * dimension independently excludes files the other cannot. */
+  private def intersects(preds: Seq[(String, Column, Column)]): Column =
+    preds.map { case (c, lo, hi) =>
+      col(s"max_$c").isNull || (col(s"max_$c") >= lo && col(s"min_$c") < hi)
+    }.reduce(_ && _)
+
+  /** The residual row predicate: every `col in [lo, hi)` conjunct. */
+  private def rowPred(preds: Seq[(String, Column, Column)]): Column =
+    preds.map { case (c, lo, hi) => col(c) >= lo && col(c) < hi }.reduce(_ && _)
+
+  /** Files whose tracked range lies FULLY inside every conjunct. Never
+    * NULL: unknown bounds are not contained. */
+  private def contained(preds: Seq[(String, Column, Column)]): Column =
+    preds.map { case (c, lo, hi) =>
+      col(s"min_$c").isNotNull && col(s"min_$c") >= lo &&
+        col(s"max_$c").isNotNull && col(s"max_$c") < hi
+    }.reduce(_ && _)
+
+  /** Files PROVEN null-free in every predicate column. Null-safe: a stats
+    * row whose nnull_c is NULL (pre-nnull rows read through mergeSchema,
+    * or stats from the static build) yields FALSE, never NULL — a NULL
+    * eligibility would fail both the metadata branch and the scan branch
+    * of [[aggregateRangeIndexed]], silently dropping the file (unknown
+    * null counts mean "scan the file, never guess"). */
+  private def nullFree(preds: Seq[(String, Column, Column)]): Column =
+    preds.map { case (c, _, _) => coalesce(col(s"nnull_$c") === 0L, lit(false)) }
+      .reduce(_ && _)
+
+  /** A file ALL of whose values are null in some conjunct column (nnull ==
+    * n_rows) provably matches no row: nothing to serve, nothing to scan —
+    * without this, an all-null slice has NULL bounds and would be scanned
+    * forever by the conservative [[intersects]]. */
+  private def provablyEmpty(preds: Seq[(String, Column, Column)]): Column =
+    preds.map { case (c, _, _) =>
+      col(s"nnull_$c").isNotNull && col(s"nnull_$c") === col("n_rows")
+    }.reduce(_ || _)
+
   /** Scan `dataPath` for rows satisfying every `col in [lo, hi)` conjunct,
     * reading ONLY files the zone map cannot exclude. Returns the filtered
     * frame plus (filesRead, filesTotal) for observability — the pair every
@@ -72,19 +110,11 @@ object ZoneMaps {
       preds: Seq[(String, Column, Column)]): (DataFrame, (Int, Int)) = {
     import spark.implicits._
     require(preds.nonEmpty, "at least one range conjunct")
-    val keep = preds
-      .map { case (c, lo, hi) =>
-        col(s"max_$c").isNull || (col(s"max_$c") >= lo && col(s"min_$c") < hi)
-      }
-      .reduce(_ && _)
     val flagged = spark.read.parquet(statsDir)
-      .select($"file", keep.as("keep")).as[(String, Boolean)]
+      .select($"file", intersects(preds).as("keep")).as[(String, Boolean)]
       .collect() // bounded: one row per data file (see header)
     val total = flagged.length
     val files = flagged.collect { case (f, true) => f }.toSeq
-    val pred = preds
-      .map { case (c, lo, hi) => col(c) >= lo && col(c) < hi }
-      .reduce(_ && _)
     val df =
       if (files.isEmpty)
         // nothing can match: empty frame with the data's schema, no scan
@@ -94,7 +124,7 @@ object ZoneMaps {
         // layouts are single-writer by construction); the driver-statted
         // read (r13) also skips the re-listing of the candidate paths —
         // a distributed job once the survivor list passes 32 files
-        Store.readFiles(spark, files).filter(pred)
+        Store.readFiles(spark, files).filter(rowPred(preds))
     (df, (files.length, total))
   }
 
@@ -310,64 +340,32 @@ object ZoneMaps {
 
   // ── Serve cache: driver-resident zone stats ────────────────────────────
   //
-  // The bloom serve cache's sibling, same protocol (content-version keyed,
-  // byte-budgeted, staleness degrades to scanning because live files are
-  // listed fresh per query and uncovered files are read unconditionally),
-  // different representation: zone stats rows are ~100 B of PLAIN VALUES
-  // per file — no filters to deserialize — so the cache holds the
-  // COLLECTED ROWS and serves them back as a LOCAL DataFrame. Every
-  // decision predicate (intersects/contained/provablyEmpty, with their
-  // type-aware comparisons over timestamps/decimals/strings) then runs
-  // through the SAME Column expressions as the distributed path —
-  // Catalyst folds Project/Filter over a LocalRelation at optimization
-  // time — instead of a re-implemented driver-side comparison that could
-  // silently diverge. What the cache removes is the per-query parquet
-  // read of the stats store, not the semantics.
+  // The [[ServeCache]] protocol with zone stats rows (~100 B of PLAIN
+  // VALUES per file — no filters to deserialize) as the cached value: the
+  // COLLECTED ROWS are served back as a LOCAL DataFrame. Every decision
+  // predicate (intersects/contained/provablyEmpty, with their type-aware
+  // comparisons over timestamps/decimals/strings) then runs through the
+  // SAME Column expressions as the uncached path — Catalyst folds
+  // Project/Filter over a LocalRelation at optimization time — instead of
+  // a re-implemented driver-side comparison that could silently diverge.
+  // What the cache removes is the per-query parquet read of the stats
+  // store, not the semantics.
 
-  private final case class StatsEntry(version: String,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: java.util.List[org.apache.spark.sql.Row])
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StatsEntry]()
+  private val statsCache = new ServeCache[(org.apache.spark.sql.types.StructType,
+    java.util.List[org.apache.spark.sql.Row])]
 
-  /** Driver-side budget for cached zone stats, per stats store. */
-  @volatile private[graft] var statsCacheMaxBytes: Long =
-    sys.env.get("GRAFT_ZONE_CACHE_MAX_BYTES").map(_.toLong)
-      .getOrElse(256L << 20)
-
-  private def cacheKey(statsDir: String): String =
-    new java.io.File(statsDir).getAbsolutePath
-
-  private[graft] def invalidateStatsCache(statsDir: String): Unit =
-    statsCache.remove(cacheKey(statsDir)): Unit
-
-  private def diskBytes(f: java.io.File): Long =
-    if (f.isFile) f.length()
-    else {
-      val kids = f.listFiles()
-      if (kids == null) 0L else kids.iterator.map(diskBytes).sum
-    }
-
-  /** The stats table as a DataFrame — served from the driver cache when
-    * the store's content version matches (refreshing once when it
-    * drifts), falling back to the parquet read when over budget. Both
-    * branches feed the identical decision expressions downstream. */
+  /** The stats table as a DataFrame — served from the driver cache, or
+    * read from parquet when over budget. Both feed the identical decision
+    * expressions downstream. */
   private def statsTable(spark: SparkSession, statsDir: String): DataFrame = {
-    val key = cacheKey(statsDir)
-    val ver = BloomIndex.contentVersion(statsDir)
-    val hit = statsCache.get(key)
-    if (hit != null && hit.version == ver)
-      return spark.createDataFrame(hit.rows, hit.schema)
-    if (diskBytes(new java.io.File(statsDir)) > statsCacheMaxBytes) {
-      statsCache.remove(key)
-      return Store.readFiles(spark, Store.liveFiles(statsDir))
-    }
     // liveFiles + readFiles: the refresh pays ONE collect job (Store.read's
     // mergeSchema option would add a distributed footer-merge job first)
-    val df = Store.readFiles(spark, Store.liveFiles(statsDir))
-    val rows = java.util.Arrays.asList(df.collect(): _*)
-    statsCache.put(key, StatsEntry(ver, df.schema, rows)): Unit
-    spark.createDataFrame(rows, df.schema)
+    def read() = Store.readFiles(spark, Store.liveFiles(statsDir))
+    statsCache.get(statsDir) {
+      val df = read()
+      (df.schema, java.util.Arrays.asList(df.collect(): _*))
+    }.map { case (schema, rows) => spark.createDataFrame(rows, schema) }
+      .getOrElse(read())
   }
 
   /** Admit `df` into the data Store AND its per-file ranges into the
@@ -412,7 +410,7 @@ object ZoneMaps {
           log.warn(s"zone stats for delta-$id skipped (data admitted; " +
             s"file stays uncovered until maintainIndex heals)", e)
       }
-      invalidateStatsCache(statsDir)
+      statsCache.invalidate(statsDir)
     }
     admitted
   }
@@ -435,26 +433,100 @@ object ZoneMaps {
     val live = Store.liveFiles(dataDir).toSet
     val files: Seq[String] =
       if (!Store.hasData(statsDir)) live.toSeq.sorted
-      else {
-        val keep = preds
-          .map { case (c, lo, hi) =>
-            col(s"max_$c").isNull || (col(s"max_$c") >= lo && col(s"min_$c") < hi)
-          }
-          .reduce(_ && _)
-        val liveDf = live.toSeq.toDF("file")
-        liveDf.join(statsTable(spark, statsDir), Seq("file"), "left_outer")
-          .filter(keep)
+      else
+        live.toSeq.toDF("file")
+          .join(statsTable(spark, statsDir), Seq("file"), "left_outer")
+          .filter(intersects(preds))
           .select(col("file")).distinct()
           .as[String].collect().toSeq.sorted
-      }
-    val pred = preds
-      .map { case (c, lo, hi) => col(c) >= lo && col(c) < hi }
-      .reduce(_ && _)
     val df =
       if (files.isEmpty) Store.readBounded(spark, dataDir).filter(lit(false))
-      else Store.readFiles(spark, files).filter(pred)
+      else Store.readFiles(spark, files).filter(rowPred(preds))
     (df, (files.length, live.size))
   }
+
+  // ── Aggregate pushdown: COUNT, MIN/MAX and SUM over one shared core ────
+
+  /** One output column of a zone aggregate. `fold` (sum, min or max) runs
+    * twice: over `meta`, read from the stats row of each file served from
+    * metadata, and then over that partial together with `scan`, read from
+    * each matching row of the boundary files — so folding a partial again
+    * must equal folding the inputs at once. */
+  private final case class AggCol(name: String, fold: Column => Column,
+      meta: Column, scan: Column)
+
+  /** What one aggregate adds to [[aggregateRangeIndexed]]: the extra
+    * condition under which a fully contained file may be served from its
+    * stats row, and its output columns. */
+  private final case class ZoneAgg(eligible: Column, cols: Seq[AggCol])
+
+  /** The aggregate-pushdown core (the metadata half of REPOSE-style prune
+    * then verify): per LIVE data file, a covered file whose tracked ranges
+    * lie fully inside every conjunct, and that the aggregate deems
+    * `eligible`, is served from its stats row without being read; a
+    * provably empty file is neither served nor read; every other
+    * intersecting file — boundary-straddling, uncovered (crash window,
+    * compaction rename), or with stats too old to prove eligibility — is
+    * scanned with the residual predicate. Stale stats rows for dead files
+    * fall out of the live join; duplicate rows (heal racing an admit) are
+    * dropped first — zone stats for a file are deterministic, so any copy
+    * is correct.
+    *
+    * Cost: ONE decision aggregate over the live x stats join returns the
+    * metadata partials and the boundary-file list together, ONE aggregate
+    * scans the boundary files, and the two legs merge through a local
+    * relation. The scan leg's result types anchor the answer, so it stays
+    * generic over timestamps, decimals and strings, and a metadata leg
+    * summing a literal NULL (an untracked target) cannot coerce it away
+    * from the data's type. `agg` receives the stats table's columns
+    * (empty when the store has no stats yet: every file is scanned).
+    * Returns the answer as a 1-row local frame plus (filesScanned,
+    * filesTotal). */
+  private def aggregateRangeIndexed(spark: SparkSession, dataDir: String,
+      statsDir: String, preds: Seq[(String, Column, Column)])(
+      agg: Set[String] => ZoneAgg): (DataFrame, (Int, Int)) = {
+    import spark.implicits._
+    require(preds.nonEmpty, "at least one range conjunct")
+    val live = Store.liveFiles(dataDir).toSet
+    val stats =
+      if (Store.hasData(statsDir)) Some(statsTable(spark, statsDir)) else None
+    val ZoneAgg(eligible, cols) = agg(stats.fold(Set.empty[String])(_.columns.toSet))
+    val (meta, scanFiles) = stats match {
+      case None => (None, live.toSeq.sorted)
+      case Some(st) =>
+        val (fits, empty) = (contained(preds) && eligible, provablyEmpty(preds))
+        val (served, scan) = (fits && !empty, intersects(preds) && !fits && !empty)
+        val decision = live.toSeq.toDF("file")
+          .join(st, Seq("file"), "left_outer")
+          .dropDuplicates("file")
+          .select(cols.map(c => c.fold(when(served, c.meta)).as(c.name)) :+
+            collect_list(when(scan, col("file"))).as("scan"): _*)
+        val row = decision.head()
+        val partials = spark.createDataFrame(
+          java.util.List.of(org.apache.spark.sql.Row.fromSeq(row.toSeq.init)),
+          org.apache.spark.sql.types.StructType(decision.schema.init))
+        (Some(partials), row.getSeq[String](cols.size).sorted)
+    }
+    val scanned =
+      (if (scanFiles.nonEmpty) Store.readFiles(spark, scanFiles).filter(rowPred(preds))
+       // no files to scan: an empty frame of the data's schema still types
+       // the answer; an empty store has no schema, and only COUNT answers
+       else if (live.isEmpty) spark.emptyDataFrame
+       else Store.readBounded(spark, dataDir).filter(lit(false)))
+        .select(cols.map(c => c.scan.as(c.name)): _*)
+    val types = scanned.select(cols.map(c => c.fold(col(c.name)).as(c.name)): _*)
+      .schema
+    def typed(c: AggCol, v: Column) = v.cast(types(c.name).dataType).as(c.name)
+    val merged = (meta.map(_.select(cols.map(c => typed(c, col(c.name))): _*))
+        .toSeq :+ scanned)
+      .reduce(_ unionByName _)
+      .select(cols.map(c => typed(c, c.fold(col(c.name)))): _*)
+    (spark.createDataFrame(java.util.Arrays.asList(merged.collect(): _*),
+      merged.schema), (scanFiles.length, live.size))
+  }
+
+  /** Folds a count: NULL (no input) reads as 0. */
+  private def countFold(c: Column): Column = coalesce(sum(c), lit(0L))
 
   /** COUNT(*) over a range conjunction, answered from METADATA wherever
     * possible: a covered file whose tracked ranges lie FULLY inside every
@@ -466,74 +538,19 @@ object ZoneMaps {
     * live files and files whose stats predate the null-count column) are
     * scanned. The aggregate-pushdown-to-metadata idea: "how many events
     * in Q1" on a time-clustered store reads ~2 boundary files however
-    * large the interior is. Returns (count, (filesScanned, filesTotal)).
-    * Decision pass is ONE distributed job over the stats x live join;
-    * duplicate stats rows (heal racing an admit) are dropped before the
-    * sum — zone stats for a file are deterministic, so any copy is
-    * correct. */
+    * large the interior is. Returns (count, (filesScanned, filesTotal)). */
   def countRangeIndexed(spark: SparkSession, dataDir: String,
       statsDir: String, preds: Seq[(String, Column, Column)])
       : (Long, (Int, Int)) = {
-    import spark.implicits._
-    require(preds.nonEmpty, "at least one range conjunct")
-    val live = Store.liveFiles(dataDir).toSet
-    val pred = preds
-      .map { case (c, lo, hi) => col(c) >= lo && col(c) < hi }
-      .reduce(_ && _)
-    def scanCount(files: Seq[String]): Long =
-      if (files.isEmpty) 0L
-      else Store.readFiles(spark, files).filter(pred).count()
-    if (!Store.hasData(statsDir))
-      return (scanCount(live.toSeq.sorted), (live.size, live.size))
-    val intersects = preds
-      .map { case (c, lo, hi) =>
-        col(s"max_$c").isNull || (col(s"max_$c") >= lo && col(s"min_$c") < hi)
-      }
-      .reduce(_ && _)
-    val containedBounds = preds
-      .map { case (c, lo, hi) =>
-        col(s"min_$c").isNotNull && col(s"min_$c") >= lo &&
-          col(s"max_$c").isNotNull && col(s"max_$c") < hi
-      }
-      .reduce(_ && _)
-    val (contained, contribution) =
-      if (preds.size == 1) {
-        val c = preds.head._1
-        (containedBounds && col(s"nnull_$c").isNotNull,
-          col("n_rows") - col(s"nnull_$c"))
-      } else {
-        // null-SAFE: a stats row whose nnull_c is NULL (pre-nnull rows read
-        // through mergeSchema, or stats from the static build) must make
-        // `contained` FALSE, never NULL — a NULL contained fails BOTH the
-        // metadata branch and the `!contained` scan branch below, silently
-        // dropping the file from the count (the statsFor contract is
-        // "unknown null counts mean scan the file, never guess")
-        val nullFree = preds
-          .map { case (c, _, _) => coalesce(col(s"nnull_$c") === 0L, lit(false)) }
-          .reduce(_ && _)
-        (containedBounds && nullFree, col("n_rows").cast("long"))
-      }
-    // a file ALL of whose values are null in some tracked conjunct column
-    // (nnull == n_rows) provably matches no row: zero contribution, no
-    // scan — without this, an all-null slice has NULL min/max bounds and
-    // would be scanned forever by the conservative intersects test
-    val provablyEmpty = preds
-      .map { case (c, _, _) =>
-        col(s"nnull_$c").isNotNull && col(s"nnull_$c") === col("n_rows")
-      }
-      .reduce(_ || _)
-    val liveDf = live.toSeq.toDF("file")
-    val row = liveDf
-      .join(statsTable(spark, statsDir), Seq("file"), "left_outer")
-      .dropDuplicates("file")
-      .agg(
-        sum(when(contained && !provablyEmpty, contribution)).as("meta"),
-        collect_list(when(intersects && !contained && !provablyEmpty,
-          col("file"))).as("scan"))
-      .head()
-    val meta = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val scanFiles = row.getSeq[String](1).sorted
-    (meta + scanCount(scanFiles), (scanFiles.length, live.size))
+    val (df, files) = aggregateRangeIndexed(spark, dataDir, statsDir, preds) { _ =>
+      val (eligible, contribution) =
+        if (preds.size == 1) {
+          val c = preds.head._1
+          (col(s"nnull_$c").isNotNull, col("n_rows") - col(s"nnull_$c"))
+        } else (nullFree(preds), col("n_rows").cast("long"))
+      ZoneAgg(eligible, Seq(AggCol("n", countFold, contribution, lit(1L))))
+    }
+    (df.head().getLong(0), files)
   }
 
   /** MIN/MAX over a range conjunction, answered from METADATA wherever
@@ -549,82 +566,31 @@ object ZoneMaps {
     * still include that row's target value — so (unlike COUNT's
     * single-conjunct subtraction) the metadata fast path requires
     * null-free predicate columns in every case, and unknown null counts
-    * (mergeSchema NULLs) mean "scan the file, never guess"
-    * (null-safe via coalesce, the countRangeIndexed fix). NULL
+    * (mergeSchema NULLs) mean "scan the file, never guess". NULL
     * `min_t`/`max_t` (an all-null target slice) contribute nothing —
     * exactly MIN/MAX's null semantics.
     *
     * Returns a 1-row frame `(min_<target>, max_<target>)` (NULLs when no
-    * row matches) plus (filesScanned, filesTotal). The decision runs over
-    * the stats x live join (|files|-scale, touched twice: once to pick
-    * the scan set, once lazily inside the final combine); duplicate stats
-    * rows are dropped first (deterministic stats — any copy is correct). */
+    * row matches) plus (filesScanned, filesTotal). */
   def minMaxRangeIndexed(spark: SparkSession, dataDir: String,
       statsDir: String, preds: Seq[(String, Column, Column)],
       targetCol: String): (DataFrame, (Int, Int)) = {
-    import spark.implicits._
-    require(preds.nonEmpty, "at least one range conjunct")
-    val live = Store.liveFiles(dataDir).toSet
-    val pred = preds
-      .map { case (c, lo, hi) => col(c) >= lo && col(c) < hi }
-      .reduce(_ && _)
     val (minName, maxName) = (s"min_$targetCol", s"max_$targetCol")
-    def scanned(files: Seq[String]): DataFrame =
-      if (files.isEmpty)
-        Store.readBounded(spark, dataDir).filter(lit(false))
-          .agg(min(col(targetCol)).as(minName), max(col(targetCol)).as(maxName))
-      else Store.readFiles(spark, files).filter(pred)
-        .agg(min(col(targetCol)).as(minName), max(col(targetCol)).as(maxName))
-    if (!Store.hasData(statsDir))
-      return (scanned(live.toSeq.sorted).localCheckpoint(true),
-        (live.size, live.size))
-    val stats = statsTable(spark, statsDir)
-    require(stats.columns.contains(minName) && stats.columns.contains(maxName),
-      s"zone stats at $statsDir do not track '$targetCol' — " +
-        s"admit/heal with it in `cols` to serve MIN/MAX from metadata")
-    val intersects = preds
-      .map { case (c, lo, hi) =>
-        col(s"max_$c").isNull || (col(s"max_$c") >= lo && col(s"min_$c") < hi)
-      }
-      .reduce(_ && _)
-    val contained = preds
-      .map { case (c, lo, hi) =>
-        col(s"min_$c").isNotNull && col(s"min_$c") >= lo &&
-          col(s"max_$c").isNotNull && col(s"max_$c") < hi &&
-          coalesce(col(s"nnull_$c") === 0L, lit(false))
-      }
-      .reduce(_ && _) &&
+    aggregateRangeIndexed(spark, dataDir, statsDir, preds) { statsCols =>
+      require(statsCols.isEmpty || (statsCols(minName) && statsCols(maxName)),
+        s"zone stats at $statsDir do not track '$targetCol' — " +
+          s"admit/heal with it in `cols` to serve MIN/MAX from metadata")
       // target-tracking proof: a stats row admitted before `targetCol`
       // was in `cols` reads min_/max_/nnull_<target> as NULL through
       // mergeSchema — min/max would silently IGNORE its NULLs and drop
       // the file's rows from the answer. Require the row to prove it
       // tracked the target (nnull is written for every tracked column,
       // even an all-null slice, which then correctly contributes
-      // nothing); an untracked row falls through to the scan branch via
-      // `intersects && !contained`.
-      col(s"nnull_$targetCol").isNotNull
-    val provablyEmpty = preds
-      .map { case (c, _, _) =>
-        col(s"nnull_$c").isNotNull && col(s"nnull_$c") === col("n_rows")
-      }
-      .reduce(_ || _)
-    val liveDf = live.toSeq.toDF("file")
-    val joined = liveDf
-      .join(stats, Seq("file"), "left_outer")
-      .dropDuplicates("file")
-    val scanFiles = joined
-      .agg(collect_list(when(intersects && !contained && !provablyEmpty,
-        col("file"))))
-      .as[Seq[String]].head().sorted
-    // metadata candidates stay a LAZY 1-row frame so the final combine is
-    // type-generic (timestamps, decimals, strings all compose through the
-    // same min/max) — the stats table is |files|-scale, touched twice
-    val metaDf = joined
-      .agg(min(when(contained && !provablyEmpty, col(minName))).as(minName),
-        max(when(contained && !provablyEmpty, col(maxName))).as(maxName))
-    val out = metaDf.unionByName(scanned(scanFiles))
-      .agg(min(col(minName)).as(minName), max(col(maxName)).as(maxName))
-    (out.localCheckpoint(true), (scanFiles.length, live.size))
+      // nothing); an untracked row falls through to the scan branch.
+      ZoneAgg(nullFree(preds) && col(s"nnull_$targetCol").isNotNull, Seq(
+        AggCol(minName, min(_), col(minName), col(targetCol)),
+        AggCol(maxName, max(_), col(maxName), col(targetCol))))
+    }
   }
 
   /** SUM + COUNT pushdown to zone metadata — the additive sibling of
@@ -633,9 +599,9 @@ object ZoneMaps {
     * range conjunct (null-free on the predicate columns) contributes its
     * stored per-file `sum_<target>` and non-null count (`n_rows -
     * nnull_<target>`) WITHOUT being read; only boundary-straddling,
-    * uncovered, and pre-sum-upgrade files are scanned. Returns a lazy
-    * 1-row frame `(sum_<target>, cnt_<target>)` — AVG composes as
-    * sum/cnt — plus (filesScanned, filesTotal).
+    * uncovered, and pre-sum-upgrade files are scanned. Returns a 1-row
+    * frame `(sum_<target>, cnt_<target>)` — AVG composes as sum/cnt —
+    * plus (filesScanned, filesTotal).
     *
     * Metadata eligibility must be PROVEN per row, never guessed: the row
     * carries a non-NULL `sum_<target>`, or it is tracked-and-all-null
@@ -651,72 +617,19 @@ object ZoneMaps {
   def sumRangeIndexed(spark: SparkSession, dataDir: String,
       statsDir: String, preds: Seq[(String, Column, Column)],
       targetCol: String): (DataFrame, (Int, Int)) = {
-    import spark.implicits._
-    require(preds.nonEmpty, "at least one range conjunct")
-    val live = Store.liveFiles(dataDir).toSet
-    val pred = preds
-      .map { case (c, lo, hi) => col(c) >= lo && col(c) < hi }
-      .reduce(_ && _)
     val (sumName, cntName) = (s"sum_$targetCol", s"cnt_$targetCol")
-    def scanned(files: Seq[String]): DataFrame =
-      if (files.isEmpty)
-        Store.readBounded(spark, dataDir).filter(lit(false))
-          .agg(sum(col(targetCol)).as(sumName),
-            count(col(targetCol)).as(cntName))
-      else Store.readFiles(spark, files).filter(pred)
-        .agg(sum(col(targetCol)).as(sumName),
-          count(col(targetCol)).as(cntName))
-    if (!Store.hasData(statsDir))
-      return (scanned(live.toSeq.sorted).localCheckpoint(true),
-        (live.size, live.size))
-    val stats = statsTable(spark, statsDir)
-    // a stats column absent from the MERGED schema reads as literal NULL:
-    // every eligibility test below is NULL-false, so an untracked target
-    // degrades to scanning (still range-pruned), never to a wrong sum
-    def sc(n: String): Column =
-      if (stats.columns.contains(n)) col(n) else lit(null)
-    val intersects = preds
-      .map { case (c, lo, hi) =>
-        col(s"max_$c").isNull || (col(s"max_$c") >= lo && col(s"min_$c") < hi)
-      }
-      .reduce(_ && _)
-    val sumProof =
-      sc(sumName).isNotNull ||
+    aggregateRangeIndexed(spark, dataDir, statsDir, preds) { statsCols =>
+      // a stats column absent from the MERGED schema reads as literal NULL:
+      // every eligibility test is then NULL-false, so an untracked target
+      // degrades to scanning (still range-pruned), never to a wrong sum
+      def sc(n: String): Column = if (statsCols(n)) col(n) else lit(null)
+      val sumProof = sc(sumName).isNotNull ||
         coalesce(sc(s"nnull_$targetCol") === col("n_rows"), lit(false))
-    val contained = preds
-      .map { case (c, lo, hi) =>
-        col(s"min_$c").isNotNull && col(s"min_$c") >= lo &&
-          col(s"max_$c").isNotNull && col(s"max_$c") < hi &&
-          coalesce(col(s"nnull_$c") === 0L, lit(false))
-      }
-      .reduce(_ && _) && sumProof
-    val provablyEmpty = preds
-      .map { case (c, _, _) =>
-        col(s"nnull_$c").isNotNull && col(s"nnull_$c") === col("n_rows")
-      }
-      .reduce(_ || _)
-    val liveDf = live.toSeq.toDF("file")
-    val joined = liveDf
-      .join(stats, Seq("file"), "left_outer")
-      .dropDuplicates("file")
-    val scanFiles = joined
-      .agg(collect_list(when(intersects && !contained && !provablyEmpty,
-        col("file"))))
-      .as[Seq[String]].head().sorted
-    // the scan leg's sum type anchors the result type: an untracked
-    // target's metadata leg sums a literal NULL (NullType -> double) and
-    // would otherwise coerce the whole union away from the data's type
-    val scanDf = scanned(scanFiles)
-    val sumType = scanDf.schema(sumName).dataType
-    val metaDf = joined
-      .agg(sum(when(contained && !provablyEmpty, sc(sumName)))
-          .cast(sumType).as(sumName),
-        sum(when(contained && !provablyEmpty,
-          col("n_rows") - sc(s"nnull_$targetCol"))).cast("long").as(cntName))
-    val out = metaDf.unionByName(scanDf)
-      .agg(sum(col(sumName)).cast(sumType).as(sumName),
-        coalesce(sum(col(cntName)), lit(0L)).as(cntName))
-    (out.localCheckpoint(true), (scanFiles.length, live.size))
+      ZoneAgg(nullFree(preds) && sumProof, Seq(
+        AggCol(sumName, sum(_), sc(sumName), col(targetCol)),
+        AggCol(cntName, countFold, col("n_rows") - sc(s"nnull_$targetCol"),
+          col(targetCol).isNotNull.cast("long"))))
+    }
   }
 
   /** Streaming face: the SAME admission as [[admitIndexed]], as a
@@ -794,6 +707,6 @@ object ZoneMaps {
           stats.join(broadcast(liveNow), Seq("file"), "left_semi")
         }): Unit
     }
-    invalidateStatsCache(statsDir)
+    statsCache.invalidate(statsDir)
   }
 }

@@ -60,7 +60,7 @@ class PrepOpsSpec extends AnyFunSuite {
     // the r14 window-rank formulation (bounded memory: sort spills, no
     // per-group value multiset) must reproduce Percentile.getPercentile
     // bit for bit — on the fixture decade AND on synthetic frames covering
-    // ties, fractional interpolation, single-row groups and nulls
+    // ties, fractional interpolation, single-row groups, nulls and a NULL key
     def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
     val li = Tables.lineitem(spark, sf)
     val want = li.groupBy($"l_returnflag")
@@ -81,7 +81,9 @@ class PrepOpsSpec extends AnyFunSuite {
         else if (i % 3 == 0) Some((i % 13).toDouble) // heavy ties
         else Some(rnd.nextDouble() * 1000.0)
       (g, v)
-    } ++ Seq(("solo", Some(42.5)), ("allnull", Option.empty[Double]))
+    } ++ Seq(("solo", Some(42.5)), ("allnull", Option.empty[Double])) ++
+      // the NULL-key group: percentile() returns a row for it too
+      (0 until 41).map(i => (null: String, Option((i % 9) * 1.25)))
     val df = rows.toDF("k", "v")
     Seq(0.5, 0.99, 0.9137).foreach { p =>
       val w = df.groupBy($"k").agg(expr(s"percentile(v, $p)").as("pct"))

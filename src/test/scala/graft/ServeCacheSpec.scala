@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{BloomIndex, Store}
+import graft.sources.{BloomIndex, ServeCache, Store, ZoneMaps}
 
 /** The serve-path stats cache (round-12 verdict #5): point lookups against
   * a warm bloom-indexed store must not pay a Spark job for the stats
@@ -21,7 +21,7 @@ import graft.sources.{BloomIndex, Store}
   *    exactly one refresh, then probes are in-process again;
   *  - admissions in this JVM invalidate proactively;
   *  - an over-budget store falls back to the distributed pass with
-  *    identical results.
+  *    identical results — on the bloom face and on every zone face.
   */
 class ServeCacheSpec extends AnyFunSuite {
   import TestSpark._
@@ -148,14 +148,39 @@ class ServeCacheSpec extends AnyFunSuite {
         assert(BloomIndex.admitIndexed(batch(g, 500), dataDir, statsDir,
           "k", s"b$g"))
       }
-      val wasBudget = BloomIndex.serveCacheMaxBytes
+      // the zone faces share the one budget: answers and (scanned, total)
+      // read from parquet must equal those served from the warm cache
+      val (zData, zStats) = (s"$base/zdata", s"$base/zstats")
+      val rows = spark.range(0, 10000)
+        .select($"id", pmod($"id", lit(1000)).as("v"))
+      ZoneMaps.admitIndexed(
+        rows.repartitionByRange(8, $"v").sortWithinPartitions($"v"),
+        zData, zStats, Seq("v", "id"), "z0"): Unit
+      val preds = Seq(("v", lit(100L), lit(900L)))
+      def zoneAnswers() = {
+        val (n, nFiles) = ZoneMaps.countRangeIndexed(spark, zData, zStats, preds)
+        val (mm, mmFiles) = ZoneMaps.minMaxRangeIndexed(spark, zData, zStats,
+          preds, "id")
+        val (sm, smFiles) = ZoneMaps.sumRangeIndexed(spark, zData, zStats,
+          preds, "id")
+        val (lk, lkFiles) = ZoneMaps.lookupRangeIndexed(spark, zData, zStats,
+          preds)
+        Seq(n -> nFiles, mm.head().toSeq -> mmFiles,
+          sm.head().toSeq -> smFiles, lk.count() -> lkFiles)
+      }
+      zoneAnswers() // warm
+      val warm = zoneAnswers()
+      val (_, (zScanned, zTotal)) = warm.head
+      assert(zScanned >= 1 && zScanned < zTotal, s"boundary files only: $warm")
+      val wasBudget = ServeCache.maxBytes
       try {
-        BloomIndex.serveCacheMaxBytes = 0L
+        ServeCache.maxBytes = 0L
         val (r, (read, total), execs) = probe(dataDir, statsDir, 200013L)
         assert(r == Seq("g2-13") && total == 3 && read <= 2)
         assert(execs == 2,
           s"over budget must run the distributed stats pass: $execs")
-      } finally BloomIndex.serveCacheMaxBytes = wasBudget
+        assert(zoneAnswers() == warm, "over-budget zone faces diverged")
+      } finally ServeCache.maxBytes = wasBudget
       // budget restored: serving resumes
       probe(dataDir, statsDir, 13L) // warm
       val (_, _, execs2) = probe(dataDir, statsDir, 14L)
