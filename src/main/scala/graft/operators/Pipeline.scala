@@ -55,7 +55,14 @@ final class Pipeline[T](val ds: Dataset[T]) extends Serializable {
   /** Tree-reduce all partitions to ONE via repeated containerized combining.
     * `depth >= 2`; higher depth = more, smaller merge rounds (bounds the data
     * any single command invocation sees — the reference's n^(1/depth)
-    * schedule, MaRe.scala:132-141). */
+    * schedule, MaRe.scala:132-141, planned by [[Pipeline.treeWidths]]).
+    *
+    * Each stage of the tree runs once. The partition count is read once, from
+    * the pre-combined RDD, and every later width comes from the schedule:
+    * no round's Dataset is probed (see [[getNumPartitions]]). Under AQE,
+    * taking that RDD runs any shuffle upstream of the input; the rounds are
+    * built on the same RDD, so the action reads that shuffle's output back
+    * instead of running it again. */
   def treeReduce(
       in: MountPoint[T],
       out: MountPoint[T],
@@ -64,29 +71,11 @@ final class Pipeline[T](val ds: Dataset[T]) extends Serializable {
       runner: CommandRunner = SubprocessRunner)(implicit enc: Encoder[T]): Pipeline[T] = {
     require(depth >= 2, s"depth must be >= 2, got $depth")
     // partition-local pre-combine (map-side combine)
-    val combined = mapPartitionsThrough(in, out, command, runner)
-    treeRounds(combined, in, out, command, depth, runner)
-  }
-
-  @annotation.tailrec
-  private def treeRounds(
-      p: Pipeline[T],
-      in: MountPoint[T],
-      out: MountPoint[T],
-      command: String,
-      depth: Int,
-      runner: CommandRunner)(implicit enc: Encoder[T]): Pipeline[T] = {
-    val n = p.getNumPartitions
-    if (n <= 1) p
-    else {
-      val scale =
-        if (depth > 2) math.max(math.ceil(math.pow(n, 1.0 / depth)).toInt, 2)
-        else n // final round: collapse to one partition
-      val target = math.max(n / scale, 1)
-      val merged = p.repartition(target)
-        .mapPartitionsThrough(in, out, command, runner)
-      treeRounds(merged, in, out, command, math.max(depth - 1, 2), runner)
-    }
+    val combined = mapPartitionsThrough(in, out, command, runner).ds.rdd
+    Pipeline.treeWidths(combined.getNumPartitions, depth)
+      .foldLeft(new Pipeline(spark.createDataset(combined))) { (p, width) =>
+        p.repartition(width).mapPartitionsThrough(in, out, command, runner)
+      }
   }
 
   /** Hash-repartition by a key expression (records keep their values; only
@@ -113,6 +102,10 @@ final class Pipeline[T](val ds: Dataset[T]) extends Serializable {
 
   def cache(): Pipeline[T] = new Pipeline(ds.cache())
 
+  /** Partition count of the planned RDD. Under AQE `ds.rdd` runs every
+    * shuffle stage of the plan before it returns, so on a Dataset with an
+    * exchange this is a job per stage, repeated by the action that follows;
+    * it is free only on plans without one. */
   def getNumPartitions: Int = ds.rdd.getNumPartitions
 
   /** Stream every partition through the driver (one at a time — bounded
@@ -158,6 +151,25 @@ final class Pipeline[T](val ds: Dataset[T]) extends Serializable {
 object Pipeline {
 
   def apply[T](ds: Dataset[T]): Pipeline[T] = new Pipeline(ds)
+
+  /** Partition count after each merge round of a [[Pipeline.treeReduce]] over
+    * `n` pre-combined partitions — the reference schedule (MaRe.scala:132-149):
+    * while `depth > 2`, shrink by `scale = max(ceil(n^(1/depth)), 2)` and
+    * recurse with `depth - 1`; at depth 2, collapse to one. Empty for `n <= 1`.
+    * A round's `repartition(width)` is a REPARTITION_BY_NUM shuffle, which
+    * AQE never coalesces, so each round's output has exactly `width`
+    * partitions and the whole schedule follows from `n`. */
+  def treeWidths(n: Int, depth: Int): Seq[Int] = {
+    require(depth >= 2, s"depth must be >= 2, got $depth")
+    if (n <= 1) Nil
+    else {
+      val scale =
+        if (depth > 2) math.max(math.ceil(math.pow(n, 1.0 / depth)).toInt, 2)
+        else n // final round: collapse to one partition
+      val width = math.max(n / scale, 1)
+      width +: treeWidths(width, math.max(depth - 1, 2))
+    }
+  }
 
   /** Text source with a custom record delimiter (a record may span lines —
     * the reference's SDF molecules use "\n$$$$\n"). `lineSep` pushes the

@@ -31,7 +31,9 @@ object FanOut {
     * Without keys, round-robin. */
   def apply(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    // planned physical partitions of the scan (no job is run by .rdd)
+    // planned physical partitions of the scan. No job is run by .rdd only
+    // because every caller passes a plan without an exchange: under AQE,
+    // .rdd on a plan with one runs each of its shuffle stages first
     if (df.rdd.getNumPartitions >= target) df
     else if (keys.nonEmpty) df.repartition(target, keys: _*)
     else df.repartition(target)
