@@ -55,6 +55,29 @@ object ZoneScan {
       () => org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(all))
   }
 
+  /** Name prefix of [[admitPool]]'s threads. */
+  private[graft] val AdmitThreadPrefix = "graft-admit-"
+
+  /** The pool [[bothAdmits]] runs its halves on: a fixed number of named
+    * daemon threads (`graft-admit-<n>`), so concurrent callers queue
+    * instead of sharing the global fork-join pool with unrelated work, a
+    * JVM never waits on an admit thread to exit, and idle threads retire
+    * after 30 s. Four threads let two callers overlap their halves. A
+    * half must not call [[bothAdmits]] itself: it would wait on threads
+    * its own caller may hold. */
+  private lazy val admitPool: scala.concurrent.ExecutionContext = {
+    import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val pool = new ThreadPoolExecutor(4, 4, 30L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, s"$AdmitThreadPrefix${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    scala.concurrent.ExecutionContext.fromExecutorService(pool)
+  }
+
   /** Run two INDEPENDENT admissions concurrently (r14, guide §2.6 —
     * overlap independent jobs): actions are only sequential because the
     * driver calls them sequentially, and the Store protocol supports
@@ -71,12 +94,12 @@ object ZoneScan {
     * that is still writing. The first failure surfaces, with the second
     * attached as suppressed. There is deliberately no timeout — a wait
     * that gave up would return while the sibling still writes, the same
-    * race again. */
+    * race again. The halves run on [[admitPool]]. */
   private[graft] def bothAdmits[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.util.{Failure, Success}
-    implicit val ec: ExecutionContext = ExecutionContext.global
+    implicit val ec: scala.concurrent.ExecutionContext = admitPool
     val fa = Future(a)
     val fb = Future(b)
     (Await.ready(fa, Duration.Inf).value.get,

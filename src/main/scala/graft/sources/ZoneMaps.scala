@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-level zone maps — data skipping for plain parquet directories.
@@ -342,14 +342,16 @@ object ZoneMaps {
   //
   // The [[ServeCache]] protocol with zone stats rows (~100 B of PLAIN
   // VALUES per file — no filters to deserialize) as the cached value: the
-  // COLLECTED ROWS are served back as a LOCAL DataFrame. Every decision
-  // predicate (intersects/contained/provablyEmpty, with their type-aware
-  // comparisons over timestamps/decimals/strings) then runs through the
-  // SAME Column expressions as the uncached path — Catalyst folds
-  // Project/Filter over a LocalRelation at optimization time — instead of
-  // a re-implemented driver-side comparison that could silently diverge.
-  // What the cache removes is the per-query parquet read of the stats
-  // store, not the semantics.
+  // COLLECTED ROWS are served back as a LOCAL DataFrame. Every decision is
+  // ONE projection of that frame ([[decide]]): the predicates
+  // (intersects/contained/provablyEmpty, with their type-aware comparisons
+  // over timestamps/decimals/strings) run as the SAME Column expressions
+  // on both paths, never as a re-implemented driver-side comparison that
+  // could silently diverge. Over the cached rows Catalyst folds the
+  // Project into the LocalRelation at optimization time, so the decision
+  // runs no Spark job; over budget the same projection is one bounded scan
+  // of the stats parquet. What the cache removes is that scan, not the
+  // semantics.
 
   private val statsCache = new ServeCache[(org.apache.spark.sql.types.StructType,
     java.util.List[org.apache.spark.sql.Row])]
@@ -366,6 +368,26 @@ object ZoneMaps {
       (df.schema, java.util.Arrays.asList(df.collect(): _*))
     }.map { case (schema, rows) => spark.createDataFrame(rows, schema) }
       .getOrElse(read())
+  }
+
+  /** The per-file decision: the boolean `flags` (a NULL flag reads as
+    * false, as in a Spark filter), then the `meta` values, projected from
+    * every stats row and collected — 0 jobs over the cached rows, one
+    * bounded stats scan over budget. The live-file rules then apply in
+    * plain Scala, on file names only: rows for files no longer live
+    * (stale) are dropped, and one row per file is kept (a heal racing an
+    * admit may write a duplicate; zone stats are deterministic, so any
+    * copy is correct). Returns each LIVE covered file's `flags ++ meta`
+    * row and that row's schema; a live file absent from the map is
+    * uncovered (crash window, compaction rename) and must be read. */
+  private def decide(stats: DataFrame, live: Set[String], flags: Seq[Column],
+      meta: Seq[Column] = Nil)
+      : (Map[String, Row], org.apache.spark.sql.types.StructType) = {
+    val projected = stats.select(
+      (col("file") +: flags.map(coalesce(_, lit(false)))) ++ meta: _*)
+    (projected.collect().iterator.filter(r => live(r.getString(0)))
+      .map(r => r.getString(0) -> Row.fromSeq(r.toSeq.tail)).toMap,
+      org.apache.spark.sql.types.StructType(projected.schema.tail))
   }
 
   /** Admit `df` into the data Store AND its per-file ranges into the
@@ -415,30 +437,26 @@ object ZoneMaps {
     admitted
   }
 
-  /** Range scan over a zone-mapped Store. Decision per LIVE data file,
-    * DISTRIBUTED-side: covered by stats → its ranges decide (NULL bounds
-    * keep — an all-null slice may only be pruned by a provable
-    * non-match); uncovered (left-join miss: crash window, compaction
-    * rename) → read unconditionally, which the same NULL-keeps predicate
-    * expresses for free. Stale stats rows for dead files fall out of the
-    * join. Only the files-to-READ come back to the driver. Returns the
-    * filtered frame plus (filesRead, filesTotal). */
+  /** Range scan over a zone-mapped Store. Decision per LIVE data file, by
+    * ONE projection of the stats rows ([[decide]]: no Spark job when the
+    * stats are cached, one bounded stats scan over budget): covered by
+    * stats → its ranges decide (NULL bounds keep — an all-null slice may
+    * only be pruned by a provable non-match); uncovered (crash window,
+    * compaction rename) → read unconditionally; stale rows for dead files
+    * are ignored. The call itself runs no job when the stats are cached;
+    * the returned frame's action reads the files. Returns the filtered
+    * frame plus (filesRead, filesTotal). */
   def lookupRangeIndexed(spark: SparkSession, dataDir: String,
       statsDir: String, preds: Seq[(String, Column, Column)])
       : (DataFrame, (Int, Int)) = {
-    import spark.implicits._
     require(preds.nonEmpty, "at least one range conjunct")
     // driver-side listing (no schema-merge job per probe — the
     // BloomIndex.lookupIndexedMulti rationale)
     val live = Store.liveFiles(dataDir).toSet
-    val files: Seq[String] =
-      if (!Store.hasData(statsDir)) live.toSeq.sorted
-      else
-        live.toSeq.toDF("file")
-          .join(statsTable(spark, statsDir), Seq("file"), "left_outer")
-          .filter(intersects(preds))
-          .select(col("file")).distinct()
-          .as[String].collect().toSeq.sorted
+    val rows =
+      if (!Store.hasData(statsDir)) Map.empty[String, Row]
+      else decide(statsTable(spark, statsDir), live, Seq(intersects(preds)))._1
+    val files = live.toSeq.sorted.filter(f => rows.get(f).forall(_.getBoolean(0)))
     val df =
       if (files.isEmpty) Store.readBounded(spark, dataDir).filter(lit(false))
       else Store.readFiles(spark, files).filter(rowPred(preds))
@@ -467,45 +485,39 @@ object ZoneMaps {
     * provably empty file is neither served nor read; every other
     * intersecting file — boundary-straddling, uncovered (crash window,
     * compaction rename), or with stats too old to prove eligibility — is
-    * scanned with the residual predicate. Stale stats rows for dead files
-    * fall out of the live join; duplicate rows (heal racing an admit) are
-    * dropped first — zone stats for a file are deterministic, so any copy
-    * is correct.
+    * scanned with the residual predicate. Stale and duplicate stats rows
+    * are handled by [[decide]].
     *
-    * Cost: ONE decision aggregate over the live x stats join returns the
-    * metadata partials and the boundary-file list together, ONE aggregate
-    * scans the boundary files, and the two legs merge through a local
-    * relation. The scan leg's result types anchor the answer, so it stays
-    * generic over timestamps, decimals and strings, and a metadata leg
-    * summing a literal NULL (an untracked target) cannot coerce it away
-    * from the data's type. `agg` receives the stats table's columns
-    * (empty when the store has no stats yet: every file is scanned).
-    * Returns the answer as a 1-row local frame plus (filesScanned,
-    * filesTotal). */
+    * Cost: ONE projection of the stats rows ([[decide]]: no Spark job when
+    * the stats are cached, one bounded stats scan over budget) returns
+    * each served file's metadata values and the boundary-file list; then
+    * ONE aggregate folds those values, as a local relation, together with
+    * the scan of the boundary files. The scan leg's result types anchor
+    * the answer, so it stays generic over timestamps, decimals and
+    * strings, and a metadata value of a literal NULL (an untracked target)
+    * cannot coerce it away from the data's type. `agg` receives the stats
+    * table's columns (empty when the store has no stats yet: every file
+    * is scanned). Returns the answer as a 1-row local frame plus
+    * (filesScanned, filesTotal). */
   private def aggregateRangeIndexed(spark: SparkSession, dataDir: String,
       statsDir: String, preds: Seq[(String, Column, Column)])(
       agg: Set[String] => ZoneAgg): (DataFrame, (Int, Int)) = {
-    import spark.implicits._
     require(preds.nonEmpty, "at least one range conjunct")
     val live = Store.liveFiles(dataDir).toSet
     val stats =
       if (Store.hasData(statsDir)) Some(statsTable(spark, statsDir)) else None
     val ZoneAgg(eligible, cols) = agg(stats.fold(Set.empty[String])(_.columns.toSet))
-    val (meta, scanFiles) = stats match {
-      case None => (None, live.toSeq.sorted)
-      case Some(st) =>
-        val (fits, empty) = (contained(preds) && eligible, provablyEmpty(preds))
-        val (served, scan) = (fits && !empty, intersects(preds) && !fits && !empty)
-        val decision = live.toSeq.toDF("file")
-          .join(st, Seq("file"), "left_outer")
-          .dropDuplicates("file")
-          .select(cols.map(c => c.fold(when(served, c.meta)).as(c.name)) :+
-            collect_list(when(scan, col("file"))).as("scan"): _*)
-        val row = decision.head()
-        val partials = spark.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row.fromSeq(row.toSeq.init)),
-          org.apache.spark.sql.types.StructType(decision.schema.init))
-        (Some(partials), row.getSeq[String](cols.size).sorted)
+    val (fits, empty) = (contained(preds) && eligible, provablyEmpty(preds))
+    // per covered file: (served, scan, meta values...)
+    val decided = stats.map(decide(_, live,
+      Seq(fits && !empty, intersects(preds) && !fits && !empty),
+      cols.map(c => c.meta.as(c.name))))
+    val rows = decided.fold(Map.empty[String, Row])(_._1)
+    val scanFiles = live.toSeq.sorted.filter(f => rows.get(f).forall(_.getBoolean(1)))
+    val meta = decided.map { case (_, schema) =>
+      spark.createDataFrame(rows.values.filter(_.getBoolean(0))
+        .map(r => Row.fromSeq(r.toSeq.drop(2))).toSeq.asJava,
+        org.apache.spark.sql.types.StructType(schema.drop(2)))
     }
     val scanned =
       (if (scanFiles.nonEmpty) Store.readFiles(spark, scanFiles).filter(rowPred(preds))
@@ -694,8 +706,8 @@ object ZoneMaps {
         statsDir)
     // rewrite only when there is something to clean (stale rows for dead
     // files, or enough heal deltas accreted) — the BloomIndex.maintainIndex
-    // rationale; stale rows are dropped by the per-lookup live join either
-    // way, so a skipped hygiene pass is result-invisible
+    // rationale; every serve drops stale rows by file name either way
+    // ([[decide]]), so a skipped hygiene pass is result-invisible
     val dead = covered -- live
     if (Store.hasData(statsDir) &&
         (dead.nonEmpty || Store.deltaCount(statsDir) >= 8)) {

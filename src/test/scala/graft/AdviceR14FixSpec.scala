@@ -4,6 +4,8 @@ import java.io.File
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +21,8 @@ import graft.sources.{BloomIndex, ProtocolPoints, Store}
   *     behind and a later publish succeeds.
   *  2. `ZoneScan.bothAdmits` rethrew the first half's failure while the
   *     second half could still be writing, so the caller's `finally`
-  *     deleted the temp store under it. Both halves are now awaited first.
+  *     deleted the temp store under it. Both halves are now awaited first,
+  *     on the dedicated admit pool.
   */
 class AdviceR14FixSpec extends AnyFunSuite {
   import TestSpark._
@@ -70,6 +73,7 @@ class AdviceR14FixSpec extends AnyFunSuite {
       val fired = new AtomicBoolean(false)
       val failing = new CountDownLatch(1)
       val siblingDone = new AtomicBoolean(false)
+      val ranOn = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       // futures run on pool threads, so the hook is process-wide; it fires
       // once, in the first half — the second waits until that has thrown
       ProtocolPoints.installGlobal { p =>
@@ -82,8 +86,12 @@ class AdviceR14FixSpec extends AnyFunSuite {
       val caught =
         try intercept[RuntimeException] {
           ZoneScan.bothAdmits(
-            Store.appendIdempotent(rows, s"$base/a", "a"),
             {
+              ranOn.add(Thread.currentThread.getName)
+              Store.appendIdempotent(rows, s"$base/a", "a")
+            },
+            {
+              ranOn.add(Thread.currentThread.getName)
               assert(failing.await(60, TimeUnit.SECONDS))
               Thread.sleep(500) // an early rethrow would reach the caller first
               val ok = Store.appendIdempotent(rows, s"$base/b", "b")
@@ -94,6 +102,10 @@ class AdviceR14FixSpec extends AnyFunSuite {
       assert(caught eq injected)
       assert(siblingDone.get, "the exception reached the caller while the sibling still ran")
       assert(Store.read(spark, s"$base/b").count() == 1000)
+      // both halves ran on the dedicated admit pool, not the caller's thread
+      // or the global fork-join pool
+      assert(ranOn.size == 2 &&
+        ranOn.asScala.forall(_.startsWith(ZoneScan.AdmitThreadPrefix)), ranOn)
       // both halves failing: the first surfaces, the second suppressed on it
       val (e1, e2) = (new RuntimeException("a"), new RuntimeException("b"))
       val both = intercept[RuntimeException](
