@@ -2,20 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Diagnostic main (optimization rounds): print `.explain("formatted")` for
-  * named queries, for the committed plans/rNN before/after artifacts.
-  * Usage: PlanDump <sfDir> <outDir> <suffix> <query>[,query...] [distributed]
-  * The optional `distributed` flag zeroes the bounded-driver-object caps
-  * (BPE vocabulary, CC rows, PageRank edges) so the pre-r13 distributed
-  * loop plans can be regenerated from HEAD for the before/after files. */
+/** Plan-audit main: writes `.explain("formatted")` of each named query, as
+  * planned by the engine's own session (`graft.GraftExtensions`, AQE), to
+  * `<outDir>/<query>_<suffix>.txt` — the committed plans/rNN before/after
+  * artifacts. Usage: PlanDump <sfDir> <outDir> <suffix> <query>[,query...]
+  * Things to look for: PushedFilters + narrow ReadSchema on scans,
+  * BroadcastHashJoin for dims, no back-to-back Exchange nodes,
+  * WholeStageCodegen spans covering the hot path. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    if (args.length > 4 && args(4) == "distributed") {
-      graft.queries.BpeVocab.driverBpeMaxWords = 0
-      graft.queries.Dedup.driverCcMaxRows = 0
-      graft.queries.GraphQueries.driverIterMaxEdges = 0
-    }
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .appName("graft-plandump")

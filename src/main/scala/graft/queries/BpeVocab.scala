@@ -96,13 +96,10 @@ object BpeVocab {
     * weighting, same (count desc, l, r) tie-break in UTF-8 binary order,
     * same left-to-right non-overlapping rewrite) runs in-process —
     * nMerges scheduler round-trips become zero. Over the cap the
-    * distributed loop below is unchanged. Mutable for the equality spec;
-    * env-tunable (`GRAFT_DRIVER_BPE_MAX_WORDS`) so a deployment can size
-    * it to its driver — one knob style across the driver-loop caps (r14). */
-  private[graft] var driverBpeMaxWords: Int =
-    sys.env.get("GRAFT_DRIVER_BPE_MAX_WORDS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(1 << 17)
+    * distributed loop below is unchanged. The gate observes only the
+    * distinct-word count, which rides the word-table checkpoint the
+    * distributed loop's first round needs anyway. */
+  private val BpeDriverMaxWords: Int = 1 << 17
 
   /** Spark's string ordering is UTF8String binary order — unsigned
     * byte-wise on the UTF-8 encoding — which differs from Java's
@@ -188,8 +185,11 @@ object BpeVocab {
 
   /** Runs the merge loop; returns (merge table, final word→symbols table).
     * The word table keeps the raw word `w` through every rewrite, so after
-    * training it doubles as the encode dictionary (see `encodeOnDocs`). */
-  private def trainCore(docs: DataFrame, nMerges: Int): (DataFrame, DataFrame) = {
+    * training it doubles as the encode dictionary (see `encodeOnDocs`).
+    * Word tables of at most `driverMaxWords` rows run the loop on the
+    * driver (see [[BpeDriverMaxWords]]). */
+  private[graft] def trainCore(docs: DataFrame, nMerges: Int,
+      driverMaxWords: Int = BpeDriverMaxWords): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -217,7 +217,7 @@ object BpeVocab {
     val obs = org.apache.spark.sql.Observation()
     var table = words.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
     val nWords = obs.get("n").asInstanceOf[Long]
-    if (nWords <= driverBpeMaxWords) {
+    if (nWords <= driverMaxWords) {
       val ws = table.as[(String, Seq[String], Long)].collect()
       org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(table)
       return trainDriver(spark, ws, nMerges)
@@ -294,10 +294,13 @@ object BpeVocab {
   def encode(spark: SparkSession, dir: String, nMerges: Int): DataFrame =
     encodeOnDocs(Tables.documents(spark, dir), nMerges)
 
-  def encodeOnDocs(docs: DataFrame, nMerges: Int): DataFrame = {
+  def encodeOnDocs(docs: DataFrame, nMerges: Int): DataFrame =
+    encodeWith(docs, trainCore(docs, nMerges)._2)
+
+  /** Per-document token counts of `docs` against a trained word table. */
+  private[graft] def encodeWith(docs: DataFrame, dict: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (_, dict) = trainCore(docs, nMerges)
     val occurrences = docs
       .select($"doc_id", explode(split(lower($"text"), "\\s+")).as("w"))
       .filter(length($"w") > 0)

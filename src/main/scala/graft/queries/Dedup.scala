@@ -740,7 +740,8 @@ object Dedup {
     * (id, label) assignment so downstream operators ([[dedupCanonical]]) can
     * consume cluster membership without re-deriving it. */
   private[graft] def ccLabels(spark: SparkSession, dir: String,
-      reliableCheckpoint: Boolean): DataFrame = {
+      reliableCheckpoint: Boolean, driverMaxRows: Int = CcDriverMaxRows)
+      : DataFrame = {
     import spark.implicits._
     if (reliableCheckpoint)
       require(spark.sparkContext.getCheckpointDir.isDefined,
@@ -752,19 +753,9 @@ object Dedup {
       minhashVerifiedPairs(shingledDocs(spark, dir),
         nBands = MinhashBands, rowsPerBand = MinhashRowsPerBand,
         t = MinhashThreshold).select($"doc_a", $"doc_b"),
-      cut)
+      cut, driverMaxRows)
   }
 
-  /** Generic distributed connected components: min-label propagation over
-    * undirected `pairs` (doc_a, doc_b) starting from `vertices` (id,
-    * label = id), returning the fixpoint (id, label) assignment. Labels only
-    * decrease, so the label-sum is a strictly-monotone convergence measure
-    * (one agg per round instead of a change-detecting join); the checksum
-    * rides the eager checkpoint job as an observed metric — exactly ONE
-    * driver action per round (plus the checkpoint write job in reliable
-    * mode), not a checkpoint job plus a separate agg job. `cut` truncates
-    * each round's lineage (localCheckpoint for bench; `Dataset.checkpoint`
-    * for cluster fault tolerance). */
   /** Count of full CC-loop executions in this JVM — lets the shared-labels
     * spec pin "one computation served N consumers" without listener
     * machinery. Driver-side, incremented once per loop, zero hot-path cost.
@@ -791,13 +782,10 @@ object Dedup {
     * collect is |V|+|E|-scale under an explicit cap — the IVF-codebook
     * bounded-driver-object discipline — and any input over the cap (or
     * non-Long-keyed) takes the distributed loop below, unchanged.
-    * Mutable for the spec that pins driver/distributed equality;
-    * env-tunable (`GRAFT_DRIVER_CC_MAX_ROWS`) so a deployment can size it
-    * to its driver — one knob style across the driver-loop caps (r14). */
-  private[graft] var driverCcMaxRows: Int =
-    sys.env.get("GRAFT_DRIVER_CC_MAX_ROWS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(1 << 17)
+    * The gate observes only the input's size: the vertex count rides the
+    * loop's own `cc_init` checkpoint and the edge count a `limit(cap + 1)`
+    * probe, and the driver path runs when both are within the cap. */
+  private val CcDriverMaxRows: Int = 1 << 17
 
   /** The driver-side CC fixpoint over the collected bounded graph (the
     * caller gates on size and key type). Replicates the distributed
@@ -856,8 +844,21 @@ object Dedup {
     labels.toArray.sortBy(_._1)
   }
 
+  /** Generic distributed connected components: min-label propagation over
+    * undirected `pairs` (doc_a, doc_b) starting from `vertices` (id,
+    * label = id), returning the fixpoint (id, label) assignment. Labels only
+    * decrease, so the label-sum is a strictly-monotone convergence measure
+    * (one agg per round instead of a change-detecting join); the checksum
+    * rides the eager checkpoint job as an observed metric — exactly ONE
+    * driver action per round (plus the checkpoint write job in reliable
+    * mode), not a checkpoint job plus a separate agg job. `cut` truncates
+    * each round's lineage (localCheckpoint for bench; `Dataset.checkpoint`
+    * for cluster fault tolerance). Inputs within `driverMaxRows` vertices
+    * and edges run the same fixpoint on the driver instead (see
+    * [[CcDriverMaxRows]]). */
   private[graft] def connectedComponents(vertices: DataFrame, pairs: DataFrame,
-      cut: DataFrame => DataFrame): DataFrame = {
+      cut: DataFrame => DataFrame, driverMaxRows: Int = CcDriverMaxRows)
+      : DataFrame = {
     import vertices.sparkSession.implicits._
     val spark = vertices.sparkSession
     ccComputations.incrementAndGet()
@@ -878,11 +879,10 @@ object Dedup {
     val lt = org.apache.spark.sql.types.LongType
     val longKeyed = vertices.schema.fields.forall(_.dataType == lt) &&
       pairs.schema.fields.forall(_.dataType == lt)
-    val cap = driverCcMaxRows
     var (labels, checksum, nV) = checkpointWithSum(vertices, "cc_init")
-    if (longKeyed && nV <= cap) {
-      val es = pairs.limit(cap + 1).as[(Long, Long)].collect()
-      if (es.length <= cap) {
+    if (longKeyed && nV <= driverMaxRows) {
+      val es = pairs.limit(driverMaxRows + 1).as[(Long, Long)].collect()
+      if (es.length <= driverMaxRows) {
         val vs = labels.as[(Long, Long)].collect()
         org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(labels)
         return spark.createDataFrame(driverCc(vs, es).toSeq)

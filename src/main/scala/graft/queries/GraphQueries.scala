@@ -38,14 +38,6 @@ object GraphQueries {
   private val Damping = 0.85
   private val Iters = 5
 
-  /** Weighted PageRank core over an edge frame (`src`, `dst`, `w`): rank
-    * mass flows along out-probability `w / Σ_out w`, damped, with dangling
-    * mass redistributed uniformly. Returns (`node`, `rank`) unrounded.
-    *
-    * The node count enters as a driver scalar (one count() over the node
-    * frame — the codebook-collect discipline: bounded by |nodes|’ scale,
-    * not data scale; it sizes the teleport term, not any data structure).
-    */
   /** Edge-count bound under which the ITERATION runs on the driver (r13
     * optimization): the loop is |nodes|+|edges|-scale by design — for the
     * event-type graph that is ~25 edges, and the distributed loop paid
@@ -60,16 +52,29 @@ object GraphQueries {
     * double sums, noise ~1e-15, final round(rank, 6) stable) covers the
     * driver order exactly as it covers DuckDB's. Above the bound
     * (millions-of-URLs graphs) the distributed loop below is unchanged.
-    * Mutable for the spec that pins driver/distributed equality;
-    * env-tunable (`GRAFT_DRIVER_PR_MAX_EDGES`) so a deployment can size it
-    * to its driver — one knob style across the driver-loop caps (r14). */
-  private[graft] var driverIterMaxEdges: Int =
-    sys.env.get("GRAFT_DRIVER_PR_MAX_EDGES")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(4096)
+    * The gate observes only the aggregated edge count, which rides the
+    * edge checkpoint the distributed loop consumes. */
+  private val PrDriverMaxEdges: Int = 4096
 
+  /** Weighted PageRank core over an edge frame (`src`, `dst`, `w`): rank
+    * mass flows along out-probability `w / Σ_out w`, damped, with dangling
+    * mass redistributed uniformly. Returns (`node`, `rank`) unrounded.
+    *
+    * The node count enters as a driver scalar (one count() over the node
+    * frame — the codebook-collect discipline: bounded by |nodes|’ scale,
+    * not data scale; it sizes the teleport term, not any data structure).
+    *
+    * Graphs of at most `driverMaxEdges` aggregated edges iterate on the
+    * driver (see [[PrDriverMaxEdges]]). Every string-keyed graph pays one
+    * eager local checkpoint of the aggregated edges; on an over-cap graph
+    * those blocks sit in executor storage (memory, spilling to disk) next
+    * to the loop's own checkpoints until the loop returns, and since a
+    * local checkpoint cuts lineage, losing an executor that holds them
+    * fails the query instead of recomputing it.
+    */
   private[graft] def pagerankOn(edges: DataFrame, iters: Int = Iters,
-      damping: Double = Damping): DataFrame = {
+      damping: Double = Damping, driverMaxEdges: Int = PrDriverMaxEdges)
+      : DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // driver path only for string-keyed graphs (both faces): the result's
@@ -89,7 +94,7 @@ object GraphQueries {
       .localCheckpoint(true)
     val nEdges = obs.get("n").asInstanceOf[Long]
     val bounded: Option[Array[(String, String, Long)]] =
-      if (nEdges > driverIterMaxEdges) None
+      if (nEdges > driverMaxEdges) None
       else Some(edgesCp.select($"src", $"dst", $"w".cast("long"))
         .as[(String, String, Long)].collect())
     try bounded match {
@@ -125,7 +130,7 @@ object GraphQueries {
   }
 
   /** The distributed iteration — unchanged; every graph above
-    * [[driverIterMaxEdges]] runs here. */
+    * [[PrDriverMaxEdges]] runs here. */
   private[graft] def pagerankDistributed(edges: DataFrame, iters: Int,
       damping: Double): DataFrame = {
     val spark = edges.sparkSession

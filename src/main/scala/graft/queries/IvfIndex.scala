@@ -136,20 +136,16 @@ object IvfIndex {
       payload = Seq(org.apache.spark.sql.functions.col("v")),
       maintainEvery, id)
 
+  /** Most files per admitted cells delta (see the coalesce note in
+    * [[admitCellsInto]]). */
+  private val DeltaFiles = 4
+
   /** The shared admission protocol of the exact and SQ8 inverted files —
     * ONE implementation so a fix to the membership probe, lineage-cut
     * ordering, or append/maintain sequencing can never silently diverge
     * the two stores' crash-safety semantics. `payload` selects what the
     * cells persist for each admitted vector (fp64 `v`, or int8 codes +
     * scale), evaluated over the assignment frame's `v` column. */
-  /** Files per admitted cells delta (see the coalesce note in
-    * [[admitCellsInto]]); env-tunable for deployments with larger
-    * micro-batches. */
-  private val DeltaFiles: Int =
-    sys.env.get("GRAFT_IVF_DELTA_FILES")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(4)
-
   private def admitCellsInto(batch: DataFrame, indexDir: String,
       cellsPath: String, payload: Seq[org.apache.spark.sql.Column],
       maintainEvery: Int, id: Option[String],
@@ -192,12 +188,9 @@ object IvfIndex {
     // already-materialized partitions; micro-batches are bounded by the
     // admission contract, so a small fixed file count is the right
     // economics (a bulk load that wants more parallelism can pre-shape,
-    // exactly like the zone face's repartitionByRange discipline).
-    val toWrite =
-      if (admitted.rdd.getNumPartitions > DeltaFiles)
-        admitted.coalesce(DeltaFiles)
-      else admitted
-    if (Store.appendMaybeIdempotent(toWrite, cellsPath, id))
+    // exactly like the zone face's repartitionByRange discipline). A batch
+    // with fewer partitions keeps them: coalesce never raises the count.
+    if (Store.appendMaybeIdempotent(admitted.coalesce(DeltaFiles), cellsPath, id))
       Store.maintain(spark, cellsPath, every = maintainEvery)
     admitted.select($"vec_id", $"cell")
   }

@@ -160,33 +160,31 @@ class BpeVocabSpec extends AnyFunSuite {
   }
 
   test("driver fast path and distributed loop produce identical train + encode output") {
-    // the r13 bounded-vocabulary fast path (BpeVocab.driverBpeMaxWords)
-    // must be invisible: force the distributed loop by zeroing the cap,
-    // then re-run under the default cap (driver path at this scale), and
-    // require byte-identical merge tables and encode outputs — including
-    // on a multibyte/tie-heavy corpus where an ordering mismatch between
-    // UTF8String binary order and Java compareTo would surface
-    val saved = BpeVocab.driverBpeMaxWords
-    def both[T](run: => T): (T, T) =
-      try {
-        BpeVocab.driverBpeMaxWords = 0
-        val dist = run
-        BpeVocab.driverBpeMaxWords = saved
-        val drv = run
-        (dist, drv)
-      } finally BpeVocab.driverBpeMaxWords = saved
-    val (vDist, vDrv) = both(
-      BpeVocab.train(spark, sf, 12).as[(Int, String, String, String, Long)].collect().toSeq)
+    // the r13 bounded-vocabulary fast path must be invisible: a cap of 0
+    // forces the distributed loop, the default cap takes the driver path
+    // at this scale, and the merge tables and encode outputs must be
+    // byte-identical — including on a multibyte/tie-heavy corpus where an
+    // ordering mismatch between UTF8String binary order and Java
+    // compareTo would surface
+    val docs = Tables.documents(spark, sf)
+    val vDist = BpeVocab.trainCore(docs, 12, driverMaxWords = 0)._1
+      .as[(Int, String, String, String, Long)].collect().toSeq
+    val vDrv = BpeVocab.train(spark, sf, 12)
+      .as[(Int, String, String, String, Long)].collect().toSeq
     assert(vDist == vDrv,
       s"merge tables diverge: first-diff=${vDist.zip(vDrv).find { case (a, b) => a != b }}")
-    val (eDist, eDrv) = both(
-      BpeVocab.encode(spark, sf, 8).as[(Long, Long, Long)].collect().toSeq)
+    val eDist = BpeVocab.encodeWith(docs,
+      BpeVocab.trainCore(docs, 8, driverMaxWords = 0)._2)
+      .as[(Long, Long, Long)].collect().toSeq
+    val eDrv = BpeVocab.encode(spark, sf, 8).as[(Long, Long, Long)].collect().toSeq
     assert(eDist == eDrv,
       s"encode diverges: first-diff=${eDist.zip(eDrv).find { case (a, b) => a != b }}")
     val ties = Seq((1L, "ab ab ba ba aé éa 中ß ß中"), (2L, "ba ab éa aé ß中 中ß"))
       .toDF("doc_id", "text")
-    val (tDist, tDrv) = both(
-      BpeVocab.trainOnDocs(ties, 6).as[(Int, String, String, String, Long)].collect().toSeq)
+    val tDist = BpeVocab.trainCore(ties, 6, driverMaxWords = 0)._1
+      .as[(Int, String, String, String, Long)].collect().toSeq
+    val tDrv = BpeVocab.trainOnDocs(ties, 6)
+      .as[(Int, String, String, String, Long)].collect().toSeq
     assert(tDist == tDrv, s"tie-heavy corpus diverges:\n dist=$tDist\n drv=$tDrv")
   }
 

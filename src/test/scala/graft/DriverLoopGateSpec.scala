@@ -27,7 +27,10 @@ import graft.queries.{BpeVocab, Dedup, GraphQueries}
   * The assertions pin job-count CEILINGS per path at the counts measured
   * at r14 HEAD (AQE executes each shuffle stage as its own job, so the
   * raw numbers exceed the naive action count) — a regression that
-  * re-introduces a wasted probe job breaches the ceiling. */
+  * re-introduces a wasted probe job breaches the ceiling. The over-cap
+  * legs pass cap 0; the under-cap legs use each loop's default cap, so a
+  * default too small for these inputs fails the under-cap ceiling, and
+  * the under-cap leg must launch fewer jobs than the over-cap one. */
 class DriverLoopGateSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -48,66 +51,54 @@ class DriverLoopGateSpec extends AnyFunSuite {
 
   test("BPE gate: over-cap input pays zero jobs beyond the distributed loop") {
     val docs = Seq((1L, "aa ab aa"), (2L, "ab aa ba")).toDF("doc_id", "text")
-    val saved = BpeVocab.driverBpeMaxWords
-    try {
-      // over-cap (cap 0): jobs = 1 word-table checkpoint (the loop's own
-      // init — the gate metric rides it) + nMerges pair-count collects
-      // + 1 consuming collect of the merge table. No probe job exists.
-      BpeVocab.driverBpeMaxWords = 0
-      val over = countJobs(BpeVocab.trainOnDocs(docs, nMerges = 2).collect())
-      assert(over <= 8, s"over-cap BPE launched $over jobs (ceiling 8)")
-      // under-cap: checkpoint + one collect of the materialized blocks
-      // + the consuming collect
-      BpeVocab.driverBpeMaxWords = 1 << 17
-      val under = countJobs(BpeVocab.trainOnDocs(docs, nMerges = 2).collect())
-      assert(under <= 5, s"under-cap BPE launched $under jobs (ceiling 5)")
-    } finally BpeVocab.driverBpeMaxWords = saved
+    // over-cap (cap 0): jobs = 1 word-table checkpoint (the loop's own
+    // init — the gate metric rides it) + nMerges pair-count collects
+    // + 1 consuming collect of the merge table. No probe job exists.
+    val over = countJobs(
+      BpeVocab.trainCore(docs, nMerges = 2, driverMaxWords = 0)._1.collect())
+    assert(over <= 8, s"over-cap BPE launched $over jobs (ceiling 8)")
+    // under-cap at the default cap: checkpoint + one collect of the
+    // materialized blocks + the consuming collect
+    val under = countJobs(BpeVocab.trainOnDocs(docs, nMerges = 2).collect())
+    assert(under <= 5, s"under-cap BPE launched $under jobs (ceiling 5)")
+    assert(under < over, s"driver path ($under jobs) must beat the loop ($over)")
   }
 
   test("CC gate: over-cap input pays at most one bounded edge probe") {
     val vertices = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("id", "label")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    val saved = Dedup.driverCcMaxRows
-    try {
-      // over-cap (cap 0): nV > 0 short-circuits BEFORE the edge probe —
-      // jobs = cc_init checkpoint (gate metric rides it) + edges
-      // checkpoint + 1 checkpoint per pointer-jump round + the consuming
-      // collect. The tiny chain converges in ≤ 3 rounds.
-      Dedup.driverCcMaxRows = 0
-      val over = countJobs(
-        Dedup.connectedComponents(vertices, pairs,
-          df => df.localCheckpoint(true)).collect())
-      assert(over <= 12, s"over-cap CC launched $over jobs (ceiling 12)")
-      // under-cap: cc_init checkpoint + edge CollectLimit probe + vertex
-      // collect from the checkpoint + the consuming collect
-      Dedup.driverCcMaxRows = 1 << 17
-      val under = countJobs(
-        Dedup.connectedComponents(vertices, pairs,
-          df => df.localCheckpoint(true)).collect())
-      assert(under <= 3, s"under-cap CC launched $under jobs (ceiling 3)")
-    } finally Dedup.driverCcMaxRows = saved
+    // over-cap (cap 0): nV > 0 short-circuits BEFORE the edge probe —
+    // jobs = cc_init checkpoint (gate metric rides it) + edges
+    // checkpoint + 1 checkpoint per pointer-jump round + the consuming
+    // collect. The tiny chain converges in ≤ 3 rounds.
+    val over = countJobs(
+      Dedup.connectedComponents(vertices, pairs,
+        df => df.localCheckpoint(true), driverMaxRows = 0).collect())
+    assert(over <= 12, s"over-cap CC launched $over jobs (ceiling 12)")
+    // under-cap at the default cap: cc_init checkpoint + edge CollectLimit
+    // probe + vertex collect from the checkpoint + the consuming collect
+    val under = countJobs(
+      Dedup.connectedComponents(vertices, pairs,
+        df => df.localCheckpoint(true)).collect())
+    assert(under <= 3, s"under-cap CC launched $under jobs (ceiling 3)")
+    assert(under < over, s"driver path ($under jobs) must beat the loop ($over)")
   }
 
   test("PageRank gate: over-cap input pays zero jobs beyond the distributed loop") {
     val edges = Seq(("a", "b", 2L), ("b", "c", 1L), ("c", "a", 1L))
       .toDF("src", "dst", "w")
-    val saved = GraphQueries.driverIterMaxEdges
-    try {
-      // over-cap (cap 0): jobs = edge checkpoint (gate metric rides it;
-      // the distributed loop consumes it) + nodes cp + node count + probs
-      // cp + sources cp + rank-init cp + iters rank cps + the consuming
-      // collect. No probe job exists.
-      GraphQueries.driverIterMaxEdges = 0
-      val over = countJobs(
-        GraphQueries.pagerankOn(edges, iters = 2).collect())
-      assert(over <= 27, s"over-cap PageRank launched $over jobs (ceiling 27)")
-      // under-cap: edge checkpoint + one collect of its blocks (the
-      // consuming collect is driver-local: the result is createDataFrame
-      // of an in-process array)
-      GraphQueries.driverIterMaxEdges = 4096
-      val under = countJobs(
-        GraphQueries.pagerankOn(edges, iters = 2).collect())
-      assert(under <= 2, s"under-cap PageRank launched $under jobs (ceiling 2)")
-    } finally GraphQueries.driverIterMaxEdges = saved
+    // over-cap (cap 0): jobs = edge checkpoint (gate metric rides it;
+    // the distributed loop consumes it) + nodes cp + node count + probs
+    // cp + sources cp + rank-init cp + iters rank cps + the consuming
+    // collect. No probe job exists.
+    val over = countJobs(
+      GraphQueries.pagerankOn(edges, iters = 2, driverMaxEdges = 0).collect())
+    assert(over <= 27, s"over-cap PageRank launched $over jobs (ceiling 27)")
+    // under-cap at the default cap: edge checkpoint + one collect of its
+    // blocks (the consuming collect is driver-local: the result is
+    // createDataFrame of an in-process array)
+    val under = countJobs(GraphQueries.pagerankOn(edges, iters = 2).collect())
+    assert(under <= 2, s"under-cap PageRank launched $under jobs (ceiling 2)")
+    assert(under < over, s"driver path ($under jobs) must beat the loop ($over)")
   }
 }

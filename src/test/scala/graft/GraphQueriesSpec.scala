@@ -87,19 +87,17 @@ class GraphQueriesSpec extends AnyFunSuite {
   }
 
   test("bounded-graph driver iteration equals the distributed loop exactly (r13)") {
-    // the event-type graph is under driverIterMaxEdges, so the default run
-    // takes the driver path; forcing the threshold to 0 runs the original
-    // distributed loop — both must land on the identical 1e-6 grid
+    // the event-type graph is under the default cap, so the public face
+    // takes the driver path; a cap of 0 runs the original distributed loop
+    // — both must land on the identical 1e-6 grid
     val viaDriver = GraphQueries.eventsPagerank(spark, sf)
       .as[(String, Double)].collect().toMap
-    val was = GraphQueries.driverIterMaxEdges
-    try {
-      GraphQueries.driverIterMaxEdges = 0
-      val viaDistributed = GraphQueries.eventsPagerank(spark, sf)
-        .as[(String, Double)].collect().toMap
-      assert(viaDriver == viaDistributed,
-        s"driver=$viaDriver distributed=$viaDistributed")
-      assert(viaDriver.nonEmpty)
-    } finally GraphQueries.driverIterMaxEdges = was
+    val viaDistributed = GraphQueries.pagerankOn(
+        GraphQueries.transitionEdges(Tables.events(spark, sf)), driverMaxEdges = 0)
+      .select($"node", round($"rank", 6))
+      .as[(String, Double)].collect().toMap
+    assert(viaDriver == viaDistributed,
+      s"driver=$viaDriver distributed=$viaDistributed")
+    assert(viaDriver.nonEmpty)
   }
 }

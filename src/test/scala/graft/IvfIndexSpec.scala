@@ -89,6 +89,27 @@ class IvfIndexSpec extends AnyFunSuite {
     } finally sweep(dir)
   }
 
+  test("a batch admitted over more than 4 partitions lands as at most 4 cells files") {
+    // no AQE coalescing and 8 shuffle partitions: the admitted frame keeps
+    // the membership shuffle's 8 partitions, so only the write's coalesce
+    // can bound the delta's file count
+    val dir = freshDir()
+    val confs = Seq("spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      IvfIndex.writeIvfIndex(spark, dir, seedCodebook())
+      val admitted = IvfIndex.admitBatchIvf(vecs, dir)
+      assert(admitted.rdd.getNumPartitions > 4)
+      val files = Store.liveFiles(IvfIndex.cellsDir(dir)).filter(_.endsWith(".parquet"))
+      assert(files.nonEmpty && files.size <= 4, s"${files.size} cells files")
+    } finally {
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      sweep(dir)
+    }
+  }
+
   test("codebook versioning: serving uses the latest version only") {
     val dir = freshDir()
     try {

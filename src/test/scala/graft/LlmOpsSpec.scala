@@ -77,32 +77,25 @@ class LlmOpsSpec extends AnyFunSuite {
   test("bounded-input driver CC equals the distributed loop exactly (r13)") {
     // the r13 driver-side fixpoint must be row-for-row identical to the
     // distributed loop on the real corpus labels (same min-label +
-    // pointer-jump arithmetic over Long ids); forcing the bound to 0 runs
-    // the original distributed rounds
+    // pointer-jump arithmetic over Long ids); a cap of 0 runs the original
+    // distributed rounds
     val viaDriver = Dedup.ccLabels(spark, sf, reliableCheckpoint = false)
       .as[(Long, Long)].collect().sorted
-    val was = Dedup.driverCcMaxRows
-    try {
-      Dedup.driverCcMaxRows = 0
-      val viaDistributed = Dedup.ccLabels(spark, sf, reliableCheckpoint = false)
-        .as[(Long, Long)].collect().sorted
-      assert(viaDriver.sameElements(viaDistributed),
-        s"driver/distributed CC drift: ${viaDriver.take(5).toSeq} vs " +
-          s"${viaDistributed.take(5).toSeq}")
-    } finally Dedup.driverCcMaxRows = was
+    val viaDistributed = Dedup.ccLabels(spark, sf, reliableCheckpoint = false,
+      driverMaxRows = 0).as[(Long, Long)].collect().sorted
+    assert(viaDriver.sameElements(viaDistributed),
+      s"driver/distributed CC drift: ${viaDriver.take(5).toSeq} vs " +
+        s"${viaDistributed.take(5).toSeq}")
     // and on a graph with edge endpoints ABSENT from the vertex frame the
     // two paths must agree too (the distributed union admits such ids)
     val verts = Seq((5L, 5L), (6L, 6L)).toDF("id", "label")
     val pairs = Seq((5L, 9L)).toDF("doc_a", "doc_b")
     val viaDriver2 = Dedup.connectedComponents(verts, pairs, _.localCheckpoint())
       .as[(Long, Long)].collect().sorted
-    try {
-      Dedup.driverCcMaxRows = 0
-      val viaDistributed2 = Dedup.connectedComponents(verts, pairs, _.localCheckpoint())
-        .as[(Long, Long)].collect().sorted
-      assert(viaDriver2.sameElements(viaDistributed2),
-        s"${viaDriver2.toSeq} vs ${viaDistributed2.toSeq}")
-    } finally Dedup.driverCcMaxRows = was
+    val viaDistributed2 = Dedup.connectedComponents(verts, pairs,
+      _.localCheckpoint(), driverMaxRows = 0).as[(Long, Long)].collect().sorted
+    assert(viaDriver2.sameElements(viaDistributed2),
+      s"${viaDriver2.toSeq} vs ${viaDistributed2.toSeq}")
   }
 
   test("dedupClusters reliable-checkpoint mode returns identical clusters") {
