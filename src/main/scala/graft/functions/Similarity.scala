@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector similarity + MinHash primitives, all as Catalyst expressions
+/** Vector and set similarity primitives, all as Catalyst expressions
   * (`zip_with`/`aggregate`/`transform` — codegen'd, no UDFs), so similarity
   * search runs as ordinary projections over `array<float>` columns at any
   * scale. */
@@ -24,42 +24,12 @@ object Similarity {
     when(denom === 0, lit(0.0)).otherwise(dot(a, b) / denom)
   }
 
-  def euclidean(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
-
-  /** MinHash signature over a shingle array: element j is
-    * min over shingles of xxhash64(shingle, j). Signature length `n`.
-    * NOTE: Column-composition form, evaluated interpreted (HOFs). The query
-    * layer uses the aggregation-based formulation instead
-    * (queries/Dedup.minhashVerifiedPairs) — prefer that on hot paths. */
-  def minhashSignature(shingles: Column, n: Int): Column =
-    array((0 until n).map { j =>
-      coalesce(array_min(transform(shingles, s => xxhash64(s, lit(j)))),
-        lit(Long.MaxValue))
-    }: _*)
-
-  /** LSH band keys from a signature: `nBands` hashes, each over `rowsPerBand`
-    * consecutive signature entries. Docs sharing ANY band key are candidate
-    * near-duplicates (standard banding: P(candidate) = 1-(1-s^r)^b). */
-  def minhashBands(sig: Column, nBands: Int, rowsPerBand: Int): Column =
-    array((0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("key"))
-    }: _*)
-
   /** Exact Jaccard similarity of two string arrays (as distinct sets). */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     val union = size(array_union(a, b)).cast("double")
     when(union === 0, lit(0.0)).otherwise(inter / union)
   }
-
-  /** Estimated Jaccard from two MinHash signatures: fraction of agreeing
-    * components. */
-  def minhashJaccardEstimate(sigA: Column, sigB: Column): Column =
-    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") /
-      greatest(size(sigA), lit(1)).cast("double")
 
   /** Deterministic pseudo-random hyperplanes for sign-LSH over embeddings:
     * plane p, dim d weight derived from a seeded hash — reproducible across
@@ -73,16 +43,6 @@ object Similarity {
         (h.toDouble / Long.MaxValue.toDouble)
       }
     }
-
-  /** Sign-LSH bucket id: one bit per hyperplane (sign of the dot product).
-    * Embeddings in the same bucket are ANN candidates. */
-  def signLshBucket(vec: Column, planes: Seq[Seq[Double]]): Column = {
-    val bits: Seq[Column] = planes.zipWithIndex.map { case (plane, i) =>
-      val planeCol = array(plane.map(lit): _*)
-      when(dot(vec, planeCol) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** Banded sign-LSH keys: `nBands` independent buckets of `planesPerBand`
     * bits each. Vectors are candidates if ANY band key matches — the

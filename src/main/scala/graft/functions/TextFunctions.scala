@@ -67,7 +67,6 @@ object TextFunctions {
   def alphaRatio(c: Column): Column = charClassRatio(c, "[A-Za-z]")
   def digitRatio(c: Column): Column = charClassRatio(c, "[0-9]")
   def punctRatio(c: Column): Column = charClassRatio(c, "[^A-Za-z0-9\\s]")
-  def whitespaceRatio(c: Column): Column = charClassRatio(c, "\\s")
 
   /** Small public stopword profiles for the language-ID heuristic. */
   val stopwords: Map[String, Seq[String]] = Map(

@@ -78,7 +78,7 @@ object Bm25 {
       terms: Seq[String], k: Int = 10): DataFrame = {
     import spark.implicits._
     require(terms.nonEmpty, "rank needs at least one term")
-    val cells = mergeCells(Store.readBounded(spark, storeDir))
+    val cells = mergeCells(Store.read(spark, storeDir))
     val lens = cells.filter($"kind" === "d").select($"doc_id", $"tf".as("dl"))
     val corpus = lens.agg(count(lit(1)).as("n"),
       (sum($"dl").cast("double") / count(lit(1))).as("avgdl"))

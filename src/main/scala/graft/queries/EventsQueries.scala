@@ -579,7 +579,7 @@ object EventsQueries {
         storeDir, id))
       graft.sources.Store.maintain(spark, storeDir, maintainEvery,
         rewrite = mergeDeltas)
-    anomalyFlagsOn(graft.sources.Store.readBounded(spark, storeDir)
+    anomalyFlagsOn(graft.sources.Store.read(spark, storeDir)
       .groupBy($"event_type", $"day")
       .agg(sum($"cnt_delta").as("cnt")))
   }

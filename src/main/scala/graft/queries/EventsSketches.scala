@@ -123,7 +123,7 @@ object EventsSketches {
   /** Serve exact distinct users per type from the store alone. */
   def distinctFromStore(spark: SparkSession, storeDir: String): DataFrame = {
     import spark.implicits._
-    mergeBitmaps(Store.readBounded(spark, storeDir))
+    mergeBitmaps(Store.read(spark, storeDir))
       .groupBy($"event_type")
       .agg(sum(expr("bitmap_count(bm)")).as("n_users"))
       .orderBy($"event_type")
@@ -169,7 +169,7 @@ object EventsSketches {
   def distinctWindowFromStore(spark: SparkSession, storeDir: String,
       fromDay: java.time.LocalDate, toDay: java.time.LocalDate): DataFrame = {
     import spark.implicits._
-    Store.readBounded(spark, storeDir)
+    Store.read(spark, storeDir)
       .filter($"day" >= lit(java.sql.Date.valueOf(fromDay)) &&
         $"day" < lit(java.sql.Date.valueOf(toDay)))
       .groupBy($"event_type", $"bucket")

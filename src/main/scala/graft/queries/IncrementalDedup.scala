@@ -71,7 +71,7 @@ object IncrementalDedup {
     val spark = batch.sparkSession
     import spark.implicits._
     val admitted =
-      admissionFrame(batch, Store.readBounded(spark, indexDir)).localCheckpoint()
+      admissionFrame(batch, Store.read(spark, indexDir)).localCheckpoint()
     if (Store.appendMaybeIdempotent(
         admitted.select($"fp", $"doc_id".as("keeper_id")), indexDir, id))
       Store.maintain(spark, indexDir, maintainEvery)
@@ -162,7 +162,7 @@ object IncrementalDedup {
         lit(SigComponents) * tNum
     // 1. index screen: batch band keys broadcast INTO the index scan's
     //    derived-key projection; candidates (ids + sigs) are posting-bounded
-    val index = Store.readBounded(spark, indexDir)
+    val index = Store.read(spark, indexDir)
     val indexBands = index.select($"doc_id", $"sig", bandKeys(rowsPerBand).as("bk"))
       .select($"sig".as("sig_i"), $"bk.band".as("band"), $"bk.key".as("key"))
     val dropByIndex = indexBands
@@ -242,7 +242,7 @@ object IncrementalDedup {
     // probes nothing (Store.read would fail schema inference on it)
     val admitted = (
       if (Store.hasData(indexDir))
-        chunkAdmissionFrame(batchKeep, Store.readBounded(spark, indexDir))
+        chunkAdmissionFrame(batchKeep, Store.read(spark, indexDir))
       else batchKeep
     ).localCheckpoint() // same refreshByPath trap as the exact path
     if (Store.appendMaybeIdempotent(
@@ -257,7 +257,7 @@ object IncrementalDedup {
     // the batch's doc ids via a broadcast semi-probe (index never moves).
     val keptSource =
       if (admitted.isEmpty && Store.hasData(indexDir))
-        Store.readBounded(spark, indexDir)
+        Store.read(spark, indexDir)
           .join(broadcast(tokDocs.select($"doc_id")), Seq("doc_id"))
           .select($"doc_id", $"idx")
       else admitted.select($"doc_id", $"idx")
@@ -293,7 +293,7 @@ object IncrementalDedup {
   def rebuildFromChunkIndex(docs: DataFrame, indexDir: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val kept = Store.readBounded(spark, indexDir)
+    val kept = Store.read(spark, indexDir)
       .groupBy($"doc_id").agg(collect_set($"idx").as("kept"))
     DedupRewrite.rebuild(DedupRewrite.tokenized(docs), kept)
   }
@@ -359,7 +359,7 @@ object IncrementalDedup {
     val dropByIndex = if (!Store.hasData(indexDir))
       batchPh.select($"doc_id").limit(0)
     else {
-      val indexBands = Store.readBounded(spark, indexDir)
+      val indexBands = Store.read(spark, indexDir)
         .select($"ph", Multimodal.phashBandStructs.as("bk"))
         .select($"ph".as("ph_i"), $"bk.band".as("band"), $"bk.key".as("key"))
       indexBands

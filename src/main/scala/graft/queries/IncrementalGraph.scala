@@ -86,7 +86,7 @@ object IncrementalGraph {
       .agg(count(lit(1)).as("w"))
     val boundary =
       if (Store.hasData(storeDir)) {
-        val frontier = mergeCells(Store.readBounded(spark, storeDir))
+        val frontier = mergeCells(Store.read(spark, storeDir))
           .filter($"kind" === "f")
           .select($"user_id", $"event_type".as("last_type"))
         boundaryEdges(ev, frontier)
@@ -131,7 +131,7 @@ object IncrementalGraph {
     * everything admitted. */
   def edgesFromStore(spark: SparkSession, storeDir: String): DataFrame = {
     import spark.implicits._
-    mergeCells(Store.readBounded(spark, storeDir))
+    mergeCells(Store.read(spark, storeDir))
       .filter($"kind" === "e").select($"src", $"dst", $"w")
   }
 

@@ -62,7 +62,7 @@ object InvertedIndex {
       terms: Seq[String]): DataFrame = {
     import spark.implicits._
     require(terms.nonEmpty, "search needs at least one term")
-    Store.readBounded(spark, storeDir)
+    Store.read(spark, storeDir)
       .filter($"token".isin(terms: _*))
       .groupBy($"doc_id")
       .agg(countDistinct($"token").as("nt"))
@@ -217,7 +217,7 @@ object InvertedIndex {
     import spark.implicits._
     require(phrase.nonEmpty, "phrase needs at least one token")
     val cells = mergePositional(
-      Store.readBounded(spark, storeDir).filter($"token".isin(phrase: _*)))
+      Store.read(spark, storeDir).filter($"token".isin(phrase: _*)))
     val anchor = cells.filter($"token" === phrase.head)
       .select($"doc_id", $"pos")
     phrase.tail.zipWithIndex.foldLeft(anchor) { case (acc, (t, i)) =>

@@ -101,7 +101,7 @@ object IvfIndex {
     // the max-version aggregate job the old two-pass read paid per call
     // (3 calls per served query: 2 admits + 1 serve) was pure scheduler
     // overhead
-    val rows = Store.readBounded(spark, codebookDir(indexDir))
+    val rows = Store.read(spark, codebookDir(indexDir))
       .select(col("version"), col("cell"), col("centroid")).collect()
     val version = rows.iterator.map(_.getInt(0)).max
     val cells = rows.iterator.filter(_.getInt(0) == version)
@@ -165,7 +165,7 @@ object IvfIndex {
         // re-admits every vector under the new quantizer, while replays
         // and overlapping drops within a version stay no-ops. The version
         // predicate prunes the cells scan before the probe.
-        val index = Store.readBounded(spark, cellsPath)
+        val index = Store.read(spark, cellsPath)
           .filter($"version" === version)
         val matched = index
           .join(broadcast(vecs.select($"vec_id")), "vec_id")
@@ -211,7 +211,7 @@ object IvfIndex {
     val (version, codebook) = readCodebook(spark, indexDir)
     val probes = queries.select($"query_id", $"q",
       explode(VectorFunctions.codebookTopCells($"q", codebook, nprobe)).as("cell"))
-    val candidates = Store.readBounded(spark, cellsDir(indexDir))
+    val candidates = Store.read(spark, cellsDir(indexDir))
       .filter($"version" === version)
       .join(broadcast(probes), "cell")
       .filter(if (excludeSelf) $"vec_id" =!= $"query_id" else lit(true))
@@ -261,7 +261,7 @@ object IvfIndex {
       VectorFunctions.quantizeInt8($"q").as("qq"),
       VectorFunctions.maxAbs($"q").as("mq"),
       explode(VectorFunctions.codebookTopCells($"q", codebook, nprobe)).as("cell"))
-    val candidates = Store.readBounded(spark, cellsSq8Dir(indexDir))
+    val candidates = Store.read(spark, cellsSq8Dir(indexDir))
       .filter($"version" === version)
       .join(broadcast(probes), "cell")
       .filter(if (excludeSelf) $"vec_id" =!= $"query_id" else lit(true))
@@ -299,7 +299,7 @@ object IvfIndex {
       maintainEvery: Int = 16): Int = {
     import spark.implicits._
     val (v, _) = readCodebook(spark, indexDir)
-    val stored = Store.readBounded(spark, cellsDir(indexDir))
+    val stored = Store.read(spark, cellsDir(indexDir))
       .filter($"version" === v)
       .select($"vec_id", $"v")
     val codebook = SimilaritySearch.trainIvfCodebookOn(

@@ -83,7 +83,7 @@ object MaterializedAgg {
     * integer count (bit-identical IEEE division). */
   def serveOrders(spark: SparkSession, storeDir: String): DataFrame = {
     import spark.implicits._
-    mergeCells(Store.readBounded(spark, storeDir))
+    mergeCells(Store.read(spark, storeDir))
       .select($"day", $"o_orderstatus", $"n",
         $"sum_exact".cast("double").as("revenue"),
         ($"sum_exact".cast("double") / $"n").as("avg_price"),

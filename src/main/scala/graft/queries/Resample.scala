@@ -121,7 +121,7 @@ object Resample {
 
   /** Serve the current grid from the persisted store. */
   def gridFromStore(spark: SparkSession, storeDir: String): DataFrame =
-    gridOf(mergeHourly(graft.sources.Store.readBounded(spark, storeDir)).localCheckpoint(true))
+    gridOf(mergeHourly(graft.sources.Store.read(spark, storeDir)).localCheckpoint(true))
 
   /** Streaming face: the SAME admission code as the batch/incremental
     * paths, wired as a foreachBatch sink. foreachBatch is at-least-once —

@@ -524,7 +524,7 @@ object ZoneScan {
       |       AND l_shipdate <  TIMESTAMP '1997-07-01') AS max_sd""".stripMargin
 
   /** The Store DELETE face ([[graft.sources.Store.deleteByKeys]] /
-    * [[graft.sources.Store.compactWithDeletes]]) — takedown semantics for
+    * [[graft.sources.Store.compact]]) — takedown semantics for
     * a corpus lake: lineitem admitted in two idempotent halves, every
     * tenth order key tombstoned (a crash-safe admission like any other),
     * the deleting compaction physically dropping the banned rows AND
@@ -554,7 +554,7 @@ object ZoneScan {
           dataDir, Some("takedown1")): Unit
       }
       Phases.time("build") { // deleting compaction: drop + retire
-        graft.sources.Store.compactWithDeletes(spark, dataDir, numFiles = 4)
+        graft.sources.Store.compact(spark, dataDir, numFiles = 4)
       }
       Phases.time("serve") {
         graft.sources.Store.readLive(spark, dataDir)

@@ -121,13 +121,10 @@ object BloomIndex {
 
   // ── Incremental face: a bloom-indexed Store ────────────────────────────
   //
-  // Composition with [[Store]]'s crash-safe admission: each admitted delta
-  // carries its per-file blooms into a SIBLING stats store, and lookups
-  // treat the index as a conservative ACCELERATOR — a live data file the
-  // stats do not cover is read unconditionally, so a crash between the
-  // data commit and the stats append (or a compaction that renamed every
-  // file) degrades pruning to scanning, NEVER correctness. maintainIndex
-  // heals both directions (covers new files, drops rows for dead ones).
+  // Composition with [[Store]]'s crash-safe admission through the shared
+  // [[StatsIndex]] protocol: each admitted delta carries its per-file
+  // blooms into a SIBLING stats store; a live data file the stats do not
+  // cover is read unconditionally; maintainIndex heals both directions.
 
   /** `_metadata.file_path` and `DataFrame.inputFiles` render the SAME file
     * as different URI strings (`file:///x` vs `file:/x`); every path that
@@ -144,6 +141,13 @@ object BloomIndex {
     p.toString
   }
   private[graft] val canonPathUdf = udf(canonPath _)
+
+  /** The index face's stats function: blooms for exactly `files`, written
+    * in [[statsNumFiles]] files. */
+  private def fileStats(spark: SparkSession, keyCols: Seq[String],
+      expectedPerFile: Long, fpp: Double)(files: Seq[String]): DataFrame =
+    statsFor(spark, Store.readFiles(spark, files), keyCols, expectedPerFile, fpp)
+      .coalesce(statsNumFiles(files.length, expectedPerFile, fpp))
 
   private def statsFor(spark: SparkSession, dataFiles: DataFrame,
       keyCols: Seq[String], expectedPerFile: Long, fpp: Double): DataFrame =
@@ -218,42 +222,8 @@ object BloomIndex {
       fpp: Double = 0.01): Boolean = {
     require(keyCols.nonEmpty, "at least one key column")
     ensureKeyCols(statsDir, keyCols)
-    val spark = df.sparkSession
-    val admitted = Store.appendIdempotent(df, dataDir, id)
-    val delta = new java.io.File(dataDir, s"delta-$id")
-    // stats follow whenever the delta is still live (replay heal included);
-    // a delta already compacted away is covered by maintainIndex instead.
-    // The delta re-read can RACE a maintenance compaction's swap (the
-    // exists() check and the Spark job's file listing are two steps) —
-    // that race must not fail an admission whose data already committed:
-    // skip the stats instead, leaving the file in the uncovered-read-
-    // unconditionally state that maintainIndex (or a replay) heals.
-    if (delta.exists()) {
-      try {
-        val stats = statsFor(spark, spark.read.parquet(delta.toString),
-          keyCols, expectedPerFile, fpp)
-        Store.appendIdempotent(stats, statsDir, s"bloom-$id"): Unit
-      } catch {
-        // a path-shaped failure IS the tolerated race (the delta vanished
-        // between exists() and the job's listing/read — compaction folded
-        // it; maintainIndex covers the renamed file). Any OTHER analysis
-        // error (unresolved keyCol, bad config) is deterministic: silently
-        // absorbing it would permanently disable pruning with zero signal,
-        // so rethrow. Runtime job failures are logged, never silent.
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage != null && (
-              e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("Path does not exist")) =>
-          log.warn(s"bloom stats for delta-$id skipped (delta compacted " +
-            s"away mid-admission; maintainIndex heals): ${e.getMessage}")
-        case e: org.apache.spark.sql.AnalysisException => throw e
-        case scala.util.control.NonFatal(e) =>
-          log.warn(s"bloom stats for delta-$id skipped (data admitted; " +
-            s"file stays uncovered until maintainIndex heals)", e)
-      }
-      serveCache.invalidate(statsDir)
-    }
-    admitted
+    index.admit(df, dataDir, statsDir, id)(
+      fileStats(df.sparkSession, keyCols, expectedPerFile, fpp))
   }
 
   // ── Serve cache: driver-resident stats for point-lookup latency ───────
@@ -270,14 +240,16 @@ object BloomIndex {
   private val serveCache =
     new ServeCache[Map[String, org.apache.spark.util.sketch.BloomFilter]]
 
+  private val index = new StatsIndex("bloom", "bloom-", serveCache)
+
   /** The cached (or freshly refreshed) filter map; None when the store
     * exceeds the driver budget — callers run the distributed pass. */
   private def cachedBlooms(spark: SparkSession, statsDir: String)
       : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] =
     serveCache.get(statsDir) {
-      // liveFiles + readFiles: the refresh pays ONE collect job — Store.read's
-      // mergeSchema option would add a distributed footer-merge job first
-      val rows = Store.readFiles(spark, Store.liveFiles(statsDir))
+      // the refresh pays ONE collect job (a bounded Store.read merges
+      // footers on the driver)
+      val rows = Store.read(spark, statsDir)
         .select(col("file"), col("bloom")).collect()
       // duplicate rows for one file (heal racing admit): either is correct
       rows.iterator.map { r =>
@@ -324,9 +296,8 @@ object BloomIndex {
     require(keys.size == keyCols.size,
       s"probe arity ${keys.size} != key columns ${keyCols.size}")
     verifyKeyCols(statsDir, keyCols)
-    // |files|-bounded driver-side listing (no DataFrame: Store.read's
-    // mergeSchema pays a footer-merge JOB per call — fatal for serve
-    // latency); everything FROM here is survivor-bounded
+    // |files|-bounded driver-side listing of names only; everything FROM
+    // here is survivor-bounded
     val live = Store.liveFiles(dataDir).toSet
     // decide per live file DISTRIBUTED-side: covered -> its bloom
     // decides; uncovered (left-join miss: crash window or a compaction
@@ -339,7 +310,7 @@ object BloomIndex {
     def distributedDecision(): Seq[String] = {
       val liveDf = live.toSeq.toDF("file")
       liveDf.join(
-          Store.readFiles(spark, Store.liveFiles(statsDir)).select(col("file"),
+          Store.read(spark, statsDir).select(col("file"),
             BloomSketch.mightContain(col("bloom"), xxhash64(keys: _*))
               .as("keep")),
           Seq("file"), "left_outer")
@@ -358,10 +329,10 @@ object BloomIndex {
         .getOrElse(distributedDecision())
     val pred = keyCols.lazyZip(keys).map((c, k) => col(c) === k)
       .reduce(_ && _)
-    // fallback schema frame is BY-NAME: only built (and only then paying
-    // the schema-merge job) when the candidate set is empty
+    // fallback schema frame is BY-NAME: only built (and only then merging
+    // the store's schemas) when the candidate set is empty
     val df = readCandidates(spark, files, pred,
-      fallbackSchemaFrom = Store.readBounded(spark, dataDir))
+      fallbackSchemaFrom = Store.read(spark, dataDir))
     (df, (files.length, live.size))
   }
 
@@ -414,7 +385,7 @@ object BloomIndex {
           val hashes = array(keys.map(key => xxhash64(key)): _*)
           val liveDf = live.toSeq.toDF("file")
           liveDf.join(
-              Store.readFiles(spark, Store.liveFiles(statsDir)).select(col("file"),
+              Store.read(spark, statsDir).select(col("file"),
                 BloomSketch.containsFlags(col("bloom"), hashes).as("flags")),
               Seq("file"), "left_outer")
             .select(col("file"),
@@ -435,7 +406,7 @@ object BloomIndex {
       survivors.collect { case (f, flags) if flags(i) => f })
     val pred = keys.map(key => col(keyCol) === key).reduce(_ || _)
     val df = readCandidates(spark, survivors.map(_._1), pred,
-      fallbackSchemaFrom = Store.readBounded(spark, dataDir))
+      fallbackSchemaFrom = Store.read(spark, dataDir))
     (df, perKey, (survivors.length, live.size))
   }
 
@@ -472,15 +443,9 @@ object BloomIndex {
     require(dimKeys.columns.length == 1,
       s"dimKeys must be the single join-key column, got ${dimKeys.columns.toSeq}")
     verifyKeyCols(statsDir, Seq(factKeyCol))
-    // driver-side listing + driver-merged schema: Store.read's mergeSchema
-    // paid a distributed footer-merge job per call just to learn the fact
-    // key's type and the live file names (r13)
     val live = Store.liveFiles(dataDir).toSet
-    val dataSchema =
-      if (live.nonEmpty && live.size <= 256)
-        org.apache.spark.sql.GraftBridge
-          .mergedParquetSchema(spark, live.toSeq.sorted)
-      else Store.read(spark, dataDir).schema // 10^6-file stores: distributed
+    // a bounded store's schema is merged on the driver, with no job
+    val dataSchema = Store.read(spark, dataDir).schema
     val factType = dataSchema(factKeyCol).dataType
     val dimType = dimKeys.schema.head.dataType
     require(dimType == factType,
@@ -501,7 +466,7 @@ object BloomIndex {
       } else {
         val liveDf = live.toSeq.toDF("file")
         liveDf.join(
-            Store.readFiles(spark, Store.liveFiles(statsDir)).select(col("file"),
+            Store.read(spark, statsDir).select(col("file"),
               BloomSketch.mightContainAny(col("bloom"), lit(hashes))
                 .as("keep")),
             Seq("file"), "left_outer")
@@ -546,17 +511,12 @@ object BloomIndex {
       clusterBy: Seq[String] = Nil, zOrder: Boolean = false,
       expectedPerFile: Long = 100000L, fpp: Double = 0.01,
       minFileBytes: Long = 0L): Unit =
-    if (every > 0 && Store.deltaCount(dataDir) >= every) {
-      // minFileBytes > 0: selective fold — full-sized files keep their
-      // NAMES, so their bloom stats stay valid and the heal below only
-      // builds filters for the folded output (index maintenance cost
-      // tracks folded bytes too)
-      if (minFileBytes > 0)
-        Store.compactSelective(spark, dataDir, minFileBytes,
-          clusterBy = clusterBy, zOrder = zOrder): Unit
-      else Store.compact(spark, dataDir, numFiles, identity, clusterBy, zOrder)
+    // minFileBytes > 0: selective fold — full-sized files keep their
+    // NAMES, so their bloom stats stay valid and the heal only builds
+    // filters for the folded output
+    if (Store.maintain(spark, dataDir, every, numFiles, clusterBy = clusterBy,
+        zOrder = zOrder, minFileBytes = minFileBytes))
       maintainIndex(spark, dataDir, statsDir, keyCol, expectedPerFile, fpp)
-    }
 
   /** Heal the index: build blooms for live-but-uncovered data files (one
     * pass over just those files) and compact the stats store down to rows
@@ -574,55 +534,10 @@ object BloomIndex {
   def maintainIndexMulti(spark: SparkSession, dataDir: String,
       statsDir: String, keyCols: Seq[String],
       expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit = {
-    import spark.implicits._
     if (Store.hasData(statsDir)) verifyKeyCols(statsDir, keyCols)
-    // driver-side listing (r13): Store.read(...).inputFiles paid a
-    // distributed footer-merge job just to learn the live file NAMES
-    val live = Store.liveFiles(dataDir).toSet
-    val covered: Set[String] =
-      if (Store.hasData(statsDir))
-        Store.readFiles(spark, Store.liveFiles(statsDir))
-          .select($"file").as[String].collect().toSet
-      else Set.empty
-    val missing = (live -- covered).toSeq.sorted
-    if (missing.nonEmpty) {
+    index.heal(spark, dataDir, statsDir) { files =>
       ensureKeyCols(statsDir, keyCols)
-      Store.append(
-        statsFor(spark, Store.readFiles(spark, missing), keyCols,
-          expectedPerFile, fpp)
-          .coalesce(statsNumFiles(missing.length, expectedPerFile, fpp)),
-        statsDir)
+      fileStats(spark, keyCols, expectedPerFile, fpp)(files)
     }
-    // rewrite the stats store only when there is something to clean:
-    // stale rows for dead files (post-compaction heal), or enough heal
-    // deltas accreted to matter (each heal appends one). A clean heal —
-    // all stats rows live, few deltas — skips the whole compact cycle
-    // (r13: the rewrite cost 4-6 jobs per heal and bought nothing when
-    // admits had already covered every file); stale rows are dropped by
-    // the per-lookup live join either way, so skipping is
-    // result-invisible and the next dirty heal cleans up.
-    val dead = covered -- live
-    if (Store.hasData(statsDir) &&
-        (dead.nonEmpty || Store.deltaCount(statsDir) >= statsCompactEvery)) {
-      // the live listing is recomputed INSIDE the rewrite, at image time:
-      // a semi-join against the listing taken above would drop the stats
-      // of any delta admitted while the heal ran. The residual window
-      // (admit between this listing and the image write) leaves that
-      // file merely UNCOVERED — scanned unconditionally, healed by the
-      // next maintainIndex — never wrongly pruned.
-      // File count: sized from the stats store's own BYTE volume (a heal
-      // over 10^6 files x ~100 KB blooms is a ~100 GB table — a
-      // hardcoded numFiles=1 would funnel it through one task).
-      Store.compactToFileSize(spark, statsDir, targetBytes = 64L << 20,
-        rewrite = { stats =>
-          val liveNow = Store.liveFiles(dataDir).toDF("file")
-          stats.join(broadcast(liveNow), Seq("file"), "left_semi")
-        }): Unit
-    }
-    serveCache.invalidate(statsDir)
   }
-
-  /** Stats-store delta budget between hygiene rewrites (heal appends one
-    * delta each; rows for dead files force a rewrite regardless). */
-  private val statsCompactEvery = 8
 }

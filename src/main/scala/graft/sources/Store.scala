@@ -37,8 +37,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     cleanly (the store dir is briefly absent — rename(2) creates no
   *     parents) and the caller retries.
   *
-  * Reads go through [[read]] (`recursiveFileLookup`), which sees the flat
-  * base files plus every COMMITTED delta directory and nothing else.
+  * Reads go through [[read]], which sees the flat base files plus every
+  * COMMITTED delta directory and nothing else. A store of at most
+  * [[MaxDriverFiles]] live files is listed and schema-merged on the
+  * driver; a larger one is listed and merged by Spark's distributed
+  * `recursiveFileLookup` read.
   *
   * Maintenance: each admit adds one delta directory, forever — the classic
   * small-file death of exactly this design at production volume (per-file
@@ -85,53 +88,48 @@ object Store {
     try body finally l.unlock()
   }
 
-  /** Read the store: flat base files plus every committed delta directory.
-    * Hidden (`.`/`_`-prefixed) paths — staged batches, commit markers —
-    * are filtered by Spark's file listing. `mergeSchema` makes schema
-    * EVOLUTION across admits deterministic: without it Spark infers the
-    * schema from one sampled footer, so an operator upgrade that adds a
-    * column to new deltas would surface or silently drop that column
-    * depending on file-listing order; with it the union schema is read
-    * every time and pre-upgrade rows carry NULLs (spec-pinned). The
-    * footer-merge cost is bounded by the maintenance compaction's file
-    * ceiling. */
-  def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read
+  /** The most files a read lists, stats and schema-merges on the driver.
+    * Above it, the listing and the footer merge run as Spark jobs: a
+    * 10^6-file store must not serialize its footer reads through the
+    * driver. */
+  private[graft] val MaxDriverFiles = 256
+
+  /** Read the store: flat base files plus every committed delta directory,
+    * presenting their UNION schema. Hidden (`.`/`_`-prefixed) paths —
+    * staged batches, commit markers — are never read. The union makes
+    * schema EVOLUTION across admits deterministic: inferring the schema
+    * from one sampled footer would surface or silently drop a column an
+    * operator upgrade added to new deltas, depending on file-listing
+    * order; with the union, pre-upgrade rows carry NULLs (spec-pinned).
+    *
+    * A store of at most [[MaxDriverFiles]] live files is listed on the
+    * driver ([[liveFiles]]) and read through [[readFiles]], which costs no
+    * Spark job before the scan: an incremental operator reads its store on
+    * every micro-batch or query, and a listing job plus a footer-merge job
+    * per read dominated small stores. An empty listing (a store
+    * mid-bootstrap, a missing directory) or a larger one takes Spark's
+    * distributed `recursiveFileLookup` + `mergeSchema` read, which also
+    * raises Spark's own error for a store with no data. */
+  def read(spark: SparkSession, dir: String): DataFrame = {
+    val lf = liveFiles(dir)
+    if (lf.nonEmpty && lf.size <= MaxDriverFiles) readFiles(spark, lf)
+    else spark.read
       .option("recursiveFileLookup", "true")
       .option("mergeSchema", "true")
       .parquet(dir)
-
-  /** [[read]] for BOUNDED stores (r14): the live file set is listed
-    * driver-side and read through the driver-statted path — same union
-    * schema, same rows, minus the distributed listing job and the
-    * mergeSchema footer-merge job `read` pays per DataFrame construction.
-    * Every incremental operator's admit/serve read is per-micro-batch or
-    * per-query, so those two scheduler round-trips dominated bounded
-    * stores (the r13 finding for the index layers, extended here to the
-    * operator stores). Above 256 files — or for a store mid-bootstrap —
-    * the distributed listing/merge is kept: a 10^6-file store must not
-    * serialize its footer reads through the driver. */
-  def readBounded(spark: SparkSession, dir: String): DataFrame = {
-    val lf = liveFiles(dir)
-    if (lf.nonEmpty && lf.size <= 256) readFiles(spark, lf)
-    else read(spark, dir)
   }
 
-  /** Read exactly `files` presenting the union of THEIR schemas — the
-    * bounded-candidate serve read (r13 optimization). Result-equivalent
-    * to a `mergeSchema` read of the same list, but the union schema is
-    * merged DRIVER-side from the parquet footers
+  /** Read exactly `files` presenting the union of THEIR schemas.
+    * Result-equivalent to a `mergeSchema` read of the same list. Up to
+    * [[MaxDriverFiles]] files, the union is merged on the driver from the
+    * parquet footers
     * ([[org.apache.spark.sql.GraftBridge.mergedParquetSchema]], tails
-    * only) instead of by the distributed footer-merge job Spark launches
-    * per mergeSchema DataFrame construction — a scheduler round trip
-    * that dominated bounded point lookups (the job to merge 2 footers
-    * cost more than the candidate scan). Above `maxDriverFooters` the
-    * distributed merge is kept: a huge candidate list must not serialize
-    * its footer reads through the driver (object-store GETs especially —
-    * size the threshold down when footer reads are remote). */
-  private[graft] def readFiles(spark: SparkSession, files: Seq[String],
-      maxDriverFooters: Int = 256): DataFrame =
-    if (files.nonEmpty && files.size <= maxDriverFooters)
+    * only) and the files are statted there too, so building the frame
+    * runs no Spark job: the job to merge 2 footers cost more than a
+    * bounded point lookup's candidate scan. A longer list keeps Spark's
+    * distributed footer merge. */
+  private[graft] def readFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    if (files.nonEmpty && files.size <= MaxDriverFiles)
       // driver-statted file index (r13): a plain spark.read.parquet(files)
       // would RE-LIST every path it was just handed — a distributed job
       // once the list passes the parallel-discovery threshold (32)
@@ -268,13 +266,12 @@ object Store {
   }
 
   /** The exact file set [[read]] scans, listed driver-side WITHOUT
-    * building a DataFrame: `read`'s mergeSchema option launches a
-    * distributed footer-merge job on every call, which a serving point
-    * lookup cannot afford just to learn the live file NAMES. Mirrors
-    * Spark's listing rule (every non-hidden FILE under `dir`,
-    * recursively; `.`/`_`-prefixed names skipped at every level) and
-    * renders paths exactly like `DataFrame.inputFiles` does, so set
-    * comparisons against index stats hold. */
+    * building a DataFrame (building one merges footers — no point when a
+    * serving lookup needs only the live file NAMES). Mirrors Spark's
+    * listing rule (every non-hidden FILE under `dir`, recursively;
+    * `.`/`_`-prefixed names skipped at every level) and renders paths
+    * exactly like `DataFrame.inputFiles` does, so set comparisons against
+    * index stats hold. */
   private[graft] def liveFiles(dir: String): Seq[String] = {
     def walk(f: File): Iterator[File] = {
       val kids = f.listFiles()
@@ -363,6 +360,16 @@ object Store {
     * `clusterBy` asks for re-clustering), then promote with the
     * rename-aside swap; stale staging-sibling orphans are swept first.
     *
+    * Deletes: when the store has live tombstones ([[deleteByKeys]]), the
+    * rewrite anti-joins the FROZEN tombstone image before `rewrite`, and
+    * after the swap the consumed tombstone deltas are retired — dropped
+    * rows need no further suppression, and a key re-admitted later is
+    * visible again. Tombstones admitted WHILE the rewrite runs are not in
+    * the frozen image: they stay live (reads keep suppressing) and the next
+    * compaction consumes them. A crash between the swap and the retire
+    * only re-applies consumed tombstones to already-dropped rows — a
+    * no-op; the retire is retried next cycle.
+    *
     * Writer discipline: compaction is issued by ONE coordinator, but a
     * delta APPEND racing the rewrite is tolerated — membership in the
     * compacted image is taken from the image's own frozen file index
@@ -403,16 +410,18 @@ object Store {
       // swap are folded into this rewrite rather than re-salvaged
       recoverStale(dir)
       sweepStaleStaging(dir)
-      // bounded stores read through the driver-statted path (r13): same
-      // union schema, same file set as read(), minus the mergeSchema
-      // footer-merge job and the listing job a maintenance cycle paid per
-      // rewrite; huge stores keep the distributed listing/merge
-      val lf = liveFiles(dir)
-      val image =
-        if (lf.nonEmpty && lf.size <= 256) readFiles(spark, lf)
-        else read(spark, dir)
-      compactImage(spark, dir, image, numFiles, rewrite,
-        clusterBy, zOrder)
+      val tsd = tombstoneDir(dir)
+      val ts = liveTombstones(spark, dir)
+      // the consumed tombstone deltas, frozen at the tombstone image's own
+      // file index — the same no-loss reasoning as compactImage's includedIds
+      val consumed = ts.toSeq.flatMap(_.inputFiles.flatMap(deltaSegment(tsd, _))).distinct
+      // the drop precedes the caller's `rewrite`, so a sum-merge never
+      // re-aggregates banned rows
+      compactImage(spark, dir, read(spark, dir), numFiles,
+        img => rewrite(ts.fold(img)(dropBanned(dir, img, _))), clusterBy, zOrder)
+      // retire the consumed deltas; their .admitted- markers stay, so a
+      // replayed deleteByKeys(id) is a no-op forever
+      consumed.foreach(d => rm(new File(tsd, d)))
     }
 
   /** Drop staging-sibling entries abandoned by crashed appends. Liveness
@@ -480,23 +489,25 @@ object Store {
   // tombstone batch (the keys to remove, single column named after the
   // data's key column) goes through the same crash-safe, idempotent
   // protocol into a SIBLING tombstone store. Reads through [[readLive]]
-  // anti-join live tombstones; [[compactWithDeletes]] physically drops
-  // tombstoned rows in the rewrite and RETIRES the consumed tombstone
-  // deltas (their `.admitted-` markers stay, so a replayed delete remains
-  // a no-op forever). Semantics are takedown semantics: a key is
-  // suppressed from the instant its delete commits until the compaction
-  // consumes the tombstone; a batch RE-ADMITTING the key before that
-  // compaction is suppressed too (the ban is by key, not by row), while
-  // re-admission after it is visible. Bloom/zone indexes stay
+  // anti-join live tombstones; [[compact]] physically drops tombstoned
+  // rows in the rewrite and RETIRES the consumed tombstone deltas (their
+  // `.admitted-` markers stay, so a replayed delete remains a no-op
+  // forever). [[compactSelective]] keeps its files by hard link and so
+  // cannot drop rows from them: it leaves tombstones live. Semantics are
+  // takedown semantics: a key is suppressed from the instant its delete
+  // commits until the compaction consumes the tombstone; a batch
+  // RE-ADMITTING the key before that compaction is suppressed too (the ban
+  // is by key, not by row), while re-admission after it is visible.
+  // Bloom/zone indexes stay
   // conservative — a tombstoned key may still probe "maybe" and read its
   // (dropped or suppressed) files: pruning degrades, correctness never;
   // route index lookups over a store with deletes through
   // [[suppressDeleted]].
 
   /** The sibling tombstone store for `dir`. Delta-only by construction:
-    * it is never self-compacted — retirement at [[compactWithDeletes]]
-    * removes consumed delta dirs, which bounds it by the delete traffic
-    * of one data-compaction cycle. */
+    * it is never self-compacted — retirement at [[compact]] removes
+    * consumed delta dirs, which bounds it by the delete traffic of one
+    * data-compaction cycle. */
   def tombstoneDir(dir: String): String = dir + ".tombstones"
 
   /** The `delta-<id>` segment of a store FILE path, parsed relative to
@@ -523,7 +534,7 @@ object Store {
   // full bytes), not inferred from whichever deltas are
   // currently live: two concurrent FIRST deletes with different column
   // names would otherwise both pass the hasData() check and admit a
-  // mixed-schema tombstone store, where antiTombstones' columns.head picks
+  // mixed-schema tombstone store, where dropBanned's columns.head picks
   // one column and the other's bans read as NULL keys — silently never
   // applied by the left_anti join. Same pattern as BloomIndex's .keycols.
   private def tombstoneKeyFile(tsd: String) = new File(tsd + ".keycol")
@@ -574,32 +585,38 @@ object Store {
     appendMaybeIdempotent(keys.distinct(), tsd, id)
   }
 
-  private def antiTombstones(spark: SparkSession, dir: String,
-      df: DataFrame): DataFrame = {
+  /** The store's live tombstones as one single-column frame, or None when
+    * it has none. */
+  private def liveTombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
     val tsd = tombstoneDir(dir)
-    if (!hasData(tsd)) df
+    if (!hasData(tsd)) None
     else {
       val ts = read(spark, tsd)
       require(ts.columns.length == 1,
         s"tombstone store $tsd has a mixed schema ${ts.columns.toSeq} — " +
           "bans in a non-head column would read as NULL keys and be " +
           "silently skipped by the anti join; refusing to serve")
-      val kc = ts.columns.head
-      require(df.columns.contains(kc),
-        s"frame lacks the tombstone key column '$kc' of store $dir")
-      // tombstone key sets are takedown-list-sized; the planner sees the
-      // parquet byte size and auto-broadcasts under the threshold, and a
-      // pathologically large delete backlog degrades to a shuffled anti
-      // join rather than a forced-broadcast OOM
-      df.join(ts.select(ts.col(kc)).distinct(), Seq(kc), "left_anti")
+      Some(ts)
     }
   }
 
+  /** `df` minus the rows whose key the tombstone frame `ts` bans. */
+  private def dropBanned(dir: String, df: DataFrame, ts: DataFrame): DataFrame = {
+    val kc = ts.columns.head
+    require(df.columns.contains(kc),
+      s"frame lacks the tombstone key column '$kc' of store $dir")
+    // tombstone key sets are takedown-list-sized; the planner sees the
+    // parquet byte size and auto-broadcasts under the threshold, and a
+    // pathologically large delete backlog degrades to a shuffled anti
+    // join rather than a forced-broadcast OOM
+    df.join(ts.select(ts.col(kc)).distinct(), Seq(kc), "left_anti")
+  }
+
   /** [[read]] minus live tombstones — what a consumer of a store with
-    * deletes must read. Equal to [[read]] once [[compactWithDeletes]]
-    * consumed every tombstone. */
+    * deletes must read. Equal to [[read]] once [[compact]] consumed every
+    * tombstone. */
   def readLive(spark: SparkSession, dir: String): DataFrame =
-    antiTombstones(spark, dir, read(spark, dir))
+    suppressDeleted(spark, dir, read(spark, dir))
 
   /** Apply a store's live tombstones to an arbitrary frame — composition
     * point for the index lookups ([[BloomIndex.lookupIndexed]],
@@ -607,44 +624,7 @@ object Store {
     * w.r.t. deletes but whose ROWS must still be suppressed until the
     * deleting compaction runs. */
   def suppressDeleted(spark: SparkSession, dir: String, df: DataFrame): DataFrame =
-    antiTombstones(spark, dir, df)
-
-  /** [[compact]] that also applies and consumes tombstones: the rewrite
-    * anti-joins the FROZEN tombstone image (drop precedes the caller's
-    * `rewrite`, so a sum-merge never re-aggregates banned rows), and after
-    * the swap promotes, the consumed tombstone deltas are retired —
-    * physically dropped rows need no further suppression, and a key
-    * re-admitted later is visible again. Tombstones admitted WHILE the
-    * rewrite runs are not in the frozen image: they stay live (reads keep
-    * suppressing) and the next cycle consumes them. A crash between the
-    * swap and the retire only re-applies consumed tombstones to already-
-    * dropped rows — a no-op; the retire is retried next cycle. */
-  def compactWithDeletes(spark: SparkSession, dir: String, numFiles: Int = 8,
-      rewrite: DataFrame => DataFrame = identity,
-      clusterBy: Seq[String] = Nil, zOrder: Boolean = false): Unit =
-    withCompactionLease(dir) {
-      recoverStale(dir)
-      sweepStaleStaging(dir)
-      val tsd = tombstoneDir(dir)
-      if (!hasData(tsd))
-        compactImage(spark, dir, read(spark, dir), numFiles, rewrite,
-          clusterBy, zOrder)
-      else {
-        val ts = read(spark, tsd)
-        val kc = ts.columns.head
-        // frozen at the image's own file index — the same no-loss
-        // reasoning as compactImage's includedIds
-        val consumed: Seq[String] = ts.inputFiles.flatMap(p =>
-          deltaSegment(tsd, p)).distinct.toSeq
-        val keys = ts.select(ts.col(kc)).distinct()
-        compactImage(spark, dir, read(spark, dir), numFiles,
-          img => rewrite(img.join(keys, Seq(kc), "left_anti")),
-          clusterBy, zOrder)
-        // retire consumed tombstone deltas; their .admitted- markers stay,
-        // so a replayed deleteByKeys(id) is a no-op forever
-        consumed.foreach(d => rm(new File(tsd, d)))
-      }
-    }
+    liveTombstones(spark, dir).fold(df)(dropBanned(dir, df, _))
 
   /** What a [[compactSelective]] pass did — observability for specs,
     * bench, and operators sizing their maintenance cadence. */
@@ -706,24 +686,13 @@ object Store {
         SelectiveCompaction(0, 0, keep.length, 0L)
       else {
         // explicit fold-set file list (r13): the fold members are already
-        // known driver-side, so a bounded fold reads them through the
-        // driver-statted path — no listing job, no footer-merge job. The
-        // per-delta listing is [[liveFiles]] — RECURSIVE and hidden-aware,
-        // exactly the file set the >256-file recursiveFileLookup fallback
-        // (and Store.read) sees — so a nested directory or an oddly-named
-        // data file inside a delta can never be silently excluded from the
-        // rewrite image by the bounded path alone (ADVICE r13).
-        val foldFiles: Seq[String] = (deltas.toSeq.flatMap(d =>
-          liveFiles(d.getAbsolutePath)) ++
-          foldBase.toSeq.map(f =>
-            new org.apache.hadoop.fs.Path(f.toURI).toString))
-        val image =
-          if (foldFiles.nonEmpty && foldFiles.size <= 256)
-            readFiles(spark, foldFiles)
-          else spark.read
-            .option("recursiveFileLookup", "true")
-            .option("mergeSchema", "true")
-            .parquet((deltas ++ foldBase).map(_.getAbsolutePath).toSeq: _*)
+        // known driver-side. The per-delta listing is [[liveFiles]] —
+        // RECURSIVE and hidden-aware, exactly the file set [[read]] sees —
+        // so a nested directory or an oddly-named data file inside a delta
+        // can never be silently excluded from the rewrite image (ADVICE r13)
+        val image = readFiles(spark,
+          deltas.toSeq.flatMap(d => liveFiles(d.getAbsolutePath)) ++
+            foldBase.toSeq.map(f => new org.apache.hadoop.fs.Path(f.toURI).toString))
         val tgt = if (targetBytes > 0) targetBytes else 2 * minFileBytes
         // capped at the folded INPUT file count: the fold only ever merges
         // (a byte-derived count above it would make the clustered path
@@ -1060,15 +1029,19 @@ object Store {
     * (`numFiles` is then ignored; output files are sized 2x
     * minFileBytes). The default 0 keeps the full rewrite — right for
     * index-sized stores and for stores whose `rewrite` must see every
-    * row (sum-merge pre-aggregation). */
+    * row (sum-merge pre-aggregation, tombstone drops). Returns whether
+    * this call compacted, so an index face knows to heal its stats. */
   def maintain(spark: SparkSession, dir: String, every: Int = 16,
       numFiles: Int = 8, rewrite: DataFrame => DataFrame = identity,
       clusterBy: Seq[String] = Nil, zOrder: Boolean = false,
-      minFileBytes: Long = 0L): Unit =
-    if (every > 0 && deltaCount(dir) >= every) {
+      minFileBytes: Long = 0L): Boolean = {
+    val due = every > 0 && deltaCount(dir) >= every
+    if (due) {
       if (minFileBytes > 0)
         compactSelective(spark, dir, minFileBytes, rewrite = rewrite,
           clusterBy = clusterBy, zOrder = zOrder): Unit
       else compact(spark, dir, numFiles, rewrite, clusterBy, zOrder)
     }
+    due
+  }
 }

@@ -135,20 +135,16 @@ object ZoneMaps {
 
   // ── Incremental face: a zone-mapped Store ─────────────────────────────
   //
-  // The range-scan sibling of [[BloomIndex]]'s bloom-indexed Store, with
-  // the identical admission/heal protocol: each admitted delta carries its
-  // per-file min/max stats into a SIBLING stats store under the same
-  // idempotency id, lookups treat the map as a conservative ACCELERATOR
-  // (a live data file the stats do not cover is read unconditionally —
-  // crash window and compaction renames degrade pruning to scanning,
-  // never correctness), and maintainIndex heals both directions. The one
-  // thing the range face needs that the bloom face does not: the DATA
-  // store's maintenance compaction must be order-preserving
+  // The range-scan sibling of [[BloomIndex]]'s bloom-indexed Store, on the
+  // same [[StatsIndex]] admission/heal protocol: each admitted delta
+  // carries its per-file min/max stats into a SIBLING stats store, a live
+  // data file the stats do not cover is read unconditionally, and
+  // maintainIndex heals both directions. The one thing the range face
+  // needs that the bloom face does not: the DATA store's maintenance
+  // compaction must be order-preserving
   // ([[Store.compact]]'s `clusterBy`) — a round-robin rewrite gives every
   // compacted file the full key range and nothing prunes ever again
   // (spec-pinned both ways in ZoneMapStoreSpec).
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def statsFor(dataFiles: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "track at least one column")
@@ -356,13 +352,22 @@ object ZoneMaps {
   private val statsCache = new ServeCache[(org.apache.spark.sql.types.StructType,
     java.util.List[org.apache.spark.sql.Row])]
 
+  private val index = new StatsIndex("zone", "zm-", statsCache)
+
+  /** The index face's stats function: ranges for exactly `files` — from
+    * their footers when exact ([[statsForPaths]]), else one scan of the
+    * tracked columns — in one file (|files| short rows). */
+  private def fileStats(spark: SparkSession, cols: Seq[String])(
+      files: Seq[String]): DataFrame =
+    statsForPaths(spark, files, cols).coalesce(1)
+
   /** The stats table as a DataFrame — served from the driver cache, or
     * read from parquet when over budget. Both feed the identical decision
     * expressions downstream. */
   private def statsTable(spark: SparkSession, statsDir: String): DataFrame = {
-    // liveFiles + readFiles: the refresh pays ONE collect job (Store.read's
-    // mergeSchema option would add a distributed footer-merge job first)
-    def read() = Store.readFiles(spark, Store.liveFiles(statsDir))
+    // the refresh pays ONE collect job (a bounded Store.read merges
+    // footers on the driver)
+    def read() = Store.read(spark, statsDir)
     statsCache.get(statsDir) {
       val df = read()
       (df.schema, java.util.Arrays.asList(df.collect(): _*))
@@ -392,50 +397,15 @@ object ZoneMaps {
 
   /** Admit `df` into the data Store AND its per-file ranges into the
     * sibling stats Store, both under the same idempotency id (the
-    * [[BloomIndex.admitIndexed]] protocol — replays no-op on both sides,
+    * [[StatsIndex]] protocol — replays no-op on both sides,
     * a replay that finds data admitted but stats missing heals the
     * stats). For the ranges to PRUNE, shape the batch before admitting
     * (`repartitionByRange` + `sortWithinPartitions` on the tracked
     * columns); an unshaped admit is merely unprunable, never wrong.
     * Returns whether this call admitted the data batch. */
   def admitIndexed(df: DataFrame, dataDir: String, statsDir: String,
-      cols: Seq[String], id: String): Boolean = {
-    val spark = df.sparkSession
-    val admitted = Store.appendIdempotent(df, dataDir, id)
-    val delta = new java.io.File(dataDir, s"delta-$id")
-    if (delta.exists()) {
-      try {
-        // delta files listed driver-side; stats come from their footers
-        // when exact (statsForPaths), else one scan of the tracked columns
-        val deltaFiles = Store.liveFiles(delta.toString)
-        if (deltaFiles.isEmpty)
-          log.warn(s"zone stats for delta-$id skipped (delta compacted " +
-            "away mid-admission; maintainIndex heals)")
-        else {
-          val stats = statsForPaths(spark, deltaFiles, cols)
-            .coalesce(1) // |delta files| short rows
-          Store.appendIdempotent(stats, statsDir, s"zm-$id"): Unit
-        }
-      } catch {
-        // same tolerance contract as the bloom face: a path-shaped
-        // failure is the delta-vs-compaction listing race (heal covers
-        // the renamed file); other analysis errors are deterministic
-        // misconfiguration and must surface
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage != null && (
-              e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("Path does not exist")) =>
-          log.warn(s"zone stats for delta-$id skipped (delta compacted " +
-            s"away mid-admission; maintainIndex heals): ${e.getMessage}")
-        case e: org.apache.spark.sql.AnalysisException => throw e
-        case scala.util.control.NonFatal(e) =>
-          log.warn(s"zone stats for delta-$id skipped (data admitted; " +
-            s"file stays uncovered until maintainIndex heals)", e)
-      }
-      statsCache.invalidate(statsDir)
-    }
-    admitted
-  }
+      cols: Seq[String], id: String): Boolean =
+    index.admit(df, dataDir, statsDir, id)(fileStats(df.sparkSession, cols))
 
   /** Range scan over a zone-mapped Store. Decision per LIVE data file, by
     * ONE projection of the stats rows ([[decide]]: no Spark job when the
@@ -450,15 +420,13 @@ object ZoneMaps {
       statsDir: String, preds: Seq[(String, Column, Column)])
       : (DataFrame, (Int, Int)) = {
     require(preds.nonEmpty, "at least one range conjunct")
-    // driver-side listing (no schema-merge job per probe — the
-    // BloomIndex.lookupIndexedMulti rationale)
     val live = Store.liveFiles(dataDir).toSet
     val rows =
       if (!Store.hasData(statsDir)) Map.empty[String, Row]
       else decide(statsTable(spark, statsDir), live, Seq(intersects(preds)))._1
     val files = live.toSeq.sorted.filter(f => rows.get(f).forall(_.getBoolean(0)))
     val df =
-      if (files.isEmpty) Store.readBounded(spark, dataDir).filter(lit(false))
+      if (files.isEmpty) Store.read(spark, dataDir).filter(lit(false))
       else Store.readFiles(spark, files).filter(rowPred(preds))
     (df, (files.length, live.size))
   }
@@ -524,7 +492,7 @@ object ZoneMaps {
        // no files to scan: an empty frame of the data's schema still types
        // the answer; an empty store has no schema, and only COUNT answers
        else if (live.isEmpty) spark.emptyDataFrame
-       else Store.readBounded(spark, dataDir).filter(lit(false)))
+       else Store.read(spark, dataDir).filter(lit(false)))
         .select(cols.map(c => c.scan.as(c.name)): _*)
     val types = scanned.select(cols.map(c => c.fold(col(c.name)).as(c.name)): _*)
       .schema
@@ -668,19 +636,15 @@ object ZoneMaps {
       clusterBy: Option[Seq[String]] = None, // None → cols; Some(Nil) → bin-pack
       zOrder: Boolean = false,
       minFileBytes: Long = 0L): Unit =
-    if (every > 0 && Store.deltaCount(dataDir) >= every) {
-      // minFileBytes > 0: selective fold — kept files keep their names so
-      // their zone stats stay valid; the folded output is range-clustered
-      // on its own slice (kept files keep their narrow ranges, new files
-      // get theirs — overlap across the two generations only widens the
-      // boundary set, it never breaks the conservative pruning contract)
-      if (minFileBytes > 0)
-        Store.compactSelective(spark, dataDir, minFileBytes,
-          clusterBy = clusterBy.getOrElse(cols), zOrder = zOrder): Unit
-      else Store.compact(spark, dataDir, numFiles, identity,
-        clusterBy.getOrElse(cols), zOrder)
+    // minFileBytes > 0: selective fold — kept files keep their names so
+    // their zone stats stay valid; the folded output is range-clustered
+    // on its own slice (kept files keep their narrow ranges, new files
+    // get theirs — overlap across the two generations only widens the
+    // boundary set, it never breaks the conservative pruning contract)
+    if (Store.maintain(spark, dataDir, every, numFiles,
+        clusterBy = clusterBy.getOrElse(cols), zOrder = zOrder,
+        minFileBytes = minFileBytes))
       maintainIndex(spark, dataDir, statsDir, cols)
-    }
 
   /** Heal the index: build ranges for live-but-uncovered data files (one
     * pass over just those files) and compact the stats store down to rows
@@ -689,36 +653,6 @@ object ZoneMaps {
     * the healed ranges will all straddle everything (correct, unpruned).
     * The stats rewrite is size-targeted, never a hardcoded single task. */
   def maintainIndex(spark: SparkSession, dataDir: String, statsDir: String,
-      cols: Seq[String]): Unit = {
-    import spark.implicits._
-    // driver-side listing (r13): Store.read(...).inputFiles paid a
-    // distributed footer-merge job just to learn the live file NAMES
-    val live = Store.liveFiles(dataDir).toSet
-    val covered: Set[String] =
-      if (Store.hasData(statsDir))
-        Store.readFiles(spark, Store.liveFiles(statsDir))
-          .select($"file").as[String].collect().toSet
-      else Set.empty
-    val missing = (live -- covered).toSeq.sorted
-    if (missing.nonEmpty)
-      Store.append(
-        statsForPaths(spark, missing, cols).coalesce(1),
-        statsDir)
-    // rewrite only when there is something to clean (stale rows for dead
-    // files, or enough heal deltas accreted) — the BloomIndex.maintainIndex
-    // rationale; every serve drops stale rows by file name either way
-    // ([[decide]]), so a skipped hygiene pass is result-invisible
-    val dead = covered -- live
-    if (Store.hasData(statsDir) &&
-        (dead.nonEmpty || Store.deltaCount(statsDir) >= 8)) {
-      // live listing recomputed INSIDE the rewrite, at image time — the
-      // same no-lost-stats reasoning as BloomIndex.maintainIndex
-      Store.compactToFileSize(spark, statsDir, targetBytes = 64L << 20,
-        rewrite = { stats =>
-          val liveNow = Store.liveFiles(dataDir).toDF("file")
-          stats.join(broadcast(liveNow), Seq("file"), "left_semi")
-        }): Unit
-    }
-    statsCache.invalidate(statsDir)
-  }
+      cols: Seq[String]): Unit =
+    index.heal(spark, dataDir, statsDir)(fileStats(spark, cols))
 }

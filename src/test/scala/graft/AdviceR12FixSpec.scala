@@ -123,7 +123,7 @@ class AdviceR12FixSpec extends AnyFunSuite {
       Store.append(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), dir)
       assert(Store.deleteByKeys(Seq(1L).toDF("id"), dir, Some("d1")))
       // consume + retire every tombstone: the tombstone store is empty again
-      Store.compactWithDeletes(spark, dir, numFiles = 1)
+      Store.compact(spark, dir, numFiles = 1)
       assert(!Store.hasData(Store.tombstoneDir(dir)),
         "tombstones must be retired by the deleting compaction")
       // the key column must survive retirement — a differently-keyed
@@ -162,7 +162,7 @@ class AdviceR12FixSpec extends AnyFunSuite {
       // deletes: consumed tombstones must physically retire so a
       // re-admitted key becomes visible again
       assert(Store.deleteByKeys(Seq(1L).toDF("id"), dir, Some("d1")))
-      Store.compactWithDeletes(spark, dir, numFiles = 1)
+      Store.compact(spark, dir, numFiles = 1)
       assert(!Store.hasData(Store.tombstoneDir(dir)),
         "tombstone deltas must retire even under an ancestor delta-* dir")
       Store.append(Seq((1L, "back")).toDF("id", "v"), dir)

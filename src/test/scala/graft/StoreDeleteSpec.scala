@@ -51,7 +51,7 @@ class StoreDeleteSpec extends AnyFunSuite {
       assert(Store.read(spark, dir).count() == 20)
       // replay of the delete id: no-op
       assert(!Store.deleteByKeys(banned.toDF("id"), dir, Some("d1")))
-      Store.compactWithDeletes(spark, dir, numFiles = 2)
+      Store.compact(spark, dir, numFiles = 2)
       // physical drop: the PLAIN read no longer holds the banned rows
       assert(Store.read(spark, dir).select($"id").as[Long].collect().toSet ==
         ((1L to 20L).toSet -- banned))
@@ -74,7 +74,7 @@ class StoreDeleteSpec extends AnyFunSuite {
       assert(Store.appendIdempotent(rows(Seq(2L)), dir, "b2"))
       assert(Store.readLive(spark, dir).select($"id").as[Long].collect().toSet ==
         Set(1L, 3L))
-      Store.compactWithDeletes(spark, dir, numFiles = 1)
+      Store.compact(spark, dir, numFiles = 1)
       // tombstone consumed (BOTH copies of key 2 dropped with it)
       assert(Store.read(spark, dir).select($"id").as[Long].collect().toSet ==
         Set(1L, 3L))
@@ -108,7 +108,7 @@ class StoreDeleteSpec extends AnyFunSuite {
         li.filter($"l_orderkey" === other).count())
       // deleting compaction + heal: lookup of the banned key is now empty
       // even unsuppressed, and pruning works again
-      Store.compactWithDeletes(spark, dataDir, numFiles = 2)
+      Store.compact(spark, dataDir, numFiles = 2)
       BloomIndex.maintainIndex(spark, dataDir, statsDir, "l_orderkey")
       val (hit3, (read3, total3)) = BloomIndex.lookupIndexed(spark, dataDir,
         statsDir, "l_orderkey", lit(key))
@@ -166,7 +166,7 @@ class StoreDeleteSpec extends AnyFunSuite {
               bannedLive ++= banned
             }
           case _ => // deleting compaction (also consumes the tombstones)
-            Store.compactWithDeletes(spark, dir,
+            Store.compact(spark, dir,
               numFiles = 1 + rnd.nextInt(2))
             bannedLive = Set.empty
         }
@@ -177,7 +177,7 @@ class StoreDeleteSpec extends AnyFunSuite {
           s"step $step: live read diverged from the model")
       }
       // final deleting compaction: physical state == model too
-      Store.compactWithDeletes(spark, dir, numFiles = 1)
+      Store.compact(spark, dir, numFiles = 1)
       val phys = Store.read(spark, dir).groupBy($"id").count()
         .as[(Long, Long)].collect().toMap
       assert(phys == model.map { case (k, v) => k -> v.toLong })
