@@ -40,6 +40,12 @@ import org.apache.spark.sql.SparkSession
   * normalized numbers across rounds; raw numbers remain the within-round
   * truth.
   *
+  * Every timed run is one [[JobMetrics]] scope tagged with its query, so
+  * each query also gets a `profile`: the jobs, stages, tasks, executor
+  * time, shuffle bytes, spill and driver gap of its last successful run,
+  * split by phase on the faces that wrap their steps in
+  * [[queries.Phases.time]].
+  *
   * Output goes to two places:
   *  - the COMPLETE result (full-precision median / min / per-run maps) is
   *    written to `target/bench.json` (override: SPARK_GRAFT_BENCH_OUT) so the
@@ -50,29 +56,6 @@ import org.apache.spark.sql.SparkSession
   *    so the whole line fits comfortably inside a ~2 KB tail window.
   */
 object Bench {
-
-  /** Per-task shuffle read/write + spill accumulator (VERDICT r10 task 5):
-    * the "ids-only shuffle" claims were plan pins; this makes them NUMBERS.
-    * One listener lives for the whole session; per-query attribution is by
-    * snapshot-delta around each timed run, with the async listener bus
-    * drained before every snapshot so a stage's task metrics cannot land
-    * in the next query's bucket. */
-  private final class ShuffleListener extends org.apache.spark.scheduler.SparkListener {
-    private val read = new java.util.concurrent.atomic.AtomicLong
-    private val write = new java.util.concurrent.atomic.AtomicLong
-    private val spill = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.remoteBytesRead +
-          m.shuffleReadMetrics.localBytesRead): Unit
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled): Unit
-      }
-    }
-    def snap(): (Long, Long, Long) = (read.get, write.get, spill.get)
-  }
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -158,13 +141,12 @@ object Bench {
       val best = ts.sorted.take(runs)
       best.last <= best.head * 1.25 || best.last - best.head <= 0.05
     }
-    val shuffleListener = new ShuffleListener
-    spark.sparkContext.addSparkListener(shuffleListener)
-    // per-query shuffle volume (bytes read/written + spilled) from the last
-    // successful timed run of each task — runs of one query move the same
-    // bytes, so the last is as representative as a mean and needs no division
-    val shuffleByName =
-      scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
+    val metrics = JobMetrics.register(spark)
+    // each task's job record from its last successful timed run — runs of
+    // one query launch the same jobs, so the last is as representative as
+    // a mean and needs no division — and its least wall time per phase
+    val profiles = scala.collection.mutable.LinkedHashMap.empty[String, JobMetrics.Profile]
+    val phaseWalls = scala.collection.mutable.Map.empty[String, Map[String, Double]]
     def timed(tasks: Seq[(String, () => Unit)]): Seq[(String, Seq[Double])] =
       tasks.map { case (name, run) =>
         (1 to warmup).foreach { i =>
@@ -182,15 +164,17 @@ object Bench {
           // is query 3 or query 103 of the session
           spark.catalog.clearCache()
           System.gc()
-          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-          val s0 = shuffleListener.snap()
-          val t0 = System.nanoTime()
           try {
-            run()
-            times += (System.nanoTime() - t0) / 1e9
-            org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-            val s1 = shuffleListener.snap()
-            shuffleByName(name) = (s1._1 - s0._1, s1._2 - s0._2, s1._3 - s0._3)
+            val (t, profile) = metrics.measure(name) {
+              val t0 = System.nanoTime()
+              run()
+              (System.nanoTime() - t0) / 1e9
+            }
+            times += t
+            profiles(name) = profile
+            phaseWalls(name) = profile.phases.map { case (ph, r) =>
+              ph -> phaseWalls.get(name).flatMap(_.get(ph)).fold(r.wallS)(_ min r.wallS)
+            }
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $name run $attempts failed: ${e.getMessage}")
           }
@@ -241,46 +225,6 @@ object Bench {
           noopSave(shared.corpus)
         } finally shared.close()
       })))
-    // ---- phase-split timing for the store-backed faces (VERDICT r9 task
-    // 3): each of these queries' headline number deliberately prices a
-    // throwaway-store build + N admissions + a serve in one figure. The
-    // production reader needs them apart — a deployment amortizes build
-    // across its lifetime and admissions across micro-batches, paying only
-    // SERVE per query. The faces are instrumented with queries.Phases
-    // wrappers (no-ops outside this collector); two samples each, per-phase
-    // min (discards a GC/JIT spike; phases are attribution, not the
-    // headline statistic — the headline stays the `queries` median above).
-    val phasedNames = Seq("sim_ivf_served", "sim_ivf_served_sq8",
-      "events_pagerank_incremental", "mv_orders_incremental",
-      "events_resample_incremental", "dedup_chunks_incremental",
-      "events_bitmap_incremental", "events_bitmap_window",
-      "text_bm25_search", "text_search_index", "text_phrase_search",
-      "q83_bloom_indexed_store", "q84_zone_indexed_store",
-      "q85_join_file_pruning", "q86_bloom_lookup_batch",
-      "q87_zone_count_pushdown")
-    val phases: Seq[(String, Map[String, Double])] =
-      (if (args.nonEmpty) Nil
-       else phasedNames.flatMap(n => SparkEntry.queries.get(n).map(n -> _)))
-        .flatMap { case (name, fn) =>
-          val samples = (1 to 2).flatMap { i =>
-            spark.catalog.clearCache()
-            System.gc()
-            try {
-              val (df, ph) = queries.Phases.collecting(fn(spark, sfDir))
-              noopSave(df)
-              Some(ph)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] $name phase run $i failed: ${e.getMessage}")
-              None
-            }
-          }
-          if (samples.isEmpty) None
-          else {
-            val keys = samples.flatMap(_.keys).distinct
-            Some(name -> keys.map(k =>
-              k -> samples.map(_.getOrElse(k, 0.0)).min).toMap)
-          }
-        }
     // ---- serve-path lookup latency (VERDICT r10 stretch): q82/q83 price
     // the whole build/admit/heal protocol; a serving deployment quotes the
     // per-lookup latency against a WARM store. Build one bloom-indexed
@@ -397,18 +341,31 @@ object Bench {
     // ("*" for local[*]) and an unquoted value would corrupt the JSON
     val header = s""""metric":"total","value":$total,"unit":"sec","runs":$runs,""" +
       s""""cpus":"$cpus","sf":"$sfDir","failures":$failures"""
-    def fmtPhases = phases.map { case (name, ph) =>
+    // ---- phase-split timing for the store-backed faces (VERDICT r9 task
+    // 3): each of these queries' headline number deliberately prices a
+    // throwaway-store build + N admissions + a serve in one figure. The
+    // production reader needs them apart — a deployment amortizes build
+    // across its lifetime and admissions across micro-batches, paying only
+    // SERVE per query. Their timed runs carry queries.Phases tags; stdout
+    // reports each phase's least wall time over those runs (discards a
+    // GC/JIT spike; phases are attribution, not the headline statistic).
+    val phasedNames = Seq("sim_ivf_served", "sim_ivf_served_sq8",
+      "events_pagerank_incremental", "mv_orders_incremental",
+      "events_resample_incremental", "dedup_chunks_incremental",
+      "events_bitmap_incremental", "events_bitmap_window",
+      "text_bm25_search", "text_search_index", "text_phrase_search",
+      "q83_bloom_indexed_store", "q84_zone_indexed_store",
+      "q85_join_file_pruning", "q86_bloom_lookup_batch",
+      "q87_zone_count_pushdown")
+    def fmtPhases = phasedNames.flatMap(n => phaseWalls.get(n).map(n -> _))
+      .map { case (name, ph) =>
       "\"" + name + "\":" + ph.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + round3(v) }
         .mkString("{", ",", "}")
     }.mkString("{", ",", "}")
-    // per-query shuffle volume: file-JSON only (184 entries would blow the
+    // per-task job records: file-JSON only (193 entries would blow the
     // stdout tail window); bytes, so PERF_NOTES can argue bounds directly
-    val shuffleJson = results
-      .flatMap { case (k, _) => shuffleByName.get(k).map(k -> _) }
-      .map { case (k, (r, w, s)) =>
-        "\"" + k + s"""":{"read":$r,"write":$w,"spill":$s}"""
-      }
+    val profileJson = profiles.map { case (k, p) => "\"" + k + "\":" + p.json }
       .mkString("{", ",", "}")
     val lookupsJson = (lookups.map { case (p50, p95, n, batch) =>
       s""""bloom_point_lookup":{"p50":${round3(p50)},"p95":${round3(p95)},""" +
@@ -421,7 +378,7 @@ object Bench {
       s""""queries":${fmt(bestMedian)},"queries_min":${fmt(_.min)},""" +
       s""""queries_norm":${fmt(normed)},""" +
       s""""queries_runs":$perRun,"composed":${fmtSeq(composed, bestMedian)},""" +
-      s""""phases":$fmtPhases,"shuffle":$shuffleJson,""" +
+      s""""phases":$fmtPhases,"profile":$profileJson,""" +
       s""""lookups":$lookupsJson,""" +
       s""""bench_file":"$outPath"}"""
     val p = Paths.get(outPath)

@@ -6,24 +6,52 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions._
 
-/** Spark-native plugin registration: enable every graft extension at session
-  * build time with
+/** The one setup path for graft's planner and SQL surface: enable every
+  * graft extension at session build time with
   *
   * {{{
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
-  * (or `.withExtensions(new GraftExtensions)`), instead of calling the
-  * per-session `GraftFunctions.register` / `AsOf.register` imperatively.
-  * This is the deployment path for clusters where the session is built by
-  * the platform (Thrift server, Connect, notebooks): the custom as-of join
-  * strategy and the SQL-callable codegen expressions are present in every
-  * session without user code running first. */
+  * (or `.withExtensions(new GraftExtensions)`). Every engine session —
+  * Bench, Verify, the specs' shared session, a platform-built session
+  * (Thrift server, Connect, notebooks) — gets the as-of join strategy,
+  * the plan rules and all 18 SQL-callable functions without user code
+  * running first; there is no per-session registration call. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "scala_udf")
+
+  /** The Int value of literal argument `what` of `fn`: a foldable gate
+    * first (eval() on a column reference would surface as an opaque
+    * internal error), then any integral type (users write 2, 2L or
+    * CAST(2 AS BIGINT) interchangeably), then an exact range check. */
+  private def intLiteral(e: Expression, fn: String, what: String): Int = {
+    if (!e.foldable) throw new IllegalArgumentException(
+      s"$fn: $what must be an integer literal, got non-literal $e")
+    e.eval() match {
+      case n @ (_: Byte | _: Short | _: Int | _: Long) =>
+        try Math.toIntExact(n.asInstanceOf[Number].longValue)
+        catch { case _: ArithmeticException =>
+          throw new IllegalArgumentException(s"$fn: $what $n overflows Int")
+        }
+      case other => throw new IllegalArgumentException(
+        s"$fn: $what must be an integer literal, got $other")
+    }
+  }
+
+  private def stringLiteral(e: Expression, fn: String, what: String): String =
+    (if (e.foldable) e.eval() else null) match {
+      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+      case other => throw new IllegalArgumentException(
+        s"$fn: $what must be a non-null string literal, got " +
+          (if (e.foldable) s"$other" else s"non-literal $e"))
+    }
+
+  private def arity(fn: String, wanted: String, got: Seq[Expression]) =
+    new IllegalArgumentException(s"$fn takes $wanted arguments, got ${got.length}")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
@@ -68,25 +96,39 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         exprs => DeflatedSize(exprs.head)),
       ("pq_adc_score",
         "pq_adc_score(codes, table, ks) - PQ asymmetric-distance sum of per-subspace table lookups",
-        exprs => {
-          if (exprs.length != 3) throw new IllegalArgumentException(
-            s"pq_adc_score takes 3 arguments (codes, table, ks), got ${exprs.length}")
-          PqAdcScore(exprs(0), exprs(1), {
-            val e = exprs(2)
-            // foldable-first: a column reference must fail with THIS message,
-            // not an opaque eval-time error (the GraftFunctions.intK rule);
-            // any integral foldable is accepted (users write 2 or 2L or
-            // CAST(2 AS BIGINT) interchangeably), range-checked into Int
-            (if (e.foldable) e.eval() else null) match {
-              case i: Int => i
-              case l: Long if l.isValidInt => l.toInt
-              case s: Short => s.toInt
-              case b: Byte => b.toInt
-              case other => throw new IllegalArgumentException(
-                "pq_adc_score ks must be an integer literal, got " +
-                  (if (e.foldable) s"$other" else s"non-literal $e"))
-            }
-          })
+        {
+          case Seq(codes, table, ks) =>
+            PqAdcScore(codes, table, intLiteral(ks, "pq_adc_score", "ks"))
+          case exprs => throw arity("pq_adc_score", "3", exprs)
+        }),
+      ("shingle_hash_set",
+        "shingle_hash_set(text[, k]) - sorted distinct hashes of the k-word shingles (k = 3)",
+        {
+          case Seq(text) => ShingleHashSet(text, 3)
+          case Seq(text, k) => ShingleHashSet(text, intLiteral(k, "shingle_hash_set", "k"))
+          case exprs => throw arity("shingle_hash_set", "1 or 2", exprs)
+        }),
+      ("passjoin_seg_keys",
+        "passjoin_seg_keys(text, k) - index-side PassJoin keys for edit distance k",
+        {
+          case Seq(text, k) => PassJoinSegKeys(text, intLiteral(k, "passjoin_seg_keys", "k"))
+          case exprs => throw arity("passjoin_seg_keys", "2", exprs)
+        }),
+      ("passjoin_sub_keys",
+        "passjoin_sub_keys(text, k) - probe-side PassJoin keys for edit distance k",
+        {
+          case Seq(text, k) => PassJoinSubKeys(text, intLiteral(k, "passjoin_sub_keys", "k"))
+          case exprs => throw arity("passjoin_sub_keys", "2", exprs)
+        }),
+      ("command_reduce",
+        "command_reduce(rec, cmd[, batchSize]) - records left after MaRe's reduce command folds each group",
+        {
+          case Seq(rec, cmd) =>
+            graft.operators.CommandReduceAgg(rec, stringLiteral(cmd, "command_reduce", "command"))
+          case Seq(rec, cmd, bs) =>
+            graft.operators.CommandReduceAgg(rec, stringLiteral(cmd, "command_reduce", "command"),
+              batchSize = intLiteral(bs, "command_reduce", "batchSize"))
+          case exprs => throw arity("command_reduce", "2 or 3", exprs)
         }))
     fns.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))

@@ -1,38 +1,20 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Phases
+
 /** Diagnostic main (optimization rounds): run one named query and print
-  * every Spark job it launches — start offset, duration, task count, and
-  * the job's description/callsite — so driver-side job storms (many tiny
-  * scheduler round trips) are visible without the UI. Not part of the
-  * driver contract; used by OPTIMIZATION_r13.md measurements.
+  * every Spark job it launches — start offset, duration, task count, the
+  * phase that launched it (`write` for the jobs that write the returned
+  * frame) and its call site — plus the query's driver gap
+  * (wall time not covered by any job), so driver-side job storms (many
+  * tiny scheduler round trips) are visible without the UI. Not part of
+  * the driver contract; used by OPTIMIZATION_r13.md measurements.
   *
   * Usage: JobProfile <sfDir> <queryName> [repeat]
   */
 object JobProfile {
-  private final class JobLog extends SparkListener {
-    case class J(id: Int, t0: Long, desc: String, var t1: Long = -1L,
-        var tasks: Int = 0)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]
-    val order = new java.util.concurrent.CopyOnWriteArrayList[Int]
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .orElse(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))))
-        .getOrElse("")
-      jobs.put(e.jobId, J(e.jobId, System.nanoTime(), desc,
-        tasks = e.stageInfos.map(_.numTasks).sum))
-      order.add(e.jobId): Unit
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-      val j = jobs.get(e.jobId)
-      if (j != null) j.t1 = System.nanoTime()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
@@ -52,24 +34,22 @@ object JobProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
+    val metrics = JobMetrics.register(spark)
     (1 to repeat).foreach { i =>
-      val log = new JobLog
-      spark.sparkContext.addSparkListener(log)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val total = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      spark.sparkContext.removeSparkListener(log)
-      println(f"== run $i: $name total $total%.3f s, ${log.order.size} jobs")
-      var covered = 0.0
-      log.order.forEach { id =>
-        val j = log.jobs.get(id)
-        val dur = if (j.t1 > 0) (j.t1 - j.t0) / 1e9 else -1.0
-        val off = (j.t0 - t0) / 1e9
-        if (dur > 0) covered += dur
-        println(f"  job $id%4d off=$off%7.3f dur=$dur%7.3f tasks=${j.tasks}%4d  ${j.desc.take(90)}")
+      val (_, p) = metrics.measure(name) {
+        val df = fn(spark, sfDir)
+        Phases.time("write")(df.write.format("noop").mode("overwrite").save())
       }
-      println(f"  [sum of job durations: $covered%.3f s — gap vs total is driver-side]")
+      println(f"== run $i: $name total ${p.total.wallS}%.3f s, ${p.total.jobs} jobs")
+      p.runs.foreach { j =>
+        println(f"  job ${j.id}%4d off=${j.offMs / 1e3}%7.3f dur=${j.durMs / 1e3}%7.3f " +
+          f"tasks=${j.tasks}%4d  ${j.phase}%-6s ${j.site.take(80)}")
+      }
+      println(f"  [driver gap: ${p.total.driverGapS}%.3f s of ${p.total.wallS}%.3f s " +
+        s"(wall not covered by any job); untagged jobs: ${p.untagged}]")
+      p.phases.toSeq.sortBy(_._1).foreach { case (ph, r) =>
+        println(f"  [$ph: ${r.jobs} jobs, driver gap ${r.driverGapS}%.3f s of ${r.wallS}%.3f s]")
+      }
     }
     spark.stop()
   }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Native as-of join (backward and forward) as a first-class operator: custom
-  * `LogicalPlan` + `Strategy` + `SparkPlan`, registered through
-  * `spark.experimental.extraStrategies` — the (c) rung of the extension
+  * `LogicalPlan` + `Strategy` + `SparkPlan`, injected by
+  * [[graft.GraftExtensions]] — the (c) rung of the extension
   * ladder (compose built-ins < custom Expression < custom plan node), used
   * here because an as-of join is whole-operator semantics Spark lacks.
   *
@@ -167,25 +167,19 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Public API: `AsOf.join(purchases, signups, "user_id", "ts", "ts")`. */
+/** Public API: `AsOf.join(purchases, signups, "user_id", "ts", "ts")`.
+  * [[AsOfJoinStrategy]] reaches a session through one setup path,
+  * [[graft.GraftExtensions]] (`spark.sql.extensions`); a session built
+  * without it cannot plan these joins. */
 object AsOf {
-
-  /** Register the strategy once per session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = strategies :+ AsOfJoinStrategy
-  }
 
   /** Backward as-of join: for each left row, append the most recent right
     * row with equal `key` and right `timeRight` <= left `timeLeft`.
     * The two inputs must not share attribute ids (re-read the source rather
     * than reusing one DataFrame for both sides of a self-as-of). */
   def join(left: DataFrame, right: DataFrame, key: String,
-      timeLeft: String, timeRight: String): DataFrame = {
-    register(left.sparkSession)
+      timeLeft: String, timeRight: String): DataFrame =
     plan(left, right, key, timeLeft, timeRight)
-  }
 
   /** Forward as-of join (pandas merge_asof direction='forward'): for each
     * left row, the EARLIEST right row with equal `key` and `timeRight` >=
@@ -194,14 +188,10 @@ object AsOf {
     * backward: one clustered shuffle + sort per side, one merge pass, O(1)
     * partition state. */
   def joinForward(left: DataFrame, right: DataFrame, key: String,
-      timeLeft: String, timeRight: String): DataFrame = {
-    register(left.sparkSession)
+      timeLeft: String, timeRight: String): DataFrame =
     plan(left, right, key, timeLeft, timeRight, forward = true)
-  }
 
-  /** Build the as-of logical plan WITHOUT touching session strategy
-    * registration — for sessions where [[graft.GraftExtensions]] already
-    * injected [[AsOfJoinStrategy]] via `spark.sql.extensions`. */
+  /** The as-of logical plan, backward or `forward`. */
   def plan(left: DataFrame, right: DataFrame, key: String,
       timeLeft: String, timeRight: String, forward: Boolean = false): DataFrame = {
     val spark = left.sparkSession

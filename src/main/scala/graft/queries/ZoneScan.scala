@@ -94,14 +94,16 @@ object ZoneScan {
     * that is still writing. The first failure surfaces, with the second
     * attached as suppressed. There is deliberately no timeout — a wait
     * that gave up would return while the sibling still writes, the same
-    * race again. The halves run on [[admitPool]]. */
+    * race again. The halves run on [[admitPool]], under the caller's
+    * query and phase tags ([[Phases.carried]]). */
   private[graft] def bothAdmits[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.util.{Failure, Success}
     implicit val ec: scala.concurrent.ExecutionContext = admitPool
-    val fa = Future(a)
-    val fb = Future(b)
+    val (ra, rb) = (Phases.carried(a), Phases.carried(b))
+    val fa = Future(ra())
+    val fb = Future(rb())
     (Await.ready(fa, Duration.Inf).value.get,
       Await.ready(fb, Duration.Inf).value.get) match {
       case (Success(x), Success(y)) => (x, y)
@@ -363,8 +365,8 @@ object ZoneScan {
     val base = java.nio.file.Files.createTempDirectory("graft_joinprune_")
     val (dataDir, statsDir) = (s"$base/data", s"$base/stats")
     try {
-      val li = Tables.lineitem(spark, dir)
       Phases.time("admit") {
+        val li = Tables.lineitem(spark, dir)
         val (shaped0, shaped1, release) = shapedHalves(li, "l_orderkey", 32)
         BloomIndex.admitIndexed(shaped0, dataDir, statsDir,
           "l_orderkey", "h0", expectedPerFile = 100000L): Unit

@@ -109,9 +109,11 @@ object Store {
     * per read dominated small stores. An empty listing (a store
     * mid-bootstrap, a missing directory) or a larger one takes Spark's
     * distributed `recursiveFileLookup` + `mergeSchema` read, which also
-    * raises Spark's own error for a store with no data. */
+    * raises Spark's own error for a store with no data. The driver walk
+    * stops at the first file past the cap ([[cappedListing]]), so a
+    * store of 10^6 files is not listed twice. */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val lf = liveFiles(dir)
+    val lf = cappedListing(dir)
     if (lf.nonEmpty && lf.size <= MaxDriverFiles) readFiles(spark, lf)
     else spark.read
       .option("recursiveFileLookup", "true")
@@ -272,7 +274,14 @@ object Store {
     * `.`/`_`-prefixed names skipped at every level) and renders paths
     * exactly like `DataFrame.inputFiles` does, so set comparisons against
     * index stats hold. */
-  private[graft] def liveFiles(dir: String): Seq[String] = {
+  private[graft] def liveFiles(dir: String): Seq[String] = walkLive(dir).toSeq
+
+  /** The first `MaxDriverFiles + 1` of [[liveFiles]]: enough to tell a
+    * store over the cap without walking the rest of its tree. */
+  private[graft] def cappedListing(dir: String): Seq[String] =
+    walkLive(dir).take(MaxDriverFiles + 1).toSeq
+
+  private def walkLive(dir: String): Iterator[String] = {
     def walk(f: File): Iterator[File] = {
       val kids = f.listFiles()
       if (kids == null) Iterator.empty
@@ -280,8 +289,7 @@ object Store {
         .filter(k => !k.getName.startsWith(".") && !k.getName.startsWith("_"))
         .flatMap(k => if (k.isFile) Iterator.single(k) else walk(k))
     }
-    walk(new File(dir))
-      .map(k => new org.apache.hadoop.fs.Path(k.toURI).toString).toSeq
+    walk(new File(dir)).map(k => new org.apache.hadoop.fs.Path(k.toURI).toString)
   }
 
   /** Number of committed delta directories awaiting compaction. */

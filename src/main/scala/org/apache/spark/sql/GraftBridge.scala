@@ -22,11 +22,17 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
   /** Block until queued listener events are delivered (`listenerBus` is
-    * private[spark]) — the bench's shuffle-volume collector must read its
-    * counters only after the async bus drained, or the last stage's task
-    * metrics land in the NEXT query's bucket. */
+    * private[spark]) — `graft.JobMetrics` must read its records only after
+    * the async bus drained, or the last stage's task metrics land in the
+    * NEXT scope. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The JVM's running SparkContext, if any (`SparkContext.getActive` is
+    * private[spark]): the job tags in `graft.queries.Phases` need the
+    * context, and no session may be active on the tagging thread. */
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
 
   /** Free the block-manager storage behind a `localCheckpoint(true)`'d
     * frame as soon as its last consumer is done. Without this the

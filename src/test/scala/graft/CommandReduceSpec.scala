@@ -62,7 +62,6 @@ class CommandReduceSpec extends AnyFunSuite {
   }
 
   test("command_reduce is callable from SQL") {
-    graft.functions.GraftFunctions.register(spark)
     spark.range(100)
       .select(($"id" % 2).as("k"), $"id".cast("string").as("rec"))
       .createOrReplaceTempView("cr_input")

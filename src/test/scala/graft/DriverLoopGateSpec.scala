@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{BpeVocab, Dedup, GraphQueries}
@@ -27,7 +24,8 @@ import graft.queries.{BpeVocab, Dedup, GraphQueries}
   * The assertions pin job-count CEILINGS per path at the counts measured
   * at r14 HEAD (AQE executes each shuffle stage as its own job, so the
   * raw numbers exceed the naive action count) — a regression that
-  * re-introduces a wasted probe job breaches the ceiling. The over-cap
+  * re-introduces a wasted probe job breaches the ceiling. Jobs are the
+  * call's tagged jobs in `TestSpark.metrics`, with none untagged. The over-cap
   * legs pass cap 0; the under-cap legs use each loop's default cap, so a
   * default too small for these inputs fails the under-cap ceiling, and
   * the under-cap leg must launch fewer jobs than the over-cap one. */
@@ -35,18 +33,11 @@ class DriverLoopGateSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
+  /** The Spark jobs `body` launched, none untagged. */
   private def countJobs(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        { n.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      n.get()
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (_, p) = metrics.measure("driver_loop_gate")(body)
+    assert(p.untagged == 0, s"${p.untagged} jobs ran outside the scope's tag")
+    p.total.jobs
   }
 
   test("BPE gate: over-cap input pays zero jobs beyond the distributed loop") {

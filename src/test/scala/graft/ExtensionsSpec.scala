@@ -70,6 +70,28 @@ class ExtensionsSpec extends AnyFunSuite {
     val shape = intercept[Exception](spark.sql(
       "SELECT pq_adc_score(array(7), array(1.0d, 2.0d), 2)").head())
     assert(shape.getMessage.contains("pq_adc_score"), shape.getMessage)
+    // the one setup path carries all 18 functions, MaRe's command_reduce too
+    Seq("simhash64", "dot_product", "cosine_sim", "intersect_size_sorted",
+      "quantize_int8", "max_abs", "dot_int", "language_id", "quality_score",
+      "top_token_count", "text_scan_stats", "char_entropy", "deflated_size",
+      "pq_adc_score", "shingle_hash_set", "passjoin_seg_keys",
+      "passjoin_sub_keys", "command_reduce").foreach { n =>
+      assert(spark.catalog.functionExists(n), s"$n is not injected")
+    }
+    val more = spark.sql(
+      """SELECT simhash64(array('a')) = simhash64(array('a')) AS s,
+        |       intersect_size_sorted(array(1L, 2L), array(2L)) AS i,
+        |       max_abs(array(-2.0d, 1.0d)) AS m,
+        |       deflated_size('aaaaaaaa') > 0 AS dz,
+        |       size(shingle_hash_set('a b c d')) AS sh,
+        |       size(passjoin_seg_keys('abcdefghij', 4)) AS seg,
+        |       size(passjoin_sub_keys('abcdefghij', 4)) > 0 AS sub""".stripMargin)
+      .head()
+    assert(more.toSeq == Seq(true, 1, 2.0, true, 2, 5, true))
+    val reduced = spark.sql(
+      "SELECT command_reduce(CAST(id AS STRING), 'sort -n in.txt | head -1 > out.txt') " +
+        "FROM range(5)").head().getSeq[String](0)
+    assert(reduced == Seq("0"))
   }
 
   test("as-of strategy is planned without calling AsOf.register") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftFunctions, TypedAggregators}
+import graft.functions.TypedAggregators
 import graft.operators.{Pipeline, TextFile}
 
 /** SQL registration of custom expressions, typed Aggregator UDAFs, scalar
@@ -13,7 +13,6 @@ class FunctionsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("non-literal k in passjoin SQL functions raises the intended message") {
-    GraftFunctions.register(spark)
     Seq(("abc", 1)).toDF("text", "k").createOrReplaceTempView("intk_probe")
     val e = intercept[Exception] {
       spark.sql("SELECT passjoin_seg_keys(text, k) FROM intk_probe").collect()
@@ -22,13 +21,25 @@ class FunctionsSpec extends AnyFunSuite {
     // opaque unresolved/NPE internal error from eval() on a column ref
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Seq.empty else t +: chain(t.getCause)
+    def failsWith(sql: String, message: String): Unit = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      assert(chain(e).exists(t => Option(t.getMessage).exists(_.contains(message))),
+        s"wanted '$message' from $sql, got: $e")
+    }
     assert(chain(e).exists(t => Option(t.getMessage).exists(
       _.contains("k must be an integer literal"))),
       s"wanted the friendly literal-k message, got: $e")
+    // shingle_hash_set has the same gate
+    failsWith("SELECT shingle_hash_set(text, k) FROM intk_probe",
+      "shingle_hash_set: k must be an integer literal")
+    // a Long k is range-checked, never truncated (2^32 + 2 would read as 2)
+    failsWith("SELECT passjoin_seg_keys('abcdefghij', 4294967298L)",
+      "passjoin_seg_keys: k 4294967298 overflows Int")
+    assert(spark.sql("SELECT size(passjoin_seg_keys('abcdefghij', 4L))")
+      .head().getInt(0) == 5)
   }
 
   test("custom expressions are callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT
         |  simhash64(array('a','b','c')) AS sh,
@@ -91,8 +102,7 @@ class FunctionsSpec extends AnyFunSuite {
     rows.zip(corpus).foreach { case ((n, c), t) =>
       assert(n == c, s"quality divergence on ${t.take(60)}: native=$n composed=$c")
     }
-    // and via SQL registration
-    GraftFunctions.register(spark)
+    // and via SQL
     val viaSql = spark.sql("SELECT quality_score('the quick brown fox')").head().getDouble(0)
     val viaCol = Seq("the quick brown fox").toDF("t")
       .select(graft.functions.TextFunctions.qualityScore($"t")).head().getDouble(0)

@@ -560,45 +560,30 @@ class PrepOpsSpec extends AnyFunSuite {
 
   test("qualityScreenObserved: gate counters are free riders on the one action") {
     val (df, gate) = DataPipeline.qualityScreenObserved(spark, sf)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val rows = df.collect()
-      def quiesce(): Int = {
-        var last = -1
-        var cur = jobs.get()
-        while (cur != last) { Thread.sleep(200); last = cur; cur = jobs.get() }
-        cur
-      }
-      val afterAction = quiesce()
-      assert(afterAction > 0, "the collect must have run Spark jobs")
-      // reading the gate launches NO further jobs: the metrics rode the
-      // scan/filter stages of the action itself
-      val (nIn, nKept, tokensKept) = (gate.nIn, gate.nKept, gate.tokensKept)
-      assert(quiesce() == afterAction,
-        "Observation.get must not trigger additional Spark jobs")
-      // counters equal independent recomputes
-      val texts = Tables.documents(spark, sf)
-        .select($"doc_id", $"text").as[(Long, String)].collect()
-      assert(nIn == texts.length.toLong)
-      assert(nKept == rows.length.toLong)
-      val keptIds = rows.map(_.getLong(0)).toSet
-      val expTokens = texts.filter(t => keptIds(t._1))
-        .map(t => tokensOf(t._2).length.toLong).sum
-      assert(tokensKept == expTokens,
-        s"tokens_kept $tokensKept vs recomputed $expTokens")
-      // rows equal the driver-facing screen (modulo its presentation sort)
-      val screenRows = DataPipeline.qualityScreen(spark, sf)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-      assert(rows.map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-        == screenRows)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rows, action) = metrics.measure("quality_screen_action")(df.collect())
+    assert(action.total.jobs > 0, "the collect must have run Spark jobs")
+    // reading the gate launches NO further jobs: the metrics rode the
+    // scan/filter stages of the action itself
+    val ((nIn, nKept, tokensKept), read) = metrics.measure("quality_screen_gate")(
+      (gate.nIn, gate.nKept, gate.tokensKept))
+    assert(read.total.jobs == 0, "Observation.get must not trigger additional Spark jobs")
+    assert(action.untagged == 0 && read.untagged == 0,
+      s"${action.untagged + read.untagged} jobs ran outside the scopes' tags")
+    // counters equal independent recomputes
+    val texts = Tables.documents(spark, sf)
+      .select($"doc_id", $"text").as[(Long, String)].collect()
+    assert(nIn == texts.length.toLong)
+    assert(nKept == rows.length.toLong)
+    val keptIds = rows.map(_.getLong(0)).toSet
+    val expTokens = texts.filter(t => keptIds(t._1))
+      .map(t => tokensOf(t._2).length.toLong).sum
+    assert(tokensKept == expTokens,
+      s"tokens_kept $tokensKept vs recomputed $expTokens")
+    // rows equal the driver-facing screen (modulo its presentation sort)
+    val screenRows = DataPipeline.qualityScreen(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+    assert(rows.map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+      == screenRows)
   }
 
   private def docsFixture(rows: Seq[(Long, String, String)]): String = {

@@ -23,6 +23,8 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
+  /** The job record every spec that counts Spark jobs reads. */
+  lazy val metrics: JobMetrics = JobMetrics.register(spark)
 }
 
 class RelationalSpec extends AnyFunSuite {

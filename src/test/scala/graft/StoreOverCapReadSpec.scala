@@ -12,7 +12,8 @@ import graft.sources.Store
   * live files is listed and schema-merged by Spark's distributed
   * `recursiveFileLookup` read instead of on the driver. Pinned against the
   * same rows stored in two files: `read`, `readLive` and `compact` give the
-  * same rows and the same union schema, and `compact` folds every file. */
+  * same rows and the same union schema, and `compact` folds every file.
+  * The driver listing that picks the path stops at `MaxDriverFiles + 1`. */
 class StoreOverCapReadSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -53,6 +54,14 @@ class StoreOverCapReadSpec extends AnyFunSuite {
       // the two stores really take the two read paths
       assert(fileIndex(Store.read(spark, over)) == "InMemoryFileIndex")
       assert(fileIndex(Store.read(spark, under)) == "DriverStattedFileIndex")
+      // read's bounded driver listing stops at the first file past the cap:
+      // all of this store, and no more of a tree holding it twice
+      assert(Store.cappedListing(over).toSet == overFiles.toSet)
+      val twice = s"$base/twice"
+      Seq("a", "b").foreach(d => org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(over), new java.io.File(s"$twice/$d")))
+      assert(Store.liveFiles(twice).size == 2 * overFiles.size)
+      assert(Store.cappedListing(twice).size == Store.MaxDriverFiles + 1)
 
       val union = Seq("id" -> LongType, "v" -> LongType, "tag" -> StringType)
       assert(schemaOf(Store.read(spark, over)) == union)

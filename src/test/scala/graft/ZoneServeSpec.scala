@@ -1,9 +1,5 @@
 package graft
 
-import java.util.UUID
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,29 +25,11 @@ class ZoneServeSpec extends AnyFunSuite {
 
   private type Preds = Seq[(String, Column, Column)]
 
-  /** The value of `body` and the Spark jobs it launched. */
+  /** The value of `body` and the Spark jobs it launched, none untagged. */
   private def jobsOf[A](body: => A): (A, Int) = {
-    val group = s"zone_serve_${UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          jobs.incrementAndGet(): Unit
-        }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try {
-      val a = body
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      (a, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (a, p) = metrics.measure("zone_serve")(body)
+    assert(p.untagged == 0, s"${p.untagged} jobs ran outside the scope's tag")
+    (a, p.total.jobs)
   }
 
   private def withBudget[A](bytes: Long)(body: => A): A = {

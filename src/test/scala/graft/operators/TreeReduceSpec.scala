@@ -1,14 +1,11 @@
 package graft.operators
 
 import java.io.File
-import java.util.UUID
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Records the (command, stage) of every command run inside a Spark task.
@@ -61,33 +58,16 @@ class TreeReduceSpec extends AnyFunSuite {
   private case class Trace[A](result: A, stageRuns: Seq[Int], jobs: Int, stages: Int)
 
   private def traced[A](command: String)(body: => A): Trace[A] = {
-    val group = s"tree_reduce_${UUID.randomUUID()}"
-    def inGroup(p: java.util.Properties) =
-      p != null && p.getProperty("spark.jobGroup.id") == group
-    val jobs, stages = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (inGroup(e.properties)) { jobs.incrementAndGet(); () }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (inGroup(e.properties)) { stages.incrementAndGet(); () }
-    }
-    val sc = spark.sparkContext
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     CountingRunner.runs.clear()
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
     try {
-      val result = body
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      val (result, p) = metrics.measure("tree_reduce")(body)
+      assert(p.untagged == 0, s"${p.untagged} jobs ran outside the scope's tag")
       val byStage = CountingRunner.runs.asScala.toSeq.filter(_._1 == command)
         .groupBy(_._2).toSeq.sortBy(_._1).map(_._2.size)
-      Trace(result, byStage, jobs.get, stages.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
+      Trace(result, byStage, p.total.jobs, p.total.stages)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   /** 16 partitions with no exchange: a scan-like input. */

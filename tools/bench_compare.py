@@ -8,7 +8,14 @@ uniform 1.78x on unchanged code). When both files carry a `calibration`
 block (r9+), queries are compared through `queries_norm` (seconds divided
 by that session's canonical-Spark-probe median); otherwise the raw ratio
 is reported with a loud caveat. Prints the median ratio, the spread, and
-the per-query tails."""
+the per-query tails.
+
+When both files carry a `profile` map (graft.JobMetrics records), each
+listed mover also shows its job count, shuffle bytes (read + write) and
+driver-gap change, labelled "plan change" when the job count differs or
+the shuffle bytes move by more than 1 % (compressed shuffle sizes jitter
+with row order), and "same plan" otherwise: a same-plan mover moved with
+host weather or driver-side code, not with the jobs it launched."""
 import json, sys, statistics
 
 def load(p):
@@ -57,10 +64,24 @@ def main(old_path, new_path):
         print(f"shared queries: {len(shared)}  median ratio: {med:.3f}")
     worst = sorted(ratios.items(), key=lambda kv: -kv[1])[:8]
     best = sorted(ratios.items(), key=lambda kv: kv[1])[:8]
+    op, np_ = old.get("profile"), new.get("profile")
     print("slowest-moving (new/old):")
-    for k, r in worst: print(f"  {r:6.2f}x  {k}")
+    for k, r in worst: print(f"  {r:6.2f}x  {k}" + profile_delta(op, np_, k))
     print("fastest-moving (new/old):")
-    for k, r in best: print(f"  {r:6.2f}x  {k}")
+    for k, r in best: print(f"  {r:6.2f}x  {k}" + profile_delta(op, np_, k))
+
+def profile_delta(op, np_, k):
+    """Job, shuffle-byte and driver-gap change of query k, and its label;
+    empty unless both files carry k's profile."""
+    if not op or not np_ or k not in op or k not in np_:
+        return ""
+    o, n = op[k], np_[k]
+    shuffle = lambda p: p["shuffle_read"] + p["shuffle_write"]
+    dbytes = shuffle(n) - shuffle(o)
+    moved = abs(dbytes) > 0.01 * max(shuffle(o), 1)
+    label = "plan change" if n["jobs"] != o["jobs"] or moved else "same plan"
+    return (f"  jobs {o['jobs']}->{n['jobs']}  shuffle {dbytes:+d} B"
+            f"  driver gap {n['driver_gap_s'] - o['driver_gap_s']:+.3f} s  [{label}]")
 
 if __name__ == "__main__":
     main(sys.argv[1], sys.argv[2])
