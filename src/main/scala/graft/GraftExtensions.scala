@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 import graft.functions._
 
@@ -17,8 +19,9 @@ import graft.functions._
   * (or `.withExtensions(new GraftExtensions)`). Every engine session —
   * Bench, Verify, the specs' shared session, a platform-built session
   * (Thrift server, Connect, notebooks) — gets the as-of join strategy,
-  * the plan rules and all 18 SQL-callable functions without user code
-  * running first; there is no per-session registration call. */
+  * the plan rules, the filter-literal binding and all 18 SQL-callable
+  * functions without user code running first; there is no per-session
+  * registration call. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
@@ -63,6 +66,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // → exact two-level bitmap aggregation, shuffle volume independent of
     // distinct cardinality — see RewriteDistinctToBitmap's scaladoc
     ext.injectOptimizerRule(_ => graft.plans.RewriteDistinctToBitmap)
+    // bind filter comparison literals as codegen references, so a plan
+    // that differs only in its probe value reuses the compiled class; the
+    // columnar pre-transition hook is the one physical hook that runs in
+    // both the AQE and the non-AQE planning path — see BindFilterLiterals
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.BindFilterLiterals
+    })
     val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
       ("simhash64", "simhash64(tokens) - 64-bit SimHash of a string array",
         exprs => SimHash64(exprs.head)),

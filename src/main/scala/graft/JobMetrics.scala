@@ -68,11 +68,13 @@ final class JobMetrics private (spark: SparkSession) extends SparkListener {
   def measure[A](query: String)(body: => A): (A, Profile) = {
     GraftBridge.drainListenerBus(spark)
     val t0 = System.currentTimeMillis()
+    val compiles0 = compiles
     synchronized(require(open.add(query), s"scope $query is already open"))
     try {
       val (a, walls) = Phases.collecting(Phases.tagged(Phases.QueryProperty, query)(
         Phases.tagged(Phases.PhaseProperty, null)(body)))
       val t1 = System.currentTimeMillis()
+      val compiled = compiles - compiles0
       GraftBridge.drainListenerBus(spark)
       synchronized {
         val mine = jobs.values.filter(_.query.contains(query)).toSeq.sortBy(_.id)
@@ -81,6 +83,7 @@ final class JobMetrics private (spark: SparkSession) extends SparkListener {
           (walls.keySet ++ byPhase.keySet).map(p =>
             p -> record(byPhase.getOrElse(p, Nil), walls.getOrElse(p, Nil))).toMap,
           jobs.values.count(j => !j.query.contains(query) && j.startMs >= t0 && j.startMs <= t1),
+          compiled,
           mine.map(j => Run(j.id, j.phase.getOrElse(""), j.site, j.startMs - t0,
             (if (j.endMs < 0) t1 else j.endMs) - j.startMs, ran(Seq(j)).map(_.tasks).sum))))
       }
@@ -131,15 +134,25 @@ object JobMetrics {
       durMs: Long, tasks: Long)
 
   /** A scope's record, one per phase it ran, the jobs that started
-    * during it without its tag, and its jobs in launch order. */
+    * during it without its tag, the classes codegen compiled while it
+    * ran, and its jobs in launch order. The compile count is read from
+    * Spark's JVM-wide `CodegenMetrics`, so it is kept per scope only:
+    * phases may overlap, and a concurrent scope's compiles count in both. */
   final case class Profile(total: Record, phases: Map[String, Record],
-      untagged: Int, runs: Seq[Run]) {
-    /** The total's fields, `untagged`, and `phases` when it ran any. */
-    def json: String = s"""{${total.fields},"untagged":$untagged""" +
+      untagged: Int, codegenCompiles: Long, runs: Seq[Run]) {
+    /** The total's fields, `untagged`, `codegen_compiles`, and `phases`
+      * when it ran any. */
+    def json: String =
+      s"""{${total.fields},"untagged":$untagged,"codegen_compiles":$codegenCompiles""" +
       (if (phases.isEmpty) "" else phases.toSeq.sortBy(_._1)
         .map { case (p, r) => s""""$p":{${r.fields}}""" }
         .mkString(""","phases":{""", ",", "}")) + "}"
   }
+
+  /** Classes Spark's codegen has compiled in this JVM (cache hits do not
+    * count). */
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Register a listener on `spark`'s context. */
   def register(spark: SparkSession): JobMetrics = {

@@ -46,7 +46,8 @@ object JobProfile {
           f"tasks=${j.tasks}%4d  ${j.phase}%-6s ${j.site.take(80)}")
       }
       println(f"  [driver gap: ${p.total.driverGapS}%.3f s of ${p.total.wallS}%.3f s " +
-        s"(wall not covered by any job); untagged jobs: ${p.untagged}]")
+        s"(wall not covered by any job); untagged jobs: ${p.untagged}; " +
+        s"codegen compiles: ${p.codegenCompiles}]")
       p.phases.toSeq.sortBy(_._1).foreach { case (ph, r) =>
         println(f"  [$ph: ${r.jobs} jobs, driver gap ${r.driverGapS}%.3f s of ${r.wallS}%.3f s]")
       }

@@ -103,21 +103,10 @@ object BloomIndex {
       .head()
     val total = row.getLong(0).toInt
     val files = row.getSeq[String](1)
-    val df = readCandidates(spark, files, col(keyCol) === key,
-      fallbackSchemaFrom = spark.read.parquet(dataPath))
+    val df = Store.readCandidates(spark, files, col(keyCol) === key,
+      emptyFrom = spark.read.parquet(dataPath))
     (df, (files.length, total))
   }
-
-  /** Shared probe tail: read only `files` presenting their union schema
-    * (honoring the Store's schema-evolution contract — a file subset must
-    * not let one sampled footer decide the result schema; the union is
-    * merged driver-side for bounded candidate lists, [[Store.readFiles]])
-    * and apply the residual predicate; an empty candidate set returns an
-    * empty frame shaped by `fallbackSchemaFrom` with no data scan at all. */
-  private def readCandidates(spark: SparkSession, files: Seq[String],
-      pred: Column, fallbackSchemaFrom: => DataFrame): DataFrame =
-    if (files.isEmpty) fallbackSchemaFrom.filter(lit(false))
-    else Store.readFiles(spark, files).filter(pred)
 
   // ── Incremental face: a bloom-indexed Store ────────────────────────────
   //
@@ -331,8 +320,8 @@ object BloomIndex {
       .reduce(_ && _)
     // fallback schema frame is BY-NAME: only built (and only then merging
     // the store's schemas) when the candidate set is empty
-    val df = readCandidates(spark, files, pred,
-      fallbackSchemaFrom = Store.read(spark, dataDir))
+    val df = Store.readCandidates(spark, files, pred,
+      emptyFrom = Store.read(spark, dataDir))
     (df, (files.length, live.size))
   }
 
@@ -405,8 +394,8 @@ object BloomIndex {
     val perKey: Seq[Seq[String]] = keys.indices.map(i =>
       survivors.collect { case (f, flags) if flags(i) => f })
     val pred = keys.map(key => col(keyCol) === key).reduce(_ || _)
-    val df = readCandidates(spark, survivors.map(_._1), pred,
-      fallbackSchemaFrom = Store.read(spark, dataDir))
+    val df = Store.readCandidates(spark, survivors.map(_._1), pred,
+      emptyFrom = Store.read(spark, dataDir))
     (df, perKey, (survivors.length, live.size))
   }
 

@@ -3,7 +3,8 @@ package graft.sources
 import java.io.{File, IOException}
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.lit
 
 /** Append-only parquet store with CRASH-SAFE admissions and small-file
   * maintenance — the shared persistence layer behind the incremental
@@ -131,13 +132,40 @@ object Store {
     * bounded point lookup's candidate scan. A longer list keeps Spark's
     * distributed footer merge. */
   private[graft] def readFiles(spark: SparkSession, files: Seq[String]): DataFrame =
-    if (files.nonEmpty && files.size <= MaxDriverFiles)
+    readPacked(spark, files)._1
+
+  /** [[readFiles]], plus the number of read partitions Spark packs the
+    * files into when the read was built on the driver (None above
+    * [[MaxDriverFiles]]). */
+  private def readPacked(spark: SparkSession, files: Seq[String]): (DataFrame, Option[Int]) =
+    if (files.nonEmpty && files.size <= MaxDriverFiles) {
       // driver-statted file index (r13): a plain spark.read.parquet(files)
       // would RE-LIST every path it was just handed — a distributed job
       // once the list passes the parallel-discovery threshold (32)
-      org.apache.spark.sql.GraftBridge.readParquetFiles(spark, files,
+      val (df, partitions) = org.apache.spark.sql.GraftBridge.readParquetFiles(spark, files,
         org.apache.spark.sql.GraftBridge.mergedParquetSchema(spark, files))
-    else spark.read.option("mergeSchema", "true").parquet(files: _*)
+      (df, Some(partitions))
+    } else (spark.read.option("mergeSchema", "true").parquet(files: _*), None)
+
+  /** The shared tail of the index serve paths (bloom point and batch
+    * lookups, zone range lookups and pruned scans): read only the candidate `files`
+    * presenting their union schema ([[readFiles]]) and apply the residual
+    * predicate `pred`; an empty candidate set returns an empty frame
+    * shaped by `emptyFrom` with no data scan at all.
+    *
+    * When Spark packs the candidates into ONE read partition, the read is
+    * returned as `coalesce(1)`: the scan runs as the same single task, and
+    * its `SinglePartition` output satisfies a caller's global aggregate,
+    * so a `count()` runs one job instead of a scan job plus a
+    * single-partition exchange. Candidates that Spark splits into more
+    * partitions keep them. */
+  private[graft] def readCandidates(spark: SparkSession, files: Seq[String],
+      pred: Column, emptyFrom: => DataFrame): DataFrame =
+    if (files.isEmpty) emptyFrom.filter(lit(false))
+    else readPacked(spark, files) match {
+      case (df, Some(1)) => df.filter(pred).coalesce(1)
+      case (df, _) => df.filter(pred)
+    }
 
   /** The staging sibling: in-flight batch writes for `dir` live here, NOT
     * inside the store (see the header's torn-write rationale). */
@@ -273,7 +301,8 @@ object Store {
     * listing rule (every non-hidden FILE under `dir`, recursively;
     * `.`/`_`-prefixed names skipped at every level) and renders paths
     * exactly like `DataFrame.inputFiles` does, so set comparisons against
-    * index stats hold. */
+    * index stats hold. A `dir` that is itself a file lists as that one
+    * file, as Spark reads a file path. */
   private[graft] def liveFiles(dir: String): Seq[String] = walkLive(dir).toSeq
 
   /** The first `MaxDriverFiles + 1` of [[liveFiles]]: enough to tell a
@@ -289,7 +318,9 @@ object Store {
         .filter(k => !k.getName.startsWith(".") && !k.getName.startsWith("_"))
         .flatMap(k => if (k.isFile) Iterator.single(k) else walk(k))
     }
-    walk(new File(dir)).map(k => new org.apache.hadoop.fs.Path(k.toURI).toString)
+    val root = new File(dir)
+    (if (root.isFile) Iterator.single(root) else walk(root))
+      .map(k => new org.apache.hadoop.fs.Path(k.toURI).toString)
   }
 
   /** Number of committed delta directories awaiting compaction. */

@@ -115,16 +115,8 @@ object ZoneMaps {
       .collect() // bounded: one row per data file (see header)
     val total = flagged.length
     val files = flagged.collect { case (f, true) => f }.toSeq
-    val df =
-      if (files.isEmpty)
-        // nothing can match: empty frame with the data's schema, no scan
-        spark.read.parquet(dataPath).filter(lit(false))
-      else
-        // a file subset shares the directory's writer schema (zone-mapped
-        // layouts are single-writer by construction); the driver-statted
-        // read (r13) also skips the re-listing of the candidate paths —
-        // a distributed job once the survivor list passes 32 files
-        Store.readFiles(spark, files).filter(rowPred(preds))
+    val df = Store.readCandidates(spark, files, rowPred(preds),
+      emptyFrom = spark.read.parquet(dataPath))
     (df, (files.length, total))
   }
 
@@ -425,9 +417,8 @@ object ZoneMaps {
       if (!Store.hasData(statsDir)) Map.empty[String, Row]
       else decide(statsTable(spark, statsDir), live, Seq(intersects(preds)))._1
     val files = live.toSeq.sorted.filter(f => rows.get(f).forall(_.getBoolean(0)))
-    val df =
-      if (files.isEmpty) Store.read(spark, dataDir).filter(lit(false))
-      else Store.readFiles(spark, files).filter(rowPred(preds))
+    val df = Store.readCandidates(spark, files, rowPred(preds),
+      emptyFrom = Store.read(spark, dataDir))
     (df, (files.length, live.size))
   }
 

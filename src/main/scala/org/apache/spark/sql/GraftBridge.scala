@@ -112,6 +112,17 @@ object GraftBridge {
     override def refresh(): Unit = ()
     override def sizeInBytes: Long = statuses.map(_.getLen).sum
     override def partitionSchema: types.StructType = new types.StructType()
+    // two indexes over the same files are the same relation, as Spark's
+    // InMemoryFileIndex equality on its root paths makes them: without
+    // it, two reads of one table in a query are never recognised as the
+    // same scan by exchange reuse or the cache manager
+    private lazy val files =
+      statuses.map(s => (s.getPath, s.getLen, s.getModificationTime)).toSet
+    override def equals(other: Any): Boolean = other match {
+      case d: DriverStattedFileIndex => files == d.files
+      case _ => false
+    }
+    override def hashCode: Int = files.hashCode
   }
 
   /** DataFrame over exactly `files` with the given schema, statting each
@@ -120,9 +131,14 @@ object GraftBridge {
     * `spark.read.schema(schema).parquet(files: _*)`: same files, same
     * schema, same ParquetFileFormat scan with full predicate pushdown and
     * column pruning — only the redundant listing (and its possible
-    * distributed job) is gone. */
+    * distributed job) is gone. Also returns the number of read partitions
+    * the scan will get: Spark's own split packing
+    * (`FilePartition.maxSplitBytes`, `PartitionedFileUtil.splitFiles`,
+    * `FilePartition.getFilePartitions`), run on the same statuses the
+    * way `FileSourceScanExec` runs it. */
   def readParquetFiles(spark: SparkSession, files: Seq[String],
-      schema: types.StructType): DataFrame = {
+      schema: types.StructType): (DataFrame, Int) = {
+    import execution.datasources.{FilePartition, PartitionDirectory}
     val hconf = spark.sessionState.newHadoopConf()
     val statuses = files.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
@@ -138,6 +154,15 @@ object GraftBridge {
       bucketSpec = None,
       fileFormat = new execution.datasources.parquet.ParquetFileFormat,
       options = Map.empty)(spark.asInstanceOf[classic.SparkSession])
-    spark.asInstanceOf[classic.SparkSession].baseRelationToDataFrame(relation)
+    val dir = PartitionDirectory(
+      org.apache.spark.sql.catalyst.InternalRow.empty, statuses.toArray)
+    val maxSplit = FilePartition.maxSplitBytes(spark, Seq(dir))
+    // parquet is splittable; the sort is the scan's own largest-first order
+    val splits = dir.files.flatMap(f => execution.PartitionedFileUtil.splitFiles(
+        f, f.getPath, isSplitable = true, maxSplit,
+        org.apache.spark.sql.catalyst.InternalRow.empty))
+      .sortBy(-_.length)
+    (spark.asInstanceOf[classic.SparkSession].baseRelationToDataFrame(relation),
+      FilePartition.getFilePartitions(spark, splits, maxSplit).size)
   }
 }
