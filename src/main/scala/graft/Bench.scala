@@ -146,7 +146,7 @@ object Bench {
     // one query launch the same jobs, so the last is as representative as
     // a mean and needs no division — and its least wall time per phase
     val profiles = scala.collection.mutable.LinkedHashMap.empty[String, JobMetrics.Profile]
-    val phaseWalls = scala.collection.mutable.Map.empty[String, Map[String, Double]]
+    val phaseWalls = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Double]]
     def timed(tasks: Seq[(String, () => Unit)]): Seq[(String, Seq[Double])] =
       tasks.map { case (name, run) =>
         (1 to warmup).foreach { i =>
@@ -341,23 +341,15 @@ object Bench {
     // ("*" for local[*]) and an unquoted value would corrupt the JSON
     val header = s""""metric":"total","value":$total,"unit":"sec","runs":$runs,""" +
       s""""cpus":"$cpus","sf":"$sfDir","failures":$failures"""
-    // ---- phase-split timing for the store-backed faces (VERDICT r9 task
-    // 3): each of these queries' headline number deliberately prices a
-    // throwaway-store build + N admissions + a serve in one figure. The
-    // production reader needs them apart — a deployment amortizes build
-    // across its lifetime and admissions across micro-batches, paying only
-    // SERVE per query. Their timed runs carry queries.Phases tags; stdout
-    // reports each phase's least wall time over those runs (discards a
-    // GC/JIT spike; phases are attribution, not the headline statistic).
-    val phasedNames = Seq("sim_ivf_served", "sim_ivf_served_sq8",
-      "events_pagerank_incremental", "mv_orders_incremental",
-      "events_resample_incremental", "dedup_chunks_incremental",
-      "events_bitmap_incremental", "events_bitmap_window",
-      "text_bm25_search", "text_search_index", "text_phrase_search",
-      "q83_bloom_indexed_store", "q84_zone_indexed_store",
-      "q85_join_file_pruning", "q86_bloom_lookup_batch",
-      "q87_zone_count_pushdown")
-    def fmtPhases = phasedNames.flatMap(n => phaseWalls.get(n).map(n -> _))
+    // ---- phase-split timing for the store-backed faces: each of these
+    // queries' headline number deliberately prices a throwaway-store build
+    // + N admissions + a serve in one figure. The production reader needs
+    // them apart — a deployment amortizes build across its lifetime and
+    // admissions across micro-batches, paying only SERVE per query. Every
+    // query whose timed runs carry queries.Phases tags is reported, with
+    // each phase's least wall time over those runs (discards a GC/JIT
+    // spike; phases are attribution, not the headline statistic).
+    def fmtPhases = phaseWalls.filter(_._2.nonEmpty)
       .map { case (name, ph) =>
       "\"" + name + "\":" + ph.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + round3(v) }

@@ -229,18 +229,15 @@ object EventsSketches {
       |ORDER BY event_type""".stripMargin
 
   /** Streaming face: the SAME bitmap admission as the batch/incremental
-    * paths, as a foreachBatch sink. Uniquely among the stores, the
+    * paths through [[Store.admissionSink]]. Uniquely among the stores, the
     * idempotency id here is belt-and-braces: OR-merge makes even an
     * un-keyed replay semantically harmless (spec-pinned), so the id only
     * caps store growth under pathological replay storms. */
   def bitmapStreamingAdmission(events: DataFrame, storeDir: String,
       maintainEvery: Int = 8): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBitmaps(batch.sparkSession, storeDir, batch, maintainEvery,
-          id = Some(s"sb$batchId")): Unit
-      }
+    Store.admissionSink(events, "sb") { (batch, id) =>
+      admitBitmaps(batch.sparkSession, storeDir, batch, maintainEvery, id = Some(id)): Unit
+    }
 
   /** Driver face: admit the events table in two INTERLEAVED halves (the
     * split that would corrupt an order-dependent store) into a throwaway

@@ -299,22 +299,17 @@ object IncrementalDedup {
   }
 
   /** Streaming face of the span rewrite: the SAME [[dedupeBatchChunks]]
-    * admission as the batch/incremental paths, wired as a foreachBatch
-    * sink. foreachBatch is at-least-once — each admission is keyed by the
-    * micro-batch id through `Store.appendIdempotent`, so a replayed
-    * micro-batch no-ops and the store is exactly-once (the chunk-level
-    * replay spec pins this; the resample store established the pattern). */
+    * admission as the batch/incremental paths through
+    * [[Store.admissionSink]] — a replayed micro-batch no-ops (the
+    * chunk-level replay spec pins this). */
   def chunkStreamingAdmission(docs: DataFrame, storeDir: String,
       maintainEvery: Int = 16): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // admission is eager inside the call (the admitted frame is
-        // localCheckpoint'd before the append); the rebuilt frame is the
-        // batch caller's product, not the sink's — discard it
-        dedupeBatchChunks(batch, storeDir, maintainEvery,
-          id = Some(s"sb$batchId")): Unit
-      }
+    Store.admissionSink(docs, "sb") { (batch, id) =>
+      // admission is eager inside the call (the admitted frame is
+      // localCheckpoint'd before the append); the rebuilt frame is the
+      // batch caller's product, not the sink's — discard it
+      dedupeBatchChunks(batch, storeDir, maintainEvery, id = Some(id)): Unit
+    }
 
   // ---- perceptual (media phash) index -----------------------------------
 
@@ -383,16 +378,12 @@ object IncrementalDedup {
     admitted.select($"doc_id").orderBy($"doc_id")
   }
 
-  /** Streaming face of the perceptual gate: [[dedupeBatchPhash]] as a
-    * foreachBatch sink keyed by micro-batch id — continuous media
-    * ingestion's dedup gate with exactly-once admission (same replay
-    * protocol as the chunk and resample stores). */
+  /** Streaming face of the perceptual gate: [[dedupeBatchPhash]] through
+    * [[Store.admissionSink]] — continuous media ingestion's dedup gate
+    * with exactly-once admission. */
   def phashStreamingAdmission(docs: DataFrame, storeDir: String,
       maxHamming: Int = 3, maintainEvery: Int = 16): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupeBatchPhash(batch, storeDir, maxHamming, maintainEvery,
-          id = Some(s"sb$batchId")): Unit
-      }
+    Store.admissionSink(docs, "sb") { (batch, id) =>
+      dedupeBatchPhash(batch, storeDir, maxHamming, maintainEvery, id = Some(id)): Unit
+    }
 }

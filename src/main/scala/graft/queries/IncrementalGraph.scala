@@ -143,18 +143,14 @@ object IncrementalGraph {
       .orderBy($"event_type")
   }
 
-  /** Streaming face: the SAME admission as the batch path inside
-    * foreachBatch — micro-batches of a time-ordered stream satisfy the
-    * admission-order contract by construction, and the batchId keys
-    * replays. */
+  /** Streaming face: the SAME admission as the batch path through
+    * [[Store.admissionSink]] — micro-batches of a time-ordered stream
+    * satisfy the admission-order contract by construction. */
   def pagerankStreamingAdmission(events: DataFrame, storeDir: String,
       maintainEvery: Int = 8): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitEvents(batch.sparkSession, storeDir, batch, maintainEvery,
-          id = Some(s"pg$batchId")): Unit
-      }
+    Store.admissionSink(events, "pg") { (batch, id) =>
+      admitEvents(batch.sparkSession, storeDir, batch, maintainEvery, id = Some(id)): Unit
+    }
 
   /** Driver face: the events table admitted in three CHRONOLOGICAL slices
     * (cut at thirds of the observed time span — the split that exercises

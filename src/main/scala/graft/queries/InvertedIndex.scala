@@ -70,15 +70,12 @@ object InvertedIndex {
       .select($"doc_id")
   }
 
-  /** Streaming face: the same admission inside foreachBatch. */
+  /** Streaming face: the same admission through [[Store.admissionSink]]. */
   def searchStreamingAdmission(docs: DataFrame, storeDir: String,
       maintainEvery: Int = 8): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitDocs(batch.sparkSession, storeDir, batch, maintainEvery,
-          id = Some(s"ii$batchId")): Unit
-      }
+    Store.admissionSink(docs, "ii") { (batch, id) =>
+      admitDocs(batch.sparkSession, storeDir, batch, maintainEvery, id = Some(id)): Unit
+    }
 
   private val Terms = Seq("join", "hash")
 

@@ -341,18 +341,13 @@ object IvfIndex {
         rewrite = _.filter($"version" === latest))
   }
 
-  /** Streaming face: the SAME admission as the batch path, as a
-    * foreachBatch sink with idempotent per-micro-batch ids — an
-    * at-least-once replay (sink ran, checkpoint didn't commit) re-admits
-    * nothing, the [[EventsSketches.bitmapStreamingAdmission]] shape. */
+  /** Streaming face: the SAME admission as the batch path through
+    * [[Store.admissionSink]] — a replayed micro-batch re-admits nothing. */
   def ivfStreamingAdmission(vecs: DataFrame, indexDir: String,
       maintainEvery: Int = 8): DataStreamWriter[Row] =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatchIvf(batch, indexDir, maintainEvery,
-          id = Some(s"sv$batchId")): Unit
-      }
+    Store.admissionSink(vecs, "sv") { (batch, id) =>
+      admitBatchIvf(batch, indexDir, maintainEvery, id = Some(id)): Unit
+    }
 
   /** Driver face: seed the codebook exactly as [[SimilaritySearch
     * .simIvfTopk]] (first `IvfNCells` vectors — training-free, so the

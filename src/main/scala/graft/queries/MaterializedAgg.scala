@@ -92,19 +92,16 @@ object MaterializedAgg {
       .orderBy($"day", $"o_orderstatus")
   }
 
-  /** Streaming face: the SAME admission as the batch path, as a
-    * foreachBatch sink. The batchId keys idempotence — a restart that
+  /** Streaming face: the SAME admission as the batch path through
+    * [[Store.admissionSink]]. Here the id is load-bearing — a restart that
     * replays the last micro-batch must NOT double-count (+ is not
     * idempotent; contrast the bitmap store where the id is merely
     * belt-and-braces). */
   def ordersStreamingAdmission(orders: DataFrame, storeDir: String,
       maintainEvery: Int = 8): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    orders.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitOrders(batch.sparkSession, storeDir, batch, maintainEvery,
-          id = Some(s"mv$batchId")): Unit
-      }
+    Store.admissionSink(orders, "mv") { (batch, id) =>
+      admitOrders(batch.sparkSession, storeDir, batch, maintainEvery, id = Some(id)): Unit
+    }
 
   /** Driver face (one-shot): the view computed directly over the full
     * orders table — the recompute the incremental face must be

@@ -107,12 +107,7 @@ object Resample {
     * admitted the batch. */
   def admitBatch(spark: SparkSession, storeDir: String, batch: DataFrame,
       maintainEvery: Int = 8, id: Option[String] = None): Boolean = {
-    val admitted = id match {
-      case Some(i) =>
-        graft.sources.Store.appendIdempotent(hourlyOf(batch), storeDir, i)
-      case None =>
-        graft.sources.Store.append(hourlyOf(batch), storeDir); true
-    }
+    val admitted = graft.sources.Store.appendMaybeIdempotent(hourlyOf(batch), storeDir, id)
     if (admitted)
       graft.sources.Store.maintain(spark, storeDir, every = maintainEvery,
         rewrite = mergeHourly)
@@ -124,21 +119,14 @@ object Resample {
     gridOf(mergeHourly(graft.sources.Store.read(spark, storeDir)).localCheckpoint(true))
 
   /** Streaming face: the SAME admission code as the batch/incremental
-    * paths, wired as a foreachBatch sink. foreachBatch is at-least-once —
-    * a crash after the sink ran but before the streaming checkpoint
-    * committed REPLAYS the micro-batch — so each admission is keyed by the
-    * micro-batch id through `Store.appendIdempotent`: the replay finds the
-    * id already admitted (delta dir or its compaction-surviving marker)
-    * and no-ops, which upgrades the store to exactly-once. Spec-pinned
-    * with a forced duplicate admission, including one after compaction. */
+    * paths through [[graft.sources.Store.admissionSink]] — a replayed
+    * micro-batch no-ops. Spec-pinned with a forced duplicate admission,
+    * including one after compaction. */
   def streamingAdmission(events: DataFrame, storeDir: String,
       maintainEvery: Int = 8): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(batch.sparkSession, storeDir, batch, maintainEvery,
-          id = Some(s"sb$batchId")): Unit
-      }
+    graft.sources.Store.admissionSink(events, "sb") { (batch, id) =>
+      admitBatch(batch.sparkSession, storeDir, batch, maintainEvery, id = Some(id)): Unit
+    }
 
   /** Driver face of the incremental path: admit the events table in two
     * interleaved halves (the second half carries timestamps EARLIER than

@@ -471,21 +471,17 @@ object BloomIndex {
     (df, (files.length, live.size))
   }
 
-  /** Streaming face: the SAME admission as [[admitIndexed]], as a
-    * foreachBatch sink with idempotent per-micro-batch ids — an
-    * at-least-once replay (sink ran, checkpoint didn't commit) re-admits
-    * nothing on either store, and a replay that finds the data committed
-    * but the stats missing heals them (the [[IvfIndex]] admission shape,
-    * with the index's own crash window covered by the same id). */
+  /** Streaming face: the SAME admission as [[admitIndexed]] through
+    * [[Store.admissionSink]] — a replayed micro-batch re-admits nothing on
+    * either store, and a replay that finds the data committed but the
+    * stats missing heals them (the index's own crash window is covered by
+    * the same id). */
   def streamingAdmission(rows: DataFrame, dataDir: String, statsDir: String,
       keyCol: String, expectedPerFile: Long = 100000L, fpp: Double = 0.01)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitIndexed(batch, dataDir, statsDir, keyCol, s"bl$batchId",
-          expectedPerFile, fpp): Unit
-      }
+    Store.admissionSink(rows, "bl") { (batch, id) =>
+      admitIndexed(batch, dataDir, statsDir, keyCol, id, expectedPerFile, fpp): Unit
+    }
 
   /** Admit-count-triggered maintenance for a bloom-indexed Store — the
     * [[Store.maintain]] one-call-per-admit story, index included: once

@@ -17,7 +17,12 @@ import org.apache.spark.sql.functions._
   * `sortWithinPartitions` (narrow row-group ranges inside each file), then a
   * `maxRecordsPerFile` cap (bounds file size regardless of skew in the
   * sampled ranges). Equal keys land in one partition, so point predicates
-  * touch exactly one file.
+  * touch exactly one file. [[writeZOrdered]] is the same shape on the
+  * interleaved [[zValue]]. Both, and [[Store.compact]]'s `clusterBy`
+  * rewrite, take that shape from one function, [[clusterShape]].
+  *
+  * Compaction and its rename-aside swap live in [[Store]]: a plain
+  * parquet directory is a Store with a flat base and no deltas.
   */
 object Layout {
 
@@ -25,15 +30,8 @@ object Layout {
     * `numFiles` range slices, rows sorted within each, at most
     * `maxRecordsPerFile` rows per physical file (0 = unlimited). */
   def writeClustered(df: DataFrame, path: String, clusterCols: Seq[String],
-      numFiles: Int, maxRecordsPerFile: Long = 0L): Unit = {
-    require(clusterCols.nonEmpty && numFiles > 0)
-    val cols = clusterCols.map(col)
-    df.repartitionByRange(numFiles, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
-  }
+      numFiles: Int, maxRecordsPerFile: Long = 0L): Unit =
+    writeShaped(df, path, clusterCols, numFiles, zOrder = false, maxRecordsPerFile)
 
   /** Hive-layout partitioned write: `partitionCols` become directory keys
     * (`path/col=value/…`) — the coarse-grained sibling of [[writeClustered]]'s
@@ -110,183 +108,68 @@ object Layout {
     * ranges (a driver-side handful of doubles — the only non-distributed
     * step, same bound as Delta's OPTIMIZE ZORDER stats pass), then rows are
     * range-partitioned and sorted by their interleaved z-value so every file
-    * holds a small bounding box in ALL clustered dimensions. */
+    * holds a small bounding box in ALL clustered dimensions. Fails when a
+    * column has no non-null value (empty input): it has no range to bucket. */
   def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
       numFiles: Int, maxRecordsPerFile: Long = 0L): Unit = {
-    require(zCols.size >= 2 && numFiles > 0)
-    require(!df.columns.contains("__z"),
-      "writeZOrdered: input already has a '__z' column (it would be clobbered and dropped)")
-    val statsRows = df.select(
-      zCols.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))): _*)
-      .collect()
-    // a global aggregate always yields exactly one row — of NULLs when the
-    // input is empty or a column is all-null; fail with the cause rather
-    // than an NPE out of Row.getDouble
-    val stats = statsRows.head
-    val ranges = zCols.zipWithIndex.map { case (c, i) =>
-      require(!stats.isNullAt(2 * i) && !stats.isNullAt(2 * i + 1),
-        s"writeZOrdered: no non-null values for column '$c' (empty input?)")
-      (col(c), stats.getDouble(2 * i), stats.getDouble(2 * i + 1))
-    }
-    df.withColumn("__z", zValue(ranges))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
+    require(zCols.size >= 2, "z-order needs at least 2 columns")
+    writeShaped(df, path, zCols, numFiles, zOrder = true, maxRecordsPerFile)
+  }
+
+  private def writeShaped(df: DataFrame, path: String, cols: Seq[String],
+      numFiles: Int, zOrder: Boolean, maxRecordsPerFile: Long): Unit =
+    clusterShape(df, cols, numFiles, zOrder, noRange = c =>
+      throw new IllegalArgumentException(
+        s"writeZOrdered: no non-null values for column '$c' (empty input?)"))
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .parquet(path)
-  }
 
-  /** Small-file compaction (the OPTIMIZE half of table maintenance):
-    * rewrite a parquet directory into `numFiles` files, re-clustered on
-    * `clusterCols` (empty = plain coalesce-style rewrite). Streaming
-    * micro-batch sinks and fine-grained appends leave thousands of KB-sized
-    * files whose per-file open/footer cost dominates the scan at 100 TB;
-    * compaction restores both file-size economics and min/max pruning.
+  /** The one clustering shape, shared by [[writeClustered]],
+    * [[writeZOrdered]] and [[Store.compact]]'s `clusterBy` rewrite: range
+    * slices on the cluster key (`repartitionByRange` over sampled bounds,
+    * so files hold disjoint slices), rows sorted within each. The key is
+    * `cols` (lexicographic), or with `zOrder` their interleaved [[zValue]]
+    * under a unique temporary column, dropped again before the caller
+    * writes — so no input column can be clobbered.
     *
-    * The rewrite CANNOT overwrite its own input (the lazy plan reads the
-    * source while the write runs), so it writes to a sibling `.compact`
-    * directory and promotes it with the same rename-aside-then-promote swap
-    * as the streaming upsert sink: the live data is in `path` or
-    * `path + ".old"` at every step boundary. On a real deployment a
-    * transactional table format replaces exactly the swap step. */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      numFiles: Int, clusterCols: Seq[String] = Nil): Unit = {
-    require(numFiles > 0)
-    val tmp = path + ".compact"
-    val df = spark.read.parquet(path)
-    if (clusterCols.nonEmpty) writeClustered(df, tmp, clusterCols, numFiles)
-    else df.repartition(numFiles).write.mode(SaveMode.Overwrite).parquet(tmp)
-    promote(tmp, path)
-  }
-
-  /** [[compact]] with the file COUNT derived from a target file SIZE — the
-    * knob a production deployment actually owns. A fixed `numFiles` is
-    * only right at one data volume: at 100 TB nobody knows the count, but
-    * everybody knows the size the scan layer wants (512 MB–1 GB per file:
-    * big enough that footer/open cost amortizes, small enough that a task
-    * is a sane work unit and min/max pruning has resolution). The current
-    * volume comes from the directory's own footer-level byte sizes — a
-    * |files|-bounded driver listing, the same order as the file index —
-    * and the rewrite targets `ceil(bytes / targetBytes)` files.
+    * `zOrder` first runs one global min/max aggregate for the bucket
+    * ranges (2·k doubles to the driver). A column with no non-null value
+    * (empty input, all-null column) has no range: `noRange` gets its name
+    * — the writer throws, compaction logs — and the shape falls back to
+    * lexicographic.
     *
-    * The estimate is pre-rewrite bytes, so re-clustering that changes
-    * compression ratios moves the realized size (documented, not
-    * corrected: a second invocation converges, and the knob's job is
-    * order-of-magnitude file economics, not byte precision).
-    *
-    * Scope: PLAIN parquet directories — the same file set the rewrite's
-    * `spark.read.parquet(path)` will fold, so the estimate and the
-    * rewrite agree by construction. Store-shaped directories (flat base
-    * + `delta-*` subdirs) compact through [[Store.compact]], which owns
-    * the recursive layout and its admission protocol. */
-  def compactToFileSize(spark: org.apache.spark.sql.SparkSession,
-      path: String, targetBytes: Long,
-      clusterCols: Seq[String] = Nil): Int = {
-    require(targetBytes > 0)
-    val bytes = parquetBytes(new java.io.File(path))
-    val numFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    compact(spark, path, numFiles, clusterCols)
-    numFiles
-  }
-
-  /** Total bytes of TOP-LEVEL parquet files in `dir` — deliberately
-    * non-recursive, mirroring exactly what [[compact]]'s plain
-    * `spark.read.parquet` reads (hidden staging/marker entries excluded).
-    * A recursive sum would count `delta-*` subdirs the rewrite never
-    * folds and derive a file count from bytes that stay behind. */
-  private[graft] def parquetBytes(dir: java.io.File): Long = {
-    val kids = dir.listFiles()
-    if (kids == null) 0L
-    else kids.iterator.filter(f =>
-      f.isFile && f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-      .map(_.length()).sum
-  }
-
-  /** The rename-aside swap shared by [[compact]] and [[Store.compact]]:
-    * move the live directory aside, promote the rewrite, drop the old copy
-    * — the live data is in `path`, `path + ".old"`, or `path + ".compact"`
-    * at every step boundary. `salvage(oldDir, imageDir)` runs BETWEEN the
-    * two renames so a caller can rescue entries from the superseded copy
-    * that the rewrite provably did not include (Store.compact moves raced
-    * delta admissions into the image there): rescued entries become
-    * visible in the same atomic rename as the rewrite itself, so a reader
-    * that succeeds never observes a committed-then-missing entry — the
-    * alternative (salvaging after the swap) opens a window of
-    * non-monotonic reads where a raced admission is visible, then briefly
-    * gone, then back. */
-  private[graft] def promote(tmp: String, path: String,
-      salvage: (java.io.File, java.io.File) => Unit = (_, _) => ()): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    val dir = new java.io.File(path)
-    val bak = new java.io.File(path + ".old")
-    if (bak.exists()) rm(bak)
-    ProtocolPoints.pause("promote.pre-aside")
-    if (!dir.renameTo(bak))
-      throw new java.io.IOException(s"could not move $path aside to $bak")
-    ProtocolPoints.pause("promote.aside")
-    // rescue raced entries INTO the image while nothing is live: they go
-    // visible in the same atomic rename as the rewrite
-    salvage(bak, new java.io.File(tmp))
-    ProtocolPoints.pause("promote.salvaged")
-    if (!new java.io.File(tmp).renameTo(dir)) {
-      // A writer racing the two-rename window can recreate `path` (its
-      // file create mkdirs missing parents), defeating this rename. Roll
-      // back rather than strand the data in `.old`: fold whatever the
-      // racer recreated into the old copy, restore it wholesale, and
-      // surface the failure — the store reads byte-identically to before
-      // the compaction attempt and the racer's staging paths are intact.
-      // the sweep-then-delete pair is itself racy (a writer can create
-      // another entry between listFiles() and delete()), so retry the
-      // fold-interlopers/delete loop until the delete lands — bounded, and
-      // each iteration makes progress by moving whatever appeared
-      var restored = false
-      var attempts = 0
-      while (!restored && attempts < 64) {
-        attempts += 1
-        val interlopers = dir.listFiles()
-        if (interlopers != null) interlopers.foreach { f =>
-          if (!f.renameTo(new java.io.File(bak, f.getName))) {
-            // the move collides when the old copy already holds an entry of
-            // the same name — only possible for a racer that re-created a
-            // path the aside-rename had already captured: a re-staged hidden
-            // dir (uncommitted by definition — its commit rename will fail
-            // and the writer retries), or a re-committed `delta-<id>` whose
-            // id the old copy already witnessed (same admission by the id
-            // contract). Both are duplicates of data the restore brings
-            // back; drop the interloper copy rather than abort the rollback
-            if (new java.io.File(bak, f.getName).exists()) rm(f)
-            else throw new java.io.IOException(
-              s"promote rollback: could not move racer entry $f into $bak")
-          }
-        }
-        restored = dir.delete()
-      }
-      // entries the salvage step moved INTO the image are committed data:
-      // return them to the old copy before restoring it, or the rollback
-      // would strand them invisible inside `.compact` (a later
-      // Store.recoverStale would rescue them, but non-monotonically)
-      val moved = new java.io.File(tmp).listFiles()
-      if (moved != null) moved.filter(_.getName.startsWith("delta-")).foreach { f =>
-        if (!f.renameTo(new java.io.File(bak, f.getName))) {
-          if (new java.io.File(bak, f.getName).exists()) rm(f)
-          else throw new java.io.IOException(
-            s"promote rollback: could not return salvaged entry $f to $bak")
+    * One slice (`numFiles == 1`) is `coalesce(1)` + sort: a range
+    * "partitioning" into one slice is a SinglePartition exchange that
+    * funnels the whole frame through one network task, where the coalesce
+    * writes the identical sorted file with no shuffle. The price: the
+    * narrow stage that feeds it (the scan, say) also runs as one task. */
+  private[sources] def clusterShape(df: DataFrame, cols: Seq[String],
+      numFiles: Int, zOrder: Boolean, noRange: String => Unit): DataFrame = {
+    require(cols.nonEmpty && numFiles > 0)
+    def shape(in: DataFrame, keys: Seq[Column]): DataFrame =
+      (if (numFiles == 1) in.coalesce(1) else in.repartitionByRange(numFiles, keys: _*))
+        .sortWithinPartitions(keys: _*)
+    val zRanges =
+      if (!zOrder) None
+      else {
+        // a global aggregate always yields exactly one row — of NULLs when
+        // the input is empty or a column is all-null
+        val stats = df.select(cols.flatMap(c =>
+          Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))): _*)
+          .collect().head
+        cols.indices.find(i => stats.isNullAt(2 * i) || stats.isNullAt(2 * i + 1)) match {
+          case Some(i) => noRange(cols(i)); None
+          case None => Some(cols.indices.map(i =>
+            (col(cols(i)), stats.getDouble(2 * i), stats.getDouble(2 * i + 1))))
         }
       }
-      if (!restored || !bak.renameTo(dir))
-        throw new java.io.IOException(
-          s"promote rollback failed: live data is in $bak")
-      throw new java.io.IOException(
-        s"could not move $tmp to $path (a writer raced the swap); " +
-          "store restored, compacted image left for inspection")
+    zRanges match {
+      case Some(ranges) =>
+        val zc = s"__z_${java.util.UUID.randomUUID().toString.take(8)}"
+        shape(df.withColumn(zc, zValue(ranges)), Seq(col(zc))).drop(zc)
+      case None => shape(df, cols.map(col))
     }
-    ProtocolPoints.pause("promote.swapped")
-    rm(bak)
   }
 
   /** Deterministic shard manifest of a written dataset: one row per physical

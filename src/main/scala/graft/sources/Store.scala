@@ -3,8 +3,9 @@ package graft.sources
 import java.io.{File, IOException}
 import java.util.UUID
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Append-only parquet store with CRASH-SAFE admissions and small-file
   * maintenance — the shared persistence layer behind the incremental
@@ -17,7 +18,7 @@ import org.apache.spark.sql.functions.lit
   * mid-commit leaves SOME of the batch's files visible — a half-admitted
   * batch, which for a dedup index means documents recorded as "seen" that
   * were never actually admitted. The fix is the smallest possible commit
-  * protocol, the same rename-aside idea as [[Layout.compact]]'s swap:
+  * protocol, the same rename-aside idea as the compaction swap:
   *
   *  1. STAGE — write the whole batch OUTSIDE the store, to
   *     `<dir>.staging/<id>/`. Outside is load-bearing, not cosmetic: a
@@ -50,11 +51,16 @@ import org.apache.spark.sql.functions.lit
   * [[compact]] rewrite once the committed-delta count reaches a threshold,
   * folding all deltas into a flat base again; stores whose rows sum-merge
   * on read (the anomaly delta store) pass a `rewrite` that pre-merges
-  * during the rewrite, shrinking rows as well as files. The swap itself is
-  * [[Layout.promote]]'s rename-aside, so the live data exists at every
-  * step boundary. On a real deployment a transactional table format
-  * (commit log + snapshot isolation) replaces this file-level protocol;
-  * the operator contracts above it are unchanged.
+  * during the rewrite, shrinking rows as well as files. This is the one
+  * compaction in the engine: a plain Spark-written parquet directory is a
+  * store with a flat base and no deltas, so [[compact]] and
+  * [[compactToFileSize]] serve it too. A `clusterBy` rewrite takes
+  * [[Layout.clusterShape]], the shape the clustered writers use. The swap
+  * is [[promote]]'s rename-aside, so the live data exists at every step
+  * boundary; [[recoverStale]] repairs a swap that crashed. On a real
+  * deployment a transactional table format (commit log + snapshot
+  * isolation) replaces this file-level protocol; the operator contracts
+  * above it are unchanged.
   */
 object Store {
 
@@ -284,6 +290,25 @@ object Store {
       case None => append(df, dir); true
     }
 
+  /** The foreachBatch admission sink behind every streaming face: `rows`
+    * as an append-mode stream whose micro-batch `batchId` is admitted by
+    * `admit(batch, <idPrefix><batchId>)`. foreachBatch is at-least-once —
+    * a crash after the sink ran but before the streaming checkpoint
+    * committed REPLAYS the micro-batch under the same batchId — so the id
+    * is a pure function of the batch id, and an admit that threads it
+    * through [[appendIdempotent]] finds a replay already admitted (its
+    * delta dir or the compaction-surviving `.admitted-` marker) and
+    * no-ops: the store is exactly-once. The id format is part of that
+    * contract — a stream restarted on a newer build replays against the
+    * markers the older one wrote — so each face's prefix never changes. */
+  def admissionSink(rows: DataFrame, idPrefix: String)(
+      admit: (DataFrame, String) => Unit): DataStreamWriter[Row] =
+    rows.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        admit(batch, s"$idPrefix$batchId")
+      }
+
   /** Whether the store holds any COMMITTED data ([[read]] on a store
     * without any would fail schema inference): a visible entry exists —
     * hidden (`.`/`_`-prefixed) staging dirs and markers don't count. Lets
@@ -303,14 +328,19 @@ object Store {
     * exactly like `DataFrame.inputFiles` does, so set comparisons against
     * index stats hold. A `dir` that is itself a file lists as that one
     * file, as Spark reads a file path. */
-  private[graft] def liveFiles(dir: String): Seq[String] = walkLive(dir).toSeq
+  private[graft] def liveFiles(dir: String): Seq[String] = walkLive(dir).map(pathOf).toSeq
 
   /** The first `MaxDriverFiles + 1` of [[liveFiles]]: enough to tell a
     * store over the cap without walking the rest of its tree. */
   private[graft] def cappedListing(dir: String): Seq[String] =
-    walkLive(dir).take(MaxDriverFiles + 1).toSeq
+    walkLive(dir).take(MaxDriverFiles + 1).map(pathOf).toSeq
 
-  private def walkLive(dir: String): Iterator[String] = {
+  /** Total bytes of [[liveFiles]] — the store's size as [[read]] scans it
+    * and [[compact]] rewrites it: hidden staging entries and markers never
+    * count, nested and oddly-named data files always do. */
+  private[graft] def liveBytes(dir: String): Long = walkLive(dir).map(_.length()).sum
+
+  private def walkLive(dir: String): Iterator[File] = {
     def walk(f: File): Iterator[File] = {
       val kids = f.listFiles()
       if (kids == null) Iterator.empty
@@ -319,9 +349,11 @@ object Store {
         .flatMap(k => if (k.isFile) Iterator.single(k) else walk(k))
     }
     val root = new File(dir)
-    (if (root.isFile) Iterator.single(root) else walk(root))
-      .map(k => new org.apache.hadoop.fs.Path(k.toURI).toString)
+    if (root.isFile) Iterator.single(root) else walk(root)
   }
+
+  /** A file's path rendered as `DataFrame.inputFiles` renders it. */
+  private def pathOf(f: File): String = new org.apache.hadoop.fs.Path(f.toURI).toString
 
   /** Number of committed delta directories awaiting compaction. */
   def deltaCount(dir: String): Int = {
@@ -333,6 +365,87 @@ object Store {
     val fs = f.listFiles()
     if (fs != null) fs.foreach(rm)
     f.delete(): Unit
+  }
+
+  /** The rename-aside swap behind every compaction: move the live
+    * directory aside to `.old`, promote the rewrite from `.compact`, drop
+    * the old copy — the live data is in `path`, `path + ".old"`, or
+    * `path + ".compact"` at every step boundary, and [[recoverStale]]
+    * repairs each crash shape. `salvage(oldDir, imageDir)` runs BETWEEN the
+    * two renames so [[compactImage]] can move raced delta admissions the
+    * rewrite provably did not include from the superseded copy into the
+    * image: rescued entries become visible in the same atomic rename as
+    * the rewrite itself, so a reader that succeeds never observes a
+    * committed-then-missing entry — the alternative (salvaging after the
+    * swap) opens a window of non-monotonic reads where a raced admission
+    * is visible, then briefly gone, then back. */
+  private[graft] def promote(tmp: String, path: String,
+      salvage: (File, File) => Unit = (_, _) => ()): Unit = {
+    val dir = new File(path)
+    val bak = new File(path + ".old")
+    if (bak.exists()) rm(bak)
+    ProtocolPoints.pause("promote.pre-aside")
+    if (!dir.renameTo(bak))
+      throw new IOException(s"could not move $path aside to $bak")
+    ProtocolPoints.pause("promote.aside")
+    // rescue raced entries INTO the image while nothing is live: they go
+    // visible in the same atomic rename as the rewrite
+    salvage(bak, new File(tmp))
+    ProtocolPoints.pause("promote.salvaged")
+    if (!new File(tmp).renameTo(dir)) {
+      // A writer racing the two-rename window can recreate `path` (its
+      // file create mkdirs missing parents), defeating this rename. Roll
+      // back rather than strand the data in `.old`: fold whatever the
+      // racer recreated into the old copy, restore it wholesale, and
+      // surface the failure — the store reads byte-identically to before
+      // the compaction attempt and the racer's staging paths are intact.
+      // the sweep-then-delete pair is itself racy (a writer can create
+      // another entry between listFiles() and delete()), so retry the
+      // fold-interlopers/delete loop until the delete lands — bounded, and
+      // each iteration makes progress by moving whatever appeared
+      var restored = false
+      var attempts = 0
+      while (!restored && attempts < 64) {
+        attempts += 1
+        val interlopers = dir.listFiles()
+        if (interlopers != null) interlopers.foreach { f =>
+          if (!f.renameTo(new File(bak, f.getName))) {
+            // the move collides when the old copy already holds an entry of
+            // the same name — only possible for a racer that re-created a
+            // path the aside-rename had already captured: a re-staged hidden
+            // dir (uncommitted by definition — its commit rename will fail
+            // and the writer retries), or a re-committed `delta-<id>` whose
+            // id the old copy already witnessed (same admission by the id
+            // contract). Both are duplicates of data the restore brings
+            // back; drop the interloper copy rather than abort the rollback
+            if (new File(bak, f.getName).exists()) rm(f)
+            else throw new IOException(
+              s"promote rollback: could not move racer entry $f into $bak")
+          }
+        }
+        restored = dir.delete()
+      }
+      // entries the salvage step moved INTO the image are committed data:
+      // return them to the old copy before restoring it, or the rollback
+      // would strand them invisible inside `.compact` (a later
+      // recoverStale would rescue them, but non-monotonically)
+      val moved = new File(tmp).listFiles()
+      if (moved != null) moved.filter(_.getName.startsWith("delta-")).foreach { f =>
+        if (!f.renameTo(new File(bak, f.getName))) {
+          if (new File(bak, f.getName).exists()) rm(f)
+          else throw new IOException(
+            s"promote rollback: could not return salvaged entry $f to $bak")
+        }
+      }
+      if (!restored || !bak.renameTo(dir))
+        throw new IOException(
+          s"promote rollback failed: live data is in $bak")
+      throw new IOException(
+        s"could not move $tmp to $path (a writer raced the swap); " +
+          "store restored, compacted image left for inspection")
+    }
+    ProtocolPoints.pause("promote.swapped")
+    rm(bak)
   }
 
   /** Recover from a compaction that crashed mid-swap, restoring the
@@ -427,8 +540,9 @@ object Store {
     * compaction reports failure, racer unharmed). Never a torn store.
     *
     * `clusterBy` makes the rewrite ORDER-PRESERVING: non-empty, the image
-    * is range-partitioned and sorted on those columns (the
-    * [[Layout.writeClustered]] shape) instead of bin-packed — so a store
+    * is range-partitioned and sorted on those columns
+    * ([[Layout.clusterShape]], the clustered writers' shape) instead of
+    * bin-packed — so a store
     * serving RANGE scans (zone-mapped postings, time-sliced events) keeps
     * its key-to-file locality across maintenance cycles instead of losing
     * file skipping at the first compaction. Empty (the default) keeps the
@@ -556,15 +670,18 @@ object Store {
     * a lake path, e.g. `/lake/delta-bronze/store/...`), mapping every
     * file to that segment — tombstone retirement would then never match
     * a real delta dir and re-admitted keys would stay suppressed forever.
-    * A store file is `<store>/<file>` or `<store>/delta-<id>/<file>`, so
-    * the delta segment, when present, is exactly the file's PARENT
-    * component with the store dir as grandparent. */
+    * The delta segment, when present, is the one directly below the store
+    * dir's own (normalized, absolute) path, with the file at any depth
+    * under it: a delta whose data file sits in a nested directory is still
+    * that delta — were it missed, a compaction would fold its rows AND
+    * salvage the delta as unfolded, counting them twice. */
   private[graft] def deltaSegment(storeDir: String, p: String): Option[String] = {
-    val segs = p.split('/').filter(_.nonEmpty)
-    val storeName = new File(storeDir).getName
-    if (segs.length >= 3 && segs(segs.length - 2).startsWith("delta-") &&
-        segs(segs.length - 3) == storeName)
-      Some(segs(segs.length - 2))
+    def segments(s: String) = s.split('/').filter(_.nonEmpty).toSeq
+    val store = segments(new File(storeDir).getAbsoluteFile.toPath.normalize.toString)
+    val segs = segments(p)
+    val at = segs.indexOfSlice(store) + store.length
+    if (at >= store.length && at + 1 < segs.length && segs(at).startsWith("delta-"))
+      Some(segs(at))
     else None
   }
 
@@ -708,30 +825,18 @@ object Store {
       val deltas = entries.filter(f => f.isDirectory && f.getName.startsWith("delta-"))
       val bases = entries.filter(f => f.isFile && f.getName.endsWith(".parquet"))
       val (keep, foldBase) = bases.partition(_.length() >= minFileBytes)
-      def parquetBytes(f: File): Long =
-        if (f.isFile) f.length()
-        else {
-          val kids = f.listFiles()
-          if (kids == null) 0L
-          else kids.iterator.filter(k => k.isFile && k.getName.endsWith(".parquet"))
-            .map(_.length()).sum
-        }
-      val foldedBytes = (deltas ++ foldBase).map(parquetBytes).sum
-      val foldedFiles = deltas.map(d => {
-        val kids = d.listFiles()
-        if (kids == null) 0 else kids.count(k => k.getName.endsWith(".parquet"))
-      }).sum + foldBase.length
+      // the fold set, listed once: the image reads exactly these files and
+      // the report counts exactly them. The per-delta walk is [[read]]'s —
+      // recursive and hidden-aware — so a nested directory or an
+      // oddly-named data file inside a delta is neither dropped from the
+      // rewrite nor from its counts
+      val folded = deltas.toSeq.flatMap(d => walkLive(d.getPath)) ++ foldBase
+      val foldedFiles = folded.size
+      val foldedBytes = folded.map(_.length()).sum
       if (deltas.isEmpty && foldBase.isEmpty)
         SelectiveCompaction(0, 0, keep.length, 0L)
       else {
-        // explicit fold-set file list (r13): the fold members are already
-        // known driver-side. The per-delta listing is [[liveFiles]] —
-        // RECURSIVE and hidden-aware, exactly the file set [[read]] sees —
-        // so a nested directory or an oddly-named data file inside a delta
-        // can never be silently excluded from the rewrite image (ADVICE r13)
-        val image = readFiles(spark,
-          deltas.toSeq.flatMap(d => liveFiles(d.getAbsolutePath)) ++
-            foldBase.toSeq.map(f => new org.apache.hadoop.fs.Path(f.toURI).toString))
+        val image = readFiles(spark, folded.map(pathOf))
         val tgt = if (targetBytes > 0) targetBytes else 2 * minFileBytes
         // capped at the folded INPUT file count: the fold only ever merges
         // (a byte-derived count above it would make the clustered path
@@ -745,30 +850,21 @@ object Store {
     }
 
   /** [[compact]] with the file count derived from a target file SIZE —
-    * the Store-side sibling of [[Layout.compactToFileSize]], summing
-    * bytes RECURSIVELY because that is exactly the file set [[read]]
-    * lists and [[compact]]'s rewrite folds (the flat base plus every
-    * committed `delta-*`; hidden staging/marker entries excluded). The
-    * estimate is pre-rewrite bytes — a rewrite that drops rows (TTL,
-    * version prune) or re-compresses lands smaller; a second maintenance
-    * pass converges, and the knob's job is file-count economics, not byte
-    * precision. Returns the derived count. */
+    * the knob a deployment actually owns. A fixed `numFiles` is right at
+    * one data volume only; at 100 TB nobody knows the count, but everybody
+    * knows the size the scan layer wants (512 MB–1 GB per file: footer and
+    * open cost amortize, a task stays a sane work unit, min/max pruning
+    * keeps its resolution). The volume is [[liveBytes]] — exactly the file
+    * set [[read]] lists and the rewrite folds — and the rewrite targets
+    * `ceil(bytes / targetBytes)` files. The estimate is pre-rewrite bytes:
+    * a rewrite that drops rows (TTL, version prune) or re-compresses lands
+    * smaller; a second maintenance pass converges, and the knob's job is
+    * file-count economics, not byte precision. Returns the derived count. */
   def compactToFileSize(spark: SparkSession, dir: String, targetBytes: Long,
       rewrite: DataFrame => DataFrame = identity,
       clusterBy: Seq[String] = Nil, zOrder: Boolean = false): Int = {
     require(targetBytes > 0)
-    def bytes(f: File): Long = {
-      val kids = f.listFiles()
-      if (kids == null) 0L
-      else kids.iterator.filterNot(k =>
-        k.getName.startsWith(".") || k.getName.startsWith("_")).map { k =>
-        if (k.isDirectory) bytes(k)
-        else if (k.getName.endsWith(".parquet")) k.length()
-        else 0L
-      }.sum
-    }
-    val total = bytes(new File(dir))
-    val numFiles = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
+    val numFiles = math.max(1L, (liveBytes(dir) + targetBytes - 1) / targetBytes).toInt
     compact(spark, dir, numFiles, rewrite, clusterBy, zOrder)
     numFiles
   }
@@ -963,59 +1059,14 @@ object Store {
       // task balance follows input file sizes — both fine for a file-count
       // economics knob sized from bytes.
       if (clusterBy.isEmpty) shaped.coalesce(numFiles)
-      else {
-        // order-preserving rewrite: range slices + in-file sort, so the
-        // compacted files keep narrow key ranges and zone-map/footer
-        // pruning survives the maintenance cycle — here the shuffle IS the
-        // product (the re-clustering), priced once per maintenance epoch
-        import org.apache.spark.sql.functions.{col, min, max}
-        val zRanges: Option[Seq[(org.apache.spark.sql.Column, Double, Double)]] =
-          if (!zOrder) None
-          else {
-            // one tiny agg for the bucket ranges (2k doubles to the driver
-            // — the same bound as Layout.writeZOrdered's stats pass)
-            val stats = shaped.select(clusterBy.flatMap(c =>
-              Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))): _*)
-              .collect().head
-            val rs = clusterBy.zipWithIndex.map { case (c, i) =>
-              if (stats.isNullAt(2 * i) || stats.isNullAt(2 * i + 1)) None
-              else Some((col(c), stats.getDouble(2 * i), stats.getDouble(2 * i + 1)))
-            }
-            if (rs.forall(_.isDefined)) Some(rs.map(_.get))
-            else {
-              log.warn(s"zOrder compaction of $dir: a clusterBy column has " +
-                "no non-null values to bucket; falling back to the " +
-                "lexicographic clustered rewrite")
-              None
-            }
-          }
-        zRanges match {
-          case Some(ranges) if numFiles > 1 =>
-            val zc = s"__z_${UUID.randomUUID().toString.take(8)}"
-            shaped.withColumn(zc, Layout.zValue(ranges))
-              .repartitionByRange(numFiles, col(zc))
-              .sortWithinPartitions(col(zc))
-              .drop(zc)
-          case Some(ranges) =>
-            // single-file fold: a range "partitioning" into 1 slice is a
-            // SinglePartition EXCHANGE — the whole folded image funneled
-            // through one network task. coalesce(1) + in-file sort writes
-            // the identical single sorted file with zero shuffle.
-            val zc = s"__z_${UUID.randomUUID().toString.take(8)}"
-            shaped.withColumn(zc, Layout.zValue(ranges))
-              .coalesce(1)
-              .sortWithinPartitions(col(zc))
-              .drop(zc)
-          case None =>
-            val cols = clusterBy.map(col)
-            if (numFiles > 1)
-              shaped.repartitionByRange(numFiles, cols: _*)
-                .sortWithinPartitions(cols: _*)
-            else
-              // same reasoning as the zOrder single-file case above
-              shaped.coalesce(1).sortWithinPartitions(cols: _*)
-        }
-      }
+      // order-preserving rewrite: the compacted files keep narrow key
+      // ranges and zone-map/footer pruning survives the maintenance cycle —
+      // here the shuffle IS the product (the re-clustering), priced once
+      // per maintenance epoch
+      else Layout.clusterShape(shaped, clusterBy, numFiles, zOrder, noRange = c =>
+        log.warn(s"zOrder compaction of $dir: clusterBy column '$c' has no " +
+          "non-null values to bucket; falling back to the lexicographic " +
+          "clustered rewrite"))
     out.write.mode(SaveMode.Overwrite).parquet(tmp)
     // selective compaction's kept files enter the image by HARD LINK —
     // after the Overwrite (which clears tmp), before the swap: zero data
@@ -1039,7 +1090,7 @@ object Store {
     // only the swap is exclusive: in-flight admissions drain, the renames
     // run alone, admissions resume against the promoted image
     withSwapLock(dir) {
-      Layout.promote(tmp, dir, salvage = (bak, image) => {
+      promote(tmp, dir, salvage = (bak, image) => {
         val ds = bak.listFiles()
         if (ds != null) ds
           .filter(f => f.isDirectory && f.getName.startsWith("delta-") &&

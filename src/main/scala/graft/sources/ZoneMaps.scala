@@ -23,8 +23,12 @@ import org.apache.spark.sql.functions._
   *
   * Effectiveness is a LAYOUT property: ranges prune iff the layout
   * correlates the column with file boundaries ([[Layout.writeClustered]] /
-  * z-order). On a random layout every file straddles the predicate and
-  * nothing prunes — correctness is unaffected (the spec pins both).
+  * [[Layout.writeZOrdered]]). On a random layout every file straddles the
+  * predicate and nothing prunes — correctness is unaffected (the spec pins
+  * both). A zone-mapped Store keeps that layout across maintenance:
+  * [[maintainIndexed]] compacts with `clusterBy` on the tracked columns,
+  * and [[Store.compact]] shapes that rewrite with the writers' own
+  * [[Layout.clusterShape]].
   *
   * Scale discipline: building is ONE distributed scan grouped by
   * `_metadata.file_path` (the stats shuffle is |files|-scale, not
@@ -603,17 +607,15 @@ object ZoneMaps {
     }
   }
 
-  /** Streaming face: the SAME admission as [[admitIndexed]], as a
-    * foreachBatch sink with idempotent per-micro-batch ids — the
-    * [[BloomIndex.streamingAdmission]] shape. */
+  /** Streaming face: the SAME admission as [[admitIndexed]] through
+    * [[Store.admissionSink]] — the [[BloomIndex.streamingAdmission]]
+    * shape. */
   def streamingAdmission(rows: DataFrame, dataDir: String, statsDir: String,
       cols: Seq[String])
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitIndexed(batch, dataDir, statsDir, cols, s"zm$batchId"): Unit
-      }
+    Store.admissionSink(rows, "zm") { (batch, id) =>
+      admitIndexed(batch, dataDir, statsDir, cols, id): Unit
+    }
 
   /** Admit-count-triggered maintenance for a zone-mapped Store: once
     * `every` deltas have committed, compact the data store — ORDER-

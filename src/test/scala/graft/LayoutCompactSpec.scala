@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{Layout, Tables}
+import graft.sources.{Store, Tables}
 
-/** Size-targeted compaction contract: the file count is DERIVED from the
-  * directory's real byte volume, the rewrite is result-invisible, and the
-  * realized sizes land in the target's order of magnitude (compression
-  * drift documented, not corrected). */
+/** Size-targeted compaction of a plain Spark-written parquet directory (a
+  * Store with a flat base and no deltas): the file count is DERIVED from
+  * the directory's real byte volume ([[Store.liveBytes]]), the rewrite is
+  * result-invisible, and the realized sizes land in the target's order of
+  * magnitude (compression drift documented, not corrected). */
 class LayoutCompactSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -39,7 +40,11 @@ class LayoutCompactSpec extends AnyFunSuite {
       val want = fingerprint(spark.read.parquet(dir))
       val bytes = before.map(_.length()).sum
       val target = bytes / 4
-      val planned = Layout.compactToFileSize(spark, dir, target)
+      // clustered: the rewrite writes exactly `planned` range slices (a
+      // bin-pack coalesce writes AT MOST that many — fewer when Spark packs
+      // the 64 input files into fewer read partitions)
+      val planned = Store.compactToFileSize(spark, dir, target,
+        clusterBy = Seq("l_orderkey"))
       assert(planned == 4 || planned == 5, s"ceil(bytes/target) ≈ 4, got $planned")
       val after = dataFiles(dir)
       assert(after.size == planned)
@@ -57,7 +62,7 @@ class LayoutCompactSpec extends AnyFunSuite {
     try {
       val dir = s"$base/data"
       Tables.supplier(spark, sf).repartition(8).write.parquet(dir)
-      val planned = Layout.compactToFileSize(spark, dir, targetBytes = 1L << 40)
+      val planned = Store.compactToFileSize(spark, dir, targetBytes = 1L << 40)
       assert(planned == 1 && dataFiles(dir).size == 1)
     } finally sweep(base)
   }
@@ -67,14 +72,15 @@ class LayoutCompactSpec extends AnyFunSuite {
     try {
       val dir = s"$base/data"
       Tables.supplier(spark, sf).coalesce(1).write.parquet(dir)
-      val visible = Layout.parquetBytes(new java.io.File(dir))
+      val visible = Store.liveBytes(dir)
+      assert(visible == dataFiles(dir).map(_.length()).sum)
       // a crashed admit's staging dir must not inflate the estimate
       val staged = new java.io.File(dir, ".inprogress-zz")
       staged.mkdirs()
       val junk = new java.io.File(staged, "part-junk.parquet")
       val out = new java.io.FileOutputStream(junk)
       out.write(new Array[Byte](1 << 20)); out.close()
-      assert(Layout.parquetBytes(new java.io.File(dir)) == visible)
+      assert(Store.liveBytes(dir) == visible)
     } finally sweep(base)
   }
 }

@@ -166,7 +166,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("compaction rewrites many small files into few clustered ones, losslessly") {
-    import graft.sources.Layout
+    import graft.sources.Store
     val dir = java.nio.file.Files.createTempDirectory("graft_compact_").toString + "/t"
     val src = Tables.lineitem(spark, sf)
       .select($"l_orderkey", $"l_linenumber", $"l_quantity")
@@ -179,7 +179,7 @@ class ScaleSpec extends AnyFunSuite {
       .agg(sum(xxhash64($"l_orderkey", $"l_linenumber", $"l_quantity")
         .cast("decimal(38,0)"))).head().getDecimal(0)
     val checksum = multisetSum(dir)
-    Layout.compact(spark, dir, numFiles = 4, clusterCols = Seq("l_orderkey"))
+    Store.compact(spark, dir, numFiles = 4, clusterBy = Seq("l_orderkey"))
     val after = parts(dir)
     assert(after.size <= 4, s"still fragmented after compaction: $after")
     assert(!new java.io.File(dir + ".old").exists() &&

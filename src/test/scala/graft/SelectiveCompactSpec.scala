@@ -155,6 +155,41 @@ class SelectiveCompactSpec extends AnyFunSuite {
     } finally sweep(base)
   }
 
+  test("fold counts are the image's files: a nested and an oddly-named delta file both count") {
+    val base = tmp()
+    try {
+      val dir = s"$base/store"
+      assert(Store.appendIdempotent(batch("n", 300), dir, "n"))
+      assert(Store.appendIdempotent(batch("o", 200), dir, "o"))
+      def parts(d: File) =
+        d.listFiles().toSeq.filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      // delta-n's data file one directory deeper
+      val dn = new File(dir, "delta-n")
+      val sub = new File(dn, "sub")
+      assert(sub.mkdir())
+      parts(dn).foreach(f => assert(f.renameTo(new File(sub, f.getName))))
+      // delta-o's data file without the .parquet suffix (still not hidden)
+      val dOdd = new File(dir, "delta-o")
+      parts(dOdd).foreach(f => assert(f.renameTo(
+        new File(dOdd, f.getName.stripSuffix(".parquet") + ".data"))))
+      // the image: every non-hidden file under the folded deltas, any depth
+      def visible(f: File): Seq[File] = f.listFiles().toSeq
+        .filterNot(k => k.getName.startsWith(".") || k.getName.startsWith("_"))
+        .flatMap(k => if (k.isFile) Seq(k) else visible(k))
+      val image = Seq(dn, dOdd).flatMap(visible)
+      assert(image.exists(_.getParentFile == sub) &&
+        image.exists(_.getName.endsWith(".data")), s"fixture: $image")
+      val imageBytes = image.map(_.length()).sum // before the fold deletes them
+      val rep = Store.compactSelective(spark, dir, minFileBytes = 1L << 20)
+      assert(rep.foldedDeltas == 2)
+      assert(rep.foldedFiles == image.size,
+        s"foldedFiles ${rep.foldedFiles} vs the image's ${image.size} files")
+      assert(rep.foldedBytes == imageBytes,
+        s"foldedBytes ${rep.foldedBytes} vs the image's $imageBytes")
+      assert(Store.read(spark, dir).count() == 500, "every folded row survives")
+    } finally sweep(base)
+  }
+
   test("single-file clustered fold is shuffle-free: coalesce + in-file sort, zero exchanges") {
     // Round-12 regression (PlanLintSpec AQE-ON): a clustered fold whose
     // byte-derived count collapsed to 1 file planned

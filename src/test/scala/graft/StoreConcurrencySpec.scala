@@ -5,7 +5,7 @@ import java.util.concurrent.Executors
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{Layout, Store}
+import graft.sources.Store
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -21,7 +21,7 @@ import scala.concurrent.duration._
   *    comes from the image's frozen file index and the swap salvages
   *    every committed delta the image provably did not include — pinned
   *    from both sides (salvaged delta survives un-doubled with working
-  *    replay markers; the raw Layout.promote underneath really does drop
+  *    replay markers; the raw Store.promote underneath really does drop
   *    the old copy wholesale, so the salvage step is load-bearing). The
   *    residual exclusion window is the two renames themselves.
   */
@@ -93,7 +93,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
       Store.append(Seq((2L, 2L)).toDF("writer", "n"), store)
       val tmp = store + ".compact"
       stale.repartition(1).write.mode("overwrite").parquet(tmp)
-      Layout.promote(tmp, store) // no salvage: raw swap semantics
+      Store.promote(tmp, store) // no salvage: raw swap semantics
       assert(Store.read(spark, store).as[(Long, Long)].collect().toSet ==
         Set((1L, 1L)),
         "raw promote replaces wholesale — Store.compactImage's salvage is " +
