@@ -19,9 +19,9 @@ import graft.functions._
   * (or `.withExtensions(new GraftExtensions)`). Every engine session —
   * Bench, Verify, the specs' shared session, a platform-built session
   * (Thrift server, Connect, notebooks) — gets the as-of join strategy,
-  * the plan rules, the filter-literal binding and all 18 SQL-callable
-  * functions without user code running first; there is no per-session
-  * registration call. */
+  * the one-pass recursive-CTE strategy, the plan rules, the filter-literal
+  * binding and all 18 SQL-callable functions without user code running
+  * first; there is no per-session registration call. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
@@ -58,6 +58,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    // a recursive CTE whose step is an equi-join of the previous level
+    // with a static side expands in one driver pass, not one Spark query
+    // per level; any other loop stays Spark's UnionLoopExec — see
+    // RecursiveExpandExec's scaladoc for the shape and the caps
+    ext.injectPlannerStrategy(_ => graft.plans.RecursiveExpandStrategy)
     // rewrite size(collect_set() OVER running-frame) running-distinct
     // windows into the constant-state first-occurrence running sum — see
     // RewriteRunningDistinct's scaladoc for the state-size argument

@@ -349,16 +349,21 @@ object Relational5 {
     * parent key = frontier key), which is the shape that scales: each
     * iteration is one hash join of the current frontier against the
     * dimension, never a cartesian; iteration count is tree depth
-    * (logarithmic), not row count. Subtree totals aggregate per depth in
-    * exact DECIMAL. The acyclic parent function makes UNION ALL safe (no
-    * revisits), so no global dedup fixpoint is paid. */
+    * (logarithmic), not row count. That shape plans as one
+    * `plans/RecursiveExpandExec`: the levels expand in one driver pass,
+    * with a job count that does not grow with depth. Subtree totals
+    * aggregate per depth in exact DECIMAL. The acyclic parent function
+    * makes UNION ALL safe (no revisits), so no global dedup fixpoint is
+    * paid. */
   def q50RecursiveBom(spark: SparkSession, dir: String): DataFrame = {
-    // materialize the dimension once (r13, guide §5): the recursive step
-    // re-resolves the view EVERY iteration, so the ~log2(|part|) rounds
-    // each paid a fresh parquet scan + decode of the same single-row-group
-    // file; a localCheckpoint inside the timed query turns those into
-    // block reads (intra-query reuse across iterations, not cross-run
-    // caching). Rows are identical — only the view's physical source moves.
+    // materialize the dimension once (r13, guide §5). The recursion is a
+    // linear equi-join over a small static side, so plans/RecursiveExpand
+    // reads the dimension once and expands every level on the driver; the
+    // checkpoint now serves the final join's second read of `part`, and
+    // the over-cap fallback to Spark's loop, whose recursive step
+    // re-resolves the view every level (a block read, not a fresh parquet
+    // scan and decode of the same file). Intra-query reuse, not cross-run
+    // caching: rows are identical, only the view's physical source moves.
     Tables.part(spark, dir).localCheckpoint(true)
       .createOrReplaceTempView("part_q50")
     spark.sql(

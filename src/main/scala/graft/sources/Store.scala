@@ -142,8 +142,9 @@ object Store {
 
   /** [[readFiles]], plus the number of read partitions Spark packs the
     * files into when the read was built on the driver (None above
-    * [[MaxDriverFiles]]). */
-  private def readPacked(spark: SparkSession, files: Seq[String]): (DataFrame, Option[Int]) =
+    * [[MaxDriverFiles]]): the one packing decision the serve paths
+    * share. */
+  private[graft] def readPacked(spark: SparkSession, files: Seq[String]): (DataFrame, Option[Int]) =
     if (files.nonEmpty && files.size <= MaxDriverFiles) {
       // driver-statted file index (r13): a plain spark.read.parquet(files)
       // would RE-LIST every path it was just handed — a distributed job

@@ -455,10 +455,12 @@ object ZoneMaps {
     * the stats are cached, one bounded stats scan over budget) returns
     * each served file's metadata values and the boundary-file list; then
     * ONE aggregate folds those values, as a local relation, together with
-    * the scan of the boundary files. The scan leg's result types anchor
-    * the answer, so it stays generic over timestamps, decimals and
-    * strings, and a metadata value of a literal NULL (an untracked target)
-    * cannot coerce it away from the data's type. `agg` receives the stats
+    * the scan of the boundary files: one job when Spark packs the
+    * boundary files into one read partition, else a scan job and a merge
+    * after its exchange. The scan leg's result types anchor the answer,
+    * so it stays generic over timestamps, decimals and strings, and a
+    * metadata value of a literal NULL (an untracked target) cannot coerce
+    * it away from the data's type. `agg` receives the stats
     * table's columns (empty when the store has no stats yet: every file
     * is scanned). Returns the answer as a 1-row local frame plus
     * (filesScanned, filesTotal). */
@@ -482,19 +484,26 @@ object ZoneMaps {
         .map(r => Row.fromSeq(r.toSeq.drop(2))).toSeq.asJava,
         org.apache.spark.sql.types.StructType(schema.drop(2)))
     }
-    val scanned =
-      (if (scanFiles.nonEmpty) Store.readFiles(spark, scanFiles).filter(rowPred(preds))
-       // no files to scan: an empty frame of the data's schema still types
-       // the answer; an empty store has no schema, and only COUNT answers
-       else if (live.isEmpty) spark.emptyDataFrame
-       else Store.read(spark, dataDir).filter(lit(false)))
-        .select(cols.map(c => c.scan.as(c.name)): _*)
+    // boundary files Spark packs into one read partition fold in one task:
+    // the coalesced union's single partition needs no exchange before the
+    // merge aggregate (the readCandidates rule)
+    val (read, onePartition) =
+      if (scanFiles.nonEmpty) {
+        val (df, partitions) = Store.readPacked(spark, scanFiles)
+        (df.filter(rowPred(preds)), partitions.contains(1))
+      }
+      // no files to scan: an empty frame of the data's schema still types
+      // the answer; an empty store has no schema, and only COUNT answers
+      else if (live.isEmpty) (spark.emptyDataFrame, false)
+      else (Store.read(spark, dataDir).filter(lit(false)), false)
+    val scanned = read.select(cols.map(c => c.scan.as(c.name)): _*)
     val types = scanned.select(cols.map(c => c.fold(col(c.name)).as(c.name)): _*)
       .schema
     def typed(c: AggCol, v: Column) = v.cast(types(c.name).dataType).as(c.name)
-    val merged = (meta.map(_.select(cols.map(c => typed(c, col(c.name))): _*))
+    val legs = (meta.map(_.select(cols.map(c => typed(c, col(c.name))): _*))
         .toSeq :+ scanned)
       .reduce(_ unionByName _)
+    val merged = (if (onePartition) legs.coalesce(1) else legs)
       .select(cols.map(c => typed(c, c.fold(col(c.name)))): _*)
     (spark.createDataFrame(java.util.Arrays.asList(merged.collect(): _*),
       merged.schema), (scanFiles.length, live.size))

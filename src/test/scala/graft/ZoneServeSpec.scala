@@ -81,6 +81,42 @@ class ZoneServeSpec extends AnyFunSuite {
     } finally sweep(base)
   }
 
+  test("one boundary file: each aggregate face runs exactly 1 job warm") {
+    val base = tmp()
+    try {
+      val (dataDir, statsDir) = (s"$base/data", s"$base/stats")
+      val rows = admitted(dataDir, statsDir)
+      // the NULLs of v all range-partition into the first file, which also
+      // holds v = 100: every other file lies inside [100, 2000]
+      val preds: Preds = Seq(("v", lit(100L), lit(2000L)))
+      def faces() = Seq[(String, () => (Row, (Int, Int)))](
+        "count" -> (() => {
+          val (n, files) = ZoneMaps.countRangeIndexed(spark, dataDir, statsDir, preds)
+          (Row(n), files)
+        }),
+        "minmax" -> (() => {
+          val (df, files) = ZoneMaps.minMaxRangeIndexed(spark, dataDir, statsDir, preds, "w")
+          (df.head(), files)
+        }),
+        "sum" -> (() => {
+          val (df, files) = ZoneMaps.sumRangeIndexed(spark, dataDir, statsDir, preds, "w")
+          (df.head(), files)
+        }))
+      faces().foreach(_._2()) // warm the serve cache
+      val in = rows.filter($"v".between(100L, 2000L))
+      val brute = Map(
+        "count" -> Row(in.count()),
+        "minmax" -> in.agg(min($"w"), max($"w")).head(),
+        "sum" -> in.agg(sum($"w"), count($"w")).head())
+      faces().foreach { case (face, call) =>
+        val ((answer, (scanned, total)), jobs) = jobsOf(call())
+        assert(scanned == 1 && total == 8, s"$face scanned $scanned of $total files")
+        assert(answer == brute(face), s"$face answered $answer")
+        assert(jobs == 1, s"$face ran $jobs jobs with a warm cache and one boundary file")
+      }
+    } finally sweep(base)
+  }
+
   test("job ceilings over budget: the decision is exactly one stats job") {
     val base = tmp()
     try {
