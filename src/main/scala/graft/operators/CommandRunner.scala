@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.io.File
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import scala.sys.process._
 
 /** Executor-side execution of a user command over bind-mounted host paths.
@@ -37,8 +37,7 @@ trait CommandRunner extends Serializable {
 object SubprocessRunner extends CommandRunner {
 
   override def run(command: String, binds: Seq[(File, String)]): Unit = {
-    val sandbox = Files.createTempDirectory(
-      Paths.get(sys.env.getOrElse("TMPDIR", "/tmp")), "graft_sandbox_")
+    val sandbox = Files.createTempDirectory(Pipeline.scratchRoot, "graft_sandbox_")
     try {
       val env = binds.zipWithIndex.map { case ((host, _), i) =>
         s"GRAFT_BIND_$i" -> host.getAbsolutePath
@@ -87,13 +86,9 @@ object SubprocessRunner extends CommandRunner {
         }
       }
     } finally {
-      // best-effort sandbox cleanup (symlinks only; bind targets survive)
-      try {
-        val stream = Files.walk(sandbox)
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-        finally stream.close()
-      } catch { case _: Exception => () }
+      // best-effort sandbox cleanup: the walk does not follow the bind
+      // symlinks, so bind targets survive
+      Pipeline.deleteRecursive(sandbox.toFile)
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.io._
 import java.nio.charset.Charset
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 /** Partition ⇄ filesystem (de)serialization strategies for piping Spark
   * partitions through external commands.

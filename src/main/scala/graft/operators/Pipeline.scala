@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.io.File
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.{Comparator, UUID}
 
 import org.apache.spark.TaskContext
@@ -199,9 +199,13 @@ object Pipeline {
       .as[(String, Array[Byte])])
   }
 
-  private[operators] def freshTempPath(tag: String): File =
+  /** The one scratch root of the operators: mount points and command
+    * sandboxes live under `$TMPDIR` (default `/tmp`). */
+  private[operators] def scratchRoot: Path =
     Paths.get(sys.env.getOrElse("TMPDIR", "/tmp"))
-      .resolve(s"graft_${tag}_${UUID.randomUUID()}").toFile
+
+  private[operators] def freshTempPath(tag: String): File =
+    scratchRoot.resolve(s"graft_${tag}_${UUID.randomUUID()}").toFile
 
   /** Executor-side body of one piped partition. Deletes the input eagerly and
     * the output once the task completes (the read is streaming, so the files

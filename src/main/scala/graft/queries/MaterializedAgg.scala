@@ -107,7 +107,6 @@ object MaterializedAgg {
     * orders table — the recompute the incremental face must be
     * indistinguishable from. */
   def mvOrdersDaily(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val store = java.nio.file.Files
       .createTempDirectory("graft_mv_oneshot_").toString
     try {

@@ -8,9 +8,10 @@ import graft.sources.{BloomIndex, Layout, Tables, ZoneMaps}
 /** Driver face for [[graft.sources.ZoneMaps]] — the data-skipping scan.
   *
   * The query lays out a clustered copy of lineitem (range-sliced on
-  * l_shipdate, the layout that MAKES zone maps effective), builds the
-  * per-file stats table, then answers a quarter-range revenue rollup
-  * reading only files whose range intersects the predicate.
+  * l_shipdate, the layout that MAKES zone maps effective), indexes that
+  * plain directory through the Store face (the first heal stats every
+  * live file), then answers a quarter-range revenue rollup reading only
+  * files whose range intersects the predicate.
   *
   * The ORACLE deliberately checks the aggregate against the ORIGINAL
   * table: data skipping is an access-path optimization and must be
@@ -122,10 +123,10 @@ object ZoneScan {
     try {
       Layout.writeClustered(Tables.lineitem(spark, dir), dataDir,
         Seq("l_shipdate"), numFiles = 16)
-      ZoneMaps.build(spark, dataDir, Seq("l_shipdate"), statsDir)
-      val (slice, _) = ZoneMaps.scanPruned(spark, dataDir, statsDir,
-        "l_shipdate", lit("1997-01-01").cast("timestamp"),
-        lit("1997-04-01").cast("timestamp"))
+      ZoneMaps.maintainIndex(spark, dataDir, statsDir, Seq("l_shipdate"))
+      val (slice, _) = ZoneMaps.lookupRangeIndexed(spark, dataDir, statsDir,
+        Seq(("l_shipdate", lit("1997-01-01").cast("timestamp"),
+          lit("1997-04-01").cast("timestamp"))))
       slice
         .groupBy($"l_returnflag")
         .agg(count(lit(1)).as("n_lines"),
@@ -153,8 +154,9 @@ object ZoneScan {
   /** Point lookup through the per-file Bloom index
     * ([[graft.sources.BloomIndex]]) — the equality-probe complement of
     * q79's range pruning. Lays out a clustered copy of lineitem keyed on
-    * l_orderkey, builds the per-file blooms, and fetches ONE order's
-    * lines reading only files whose filter might contain the key. The
+    * l_orderkey, indexes it through the Store face (the first heal builds
+    * every file's bloom), and fetches ONE order's lines reading only files
+    * whose filter might contain the key. The
     * probe key is max(l_orderkey) — deterministic and oracle-expressible;
     * the 1-row agg collect is bounded by construction. As with q79, the
     * oracle checks the result against the ORIGINAL table (skipping must
@@ -167,10 +169,9 @@ object ZoneScan {
     try {
       val li = Tables.lineitem(spark, dir)
       Layout.writeClustered(li, dataDir, Seq("l_orderkey"), numFiles = 16)
-      BloomIndex.build(spark, dataDir, "l_orderkey", statsDir,
-        expectedPerFile = 100000L)
+      BloomIndex.maintainIndex(spark, dataDir, statsDir, "l_orderkey")
       val key = li.agg(max($"l_orderkey")).as[Long].head() // bounded: 1 row
-      val (rows, _) = BloomIndex.scanPointLookup(spark, dataDir, statsDir,
+      val (rows, _) = BloomIndex.lookupIndexed(spark, dataDir, statsDir,
         "l_orderkey", lit(key))
       rows
         .select($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_quantity")
@@ -464,7 +465,6 @@ object ZoneScan {
     * all four scalars from the raw table — the metadata/scan split must be
     * result-invisible; how few files scan is pinned in ZoneMapStoreSpec. */
   def q89ZoneMinMaxPushdown(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_zoneminmax_")
     val (dataDir, statsDir) = (s"$base/data", s"$base/stats")
     try {

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.functions.BloomSketch
 
@@ -21,8 +22,9 @@ import graft.functions.BloomSketch
   * |files|-row metadata table instead of one footer GET per file.
   *
   * Scale discipline (the part that matters at 100 TB):
-  *  - BUILD is one distributed pass grouped by `_metadata.file_path`; the
-  *    shuffle carries partially-merged filters, |files|-scale, never rows.
+  *  - STATS are one distributed pass grouped by `_metadata.file_path`;
+  *    the shuffle carries partially-merged filters, |files|-scale, never
+  *    rows.
   *  - PROBE never collects filters by default: blooms can be ~100 KB each
   *    (a million files -> ~100 GB — driver-fatal, unlike zone maps'
   *    ~100 B rows), so the membership test runs as a DISTRIBUTED filter
@@ -39,23 +41,6 @@ object BloomIndex {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** One distributed pass over `dataPath`: per-file row count + Bloom
-    * filter of `xxhash64(keyCol)`, written (overwrite) to `statsDir`.
-    *
-    * `expectedPerFile` declares the filter size (bits are fixed at
-    * creation): size it to the layout's target rows-per-file. Oversizing
-    * wastes ~1.2 KB per 1000 declared items at 1% fpp; undersizing only
-    * degrades the false-positive rate — a bloom's "definitely absent" is
-    * unconditional, so pruning stays CORRECT either way. */
-  def build(spark: SparkSession, dataPath: String, keyCol: String,
-      statsDir: String, expectedPerFile: Long = 100000L,
-      fpp: Double = 0.01): Unit = {
-    val data = spark.read.parquet(dataPath)
-    statsFor(spark, data, Seq(keyCol), expectedPerFile, fpp)
-      .coalesce(statsNumFiles(data.inputFiles.length, expectedPerFile, fpp))
-      .write.mode(SaveMode.Overwrite).parquet(statsDir)
-  }
-
   /** Stats-table output file count sized from its predicted BYTE volume
     * (|dataFiles| rows x one serialized bloom each), not a hardcoded 1:
     * at the design point of 10^6 files x ~100 KB blooms a coalesce(1)
@@ -65,7 +50,7 @@ object BloomIndex {
     * -n*ln(p)/ln(2)^2, rounded up to the 64-bit words the bit array
     * allocates): creating a throwaway filter just to read bitSize()
     * would materialize the whole bit array on the driver (~1.2 GB at
-    * expectedPerFile=1e9, fpp=0.01) on every build/heal. Parity with the
+    * expectedPerFile=1e9, fpp=0.01) on every admit/heal. Parity with the
     * allocated size is spec-pinned across the (n, fpp) grid. */
   private[graft] def statsNumFiles(nDataFiles: Int, expectedPerFile: Long,
       fpp: Double, targetBytes: Long = 64L << 20): Int = {
@@ -76,39 +61,7 @@ object BloomIndex {
       / targetBytes).toInt
   }
 
-  /** Scan `dataPath` for rows with `keyCol === key`, reading ONLY files
-    * whose Bloom filter might contain the key. Returns the filtered frame
-    * plus (filesRead, filesTotal) for observability. The equality
-    * predicate is still applied (and still pushes down to parquet row
-    * groups): a bloom's "maybe" is never trusted as a hit.
-    *
-    * `key` must be a literal/column of the SAME type as the indexed
-    * column — `xxhash64` is type-aware, so an int probe of a long-keyed
-    * index would hash differently and (correctly but uselessly) prune
-    * everything. */
-  def scanPointLookup(spark: SparkSession, dataPath: String,
-      statsDir: String, keyCol: String, key: Column): (DataFrame, (Int, Int)) = {
-    // ONE distributed pass over the stats table decides both the candidate
-    // list and the total: the probe AND the keep-filter run where the
-    // blooms live, so the driver receives only the SURVIVING file names
-    // (true hits + fpp stragglers) plus one count — never the bloom column
-    // and never an |files|-sized flag list
-    val row = spark.read.parquet(statsDir)
-      .select(col("file"),
-        BloomSketch.mightContain(col("bloom"), xxhash64(key)).as("keep"))
-      .agg(count(lit(1)).as("total"),
-        // when() without otherwise yields NULL for pruned files, and
-        // collect_list skips NULLs: survivors only
-        collect_list(when(col("keep"), col("file"))).as("files"))
-      .head()
-    val total = row.getLong(0).toInt
-    val files = row.getSeq[String](1)
-    val df = Store.readCandidates(spark, files, col(keyCol) === key,
-      emptyFrom = spark.read.parquet(dataPath))
-    (df, (files.length, total))
-  }
-
-  // ── Incremental face: a bloom-indexed Store ────────────────────────────
+  // ── The index face: a bloom-indexed Store ──────────────────────────────
   //
   // Composition with [[Store]]'s crash-safe admission through the shared
   // [[StatsIndex]] protocol: each admitted delta carries its per-file
@@ -131,16 +84,18 @@ object BloomIndex {
   }
   private[graft] val canonPathUdf = udf(canonPath _)
 
-  /** The index face's stats function: blooms for exactly `files`, written
-    * in [[statsNumFiles]] files. */
+  /** The index face's stats function: per-file row count + Bloom filter
+    * of `xxhash64(keyCols)` for exactly `files`, in one distributed pass
+    * grouped by `_metadata.file_path`, written in [[statsNumFiles]] files.
+    *
+    * `expectedPerFile` declares the filter size (bits are fixed at
+    * creation): size it to the layout's target rows-per-file. Oversizing
+    * wastes ~1.2 KB per 1000 declared items at 1% fpp; undersizing only
+    * degrades the false-positive rate — a bloom's "definitely absent" is
+    * unconditional, so pruning stays CORRECT either way. */
   private def fileStats(spark: SparkSession, keyCols: Seq[String],
       expectedPerFile: Long, fpp: Double)(files: Seq[String]): DataFrame =
-    statsFor(spark, Store.readFiles(spark, files), keyCols, expectedPerFile, fpp)
-      .coalesce(statsNumFiles(files.length, expectedPerFile, fpp))
-
-  private def statsFor(spark: SparkSession, dataFiles: DataFrame,
-      keyCols: Seq[String], expectedPerFile: Long, fpp: Double): DataFrame =
-    dataFiles
+    Store.readFiles(spark, files)
       // xxhash64 is variadic: a composite key hashes all components in one
       // codegen'd pass — no struct allocation, no string concat
       .select(col("_metadata.file_path").as("raw"),
@@ -150,6 +105,7 @@ object BloomIndex {
         BloomSketch.bloomAgg(col("h"), expectedPerFile, fpp).as("bloom"))
       // canonicalize AFTER the agg: the udf runs once per FILE, not per row
       .select(canonPathUdf(col("raw")).as("file"), col("n_rows"), col("bloom"))
+      .coalesce(statsNumFiles(files.length, expectedPerFile, fpp))
 
   // ── Composite-key contract ─────────────────────────────────────────────
   //
@@ -222,30 +178,16 @@ object BloomIndex {
   // just to decide "which files?" — a scheduler round-trip in front of
   // every lookup (bench p50 was ~0.5 s). Stats stores under the
   // [[ServeCache]] budget keep their DESERIALIZED filters on the driver
-  // and literal probes test them in-process; over budget, or with
-  // non-literal probe keys, lookups run the distributed pass. Spec:
-  // ServeCacheSpec.
+  // and probes whose keys are known on the driver test them in-process;
+  // over budget, or with non-literal probe keys, [[decide]] runs the
+  // distributed pass. Spec: ServeCacheSpec.
 
-  private val serveCache =
-    new ServeCache[Map[String, org.apache.spark.util.sketch.BloomFilter]]
+  private val serveCache = new ServeCache[Map[String, BloomFilter]]
 
   private val index = new StatsIndex("bloom", "bloom-", serveCache)
 
-  /** The cached (or freshly refreshed) filter map; None when the store
-    * exceeds the driver budget — callers run the distributed pass. */
-  private def cachedBlooms(spark: SparkSession, statsDir: String)
-      : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] =
-    serveCache.get(statsDir) {
-      // the refresh pays ONE collect job (a bounded Store.read merges
-      // footers on the driver)
-      val rows = Store.read(spark, statsDir)
-        .select(col("file"), col("bloom")).collect()
-      // duplicate rows for one file (heal racing admit): either is correct
-      rows.iterator.map { r =>
-        r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-      }.toMap
-    }
+  /** Spec-visible number of stats stores the serve cache holds. */
+  private[graft] def cachedStores: Int = serveCache.size
 
   /** xxhash64 of the probe tuple computed in-process — only when every
     * key is a foldable deterministic literal (the serving case);
@@ -265,11 +207,62 @@ object BloomIndex {
     else None
   }
 
-  /** Point lookup over a bloom-indexed Store. Decision per LIVE data file:
-    * covered by stats → its bloom decides; uncovered (crash window, or
-    * renamed by compaction) → read unconditionally. Stale stats rows
-    * pointing at dead files are ignored. Returns the filtered frame plus
-    * (filesRead, filesTotal). */
+  /** The per-file decision of every read face: `k` flags per LIVE data
+    * file. A covered file's bloom answers them; an uncovered file (crash
+    * window, or renamed by compaction) flags all `k` and is read
+    * unconditionally; stats rows for dead files are ignored. A heal
+    * racing an admit can leave two stats rows for one file: their flags
+    * are OR-merged (either row alone is correct — disagreement is only an
+    * fpp straggler, and OR keeps the conservative side).
+    *
+    * `probe` tests one filter in-process, and is given only when the keys
+    * are known on the driver: under the [[ServeCache]] budget it runs over
+    * the cached filters, with no Spark job. Otherwise `flags`, the same
+    * test as an `array<boolean>` over the stats table's `bloom` column,
+    * runs distributed against the live listing, and only files with a
+    * true flag come back — true hits + fpp stragglers + uncovered, never
+    * an |files| flag list. Returns the surviving `(file, flags)`, sorted
+    * by file. */
+  private def decide(spark: SparkSession, statsDir: String, live: Set[String],
+      k: Int, probe: Option[BloomFilter => Seq[Boolean]], flags: Column)
+      : Seq[(String, Seq[Boolean])] = {
+    import spark.implicits._
+    val all = Seq.fill(k)(true)
+    def served = probe.flatMap(p => serveCache.get(statsDir) {
+      // the refresh pays ONE collect job (a bounded Store.read merges
+      // footers on the driver); of duplicate rows for one file, the map
+      // keeps one, which alone is correct
+      Store.read(spark, statsDir).select(col("file"), col("bloom"))
+        .as[(String, Array[Byte])].collect().iterator.map { case (f, b) =>
+          f -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(b))
+        }.toMap
+    }.map(blooms => live.toSeq.map(f => f -> blooms.get(f).fold(all)(p))))
+    def distributed =
+      live.toSeq.toDF("file")
+        .join(Store.read(spark, statsDir).select(col("file"), flags.as("flags")),
+          Seq("file"), "left_outer")
+        .select(col("file"),
+          coalesce(col("flags"), array_repeat(lit(true), lit(k))).as("flags"))
+        .filter(exists(col("flags"), identity))
+        .as[(String, Seq[Boolean])].collect().toSeq
+    // no stats yet (a store mid-bootstrap): every live file is uncovered
+    val rows =
+      if (!Store.hasData(statsDir)) live.toSeq.map(_ -> all)
+      else served.getOrElse(distributed)
+    rows.filter(_._2.contains(true))
+      .groupMapReduce(_._1)(_._2)((a, b) => a.lazyZip(b).map(_ || _))
+      .toSeq.sortBy(_._1)
+  }
+
+  /** Point lookup over a bloom-indexed Store ([[decide]], one flag per
+    * live file). Returns the filtered frame plus (filesRead, filesTotal).
+    * The equality predicate is still applied (and still pushes down to
+    * parquet row groups): a bloom's "maybe" is never trusted as a hit.
+    *
+    * `key` must be a literal/column of the SAME type as the indexed
+    * column — `xxhash64` is type-aware, so an int probe of a long-keyed
+    * index would hash differently and (correctly but uselessly) prune
+    * everything. */
   def lookupIndexed(spark: SparkSession, dataDir: String, statsDir: String,
       keyCol: String, key: Column): (DataFrame, (Int, Int)) =
     lookupIndexedMulti(spark, dataDir, statsDir, Seq(keyCol), Seq(key))
@@ -281,41 +274,15 @@ object BloomIndex {
   def lookupIndexedMulti(spark: SparkSession, dataDir: String,
       statsDir: String, keyCols: Seq[String], keys: Seq[Column])
       : (DataFrame, (Int, Int)) = {
-    import spark.implicits._
     require(keys.size == keyCols.size,
       s"probe arity ${keys.size} != key columns ${keyCols.size}")
     verifyKeyCols(statsDir, keyCols)
     // |files|-bounded driver-side listing of names only; everything FROM
     // here is survivor-bounded
     val live = Store.liveFiles(dataDir).toSet
-    // decide per live file DISTRIBUTED-side: covered -> its bloom
-    // decides; uncovered (left-join miss: crash window or a compaction
-    // rename) -> read unconditionally. Stale stats rows for dead files
-    // fall out of the left join. Only the files-to-READ come back —
-    // true hits + fpp stragglers + uncovered, never an |files| flag
-    // list. distinct() guards against a heal racing an admit leaving
-    // two stats rows for one file (either row alone is correct; a
-    // duplicated name must not make the reader scan the file twice).
-    def distributedDecision(): Seq[String] = {
-      val liveDf = live.toSeq.toDF("file")
-      liveDf.join(
-          Store.read(spark, statsDir).select(col("file"),
-            BloomSketch.mightContain(col("bloom"), xxhash64(keys: _*))
-              .as("keep")),
-          Seq("file"), "left_outer")
-        .filter(coalesce(col("keep"), lit(true)))
-        .select(col("file")).distinct()
-        .as[String].collect().toSeq.sorted
-    }
-    val files: Seq[String] =
-      if (!Store.hasData(statsDir)) live.toSeq.sorted
-      else literalHash(spark, keys).flatMap(h =>
-        // serve path: same per-live-file decision, filters probed
-        // in-process (uncovered -> forall on None = read unconditionally)
-        cachedBlooms(spark, statsDir).map(blooms =>
-          live.toSeq.sorted.filter(f =>
-            blooms.get(f).forall(_.mightContainLong(h)))))
-        .getOrElse(distributedDecision())
+    val files = decide(spark, statsDir, live, 1,
+      literalHash(spark, keys).map(h => (b: BloomFilter) => Seq(b.mightContainLong(h))),
+      array(BloomSketch.mightContain(col("bloom"), xxhash64(keys: _*)))).map(_._1)
     val pred = keyCols.lazyZip(keys).map((c, k) => col(c) === k)
       .reduce(_ && _)
     // fallback schema frame is BY-NAME: only built (and only then merging
@@ -325,17 +292,13 @@ object BloomIndex {
     (df, (files.length, live.size))
   }
 
-  /** Batched point lookup over a bloom-indexed Store: ONE stats pass
-    * decides the candidate files for ALL K keys — production lookup
-    * traffic arrives in batches, and K sequential [[lookupIndexed]] calls
-    * pay K stats-table scans (and K bloom deserializations per stats row)
-    * for what one array-probe pass answers. Each stats row's filter is
-    * deserialized once and probed with the whole key batch
-    * ([[graft.functions.BloomContainsFlags]]); covered files keep their
-    * per-key flags, uncovered live files (crash window, compaction
-    * rename) conservatively flag every key. Only rows with at least one
-    * maybe survive to the driver — true hits + fpp stragglers + uncovered,
-    * never |files|.
+  /** Batched point lookup over a bloom-indexed Store: ONE decision over
+    * the stats ([[decide]], one flag per key) for ALL K keys — production
+    * lookup traffic arrives in batches, and K sequential [[lookupIndexed]]
+    * calls pay K stats-table scans (and K bloom deserializations per stats
+    * row) for what one array-probe pass answers. Each filter is probed
+    * with the whole key batch ([[graft.functions.BloomContainsFlags]] on
+    * the distributed pass).
     *
     * Returns (rows matching ANY key, per-key candidate files indexed like
     * `keys` — the attribution a lookup router needs to dispatch each key
@@ -344,53 +307,15 @@ object BloomIndex {
   def lookupIndexedBatch(spark: SparkSession, dataDir: String,
       statsDir: String, keyCol: String, keys: Seq[Column])
       : (DataFrame, Seq[Seq[String]], (Int, Int)) = {
-    import spark.implicits._
     require(keys.nonEmpty, "at least one lookup key")
     verifyKeyCols(statsDir, Seq(keyCol))
     // driver-side listing, same rationale as lookupIndexedMulti's
     val live = Store.liveFiles(dataDir).toSet
-    val k = keys.length
-    val collected: Seq[(String, Seq[Boolean])] =
-      if (!Store.hasData(statsDir))
-        live.toSeq.sorted.map(f => f -> Seq.fill(k)(true))
-      else {
-        // serve path: every probe key hashed in-process, each cached
-        // filter deserialized ONCE for its lifetime (vs once per batch in
-        // the distributed pass)
-        val hashOpts = keys.map(key => literalHash(spark, Seq(key)))
-        val served: Option[Seq[(String, Seq[Boolean])]] =
-          if (hashOpts.forall(_.isDefined))
-            cachedBlooms(spark, statsDir).map { blooms =>
-              val hs = hashOpts.map(_.get)
-              live.toSeq.sorted
-                .map(f => f -> (blooms.get(f) match {
-                  case Some(b) => hs.map(b.mightContainLong)
-                  case None => Seq.fill(k)(true)
-                }))
-                .filter(_._2.exists(identity))
-            }
-          else None
-        served.getOrElse {
-          val hashes = array(keys.map(key => xxhash64(key)): _*)
-          val liveDf = live.toSeq.toDF("file")
-          liveDf.join(
-              Store.read(spark, statsDir).select(col("file"),
-                BloomSketch.containsFlags(col("bloom"), hashes).as("flags")),
-              Seq("file"), "left_outer")
-            .select(col("file"),
-              coalesce(col("flags"),
-                array_repeat(lit(true), lit(k))).as("flags"))
-            .filter(exists(col("flags"), identity))
-            .as[(String, Seq[Boolean])].collect().toSeq
-        }
-      }
-    // a heal racing an admit can leave two stats rows for one file; merge
-    // per-key flags with OR (either row alone is correct — disagreement is
-    // only ever an fpp straggler, and OR keeps the conservative side)
-    val survivors: Seq[(String, Seq[Boolean])] = collected
-      .groupBy(_._1).view
-      .mapValues(_.map(_._2).reduce((a, b) => a.lazyZip(b).map(_ || _)))
-      .toSeq.sortBy(_._1)
+    val hashes = keys.map(key => literalHash(spark, Seq(key)))
+    val survivors = decide(spark, statsDir, live, keys.length,
+      Option.when(hashes.forall(_.isDefined))(hashes.flatten)
+        .map(hs => (b: BloomFilter) => hs.map(b.mightContainLong)),
+      BloomSketch.containsFlags(col("bloom"), array(keys.map(xxhash64(_)): _*)))
     val perKey: Seq[Seq[String]] = keys.indices.map(i =>
       survivors.collect { case (f, flags) if flags(i) => f })
     val pred = keys.map(key => col(keyCol) === key).reduce(_ || _)
@@ -414,8 +339,10 @@ object BloomIndex {
     * differently and wrongly prune everything, which is why it is
     * require()d away), collected under `maxKeys` (the DPP broadcast-side
     * bound — this is the same order as the hashes a broadcast join would
-    * ship anyway), and probed against every covered file's bloom in ONE
-    * stats pass ([[graft.functions.BloomMightContainAny]]: one filter
+    * ship anyway), and tested against every covered file's bloom in one
+    * [[decide]] (one flag: might the file hold ANY dim key) — in-process
+    * over the serve cache when warm, else one stats pass
+    * ([[graft.functions.BloomMightContainAny]]: one filter
     * deserialization per stats row, short-circuit across the key batch).
     * Uncovered live files are kept unconditionally; a dim side wider
     * than `maxKeys` skips pruning entirely (logged) — both degrade to
@@ -446,23 +373,14 @@ object BloomIndex {
       .distinct().limit(maxKeys + 1)
       .as[Long].collect()
     val files: Seq[String] =
-      if (!Store.hasData(statsDir) || hashes.isEmpty ||
-          hashes.length > maxKeys) {
-        if (hashes.length > maxKeys)
-          log.info(s"dim side exceeds maxKeys=$maxKeys distinct keys; " +
-            "skipping file pruning (full fact scan, correct join)")
-        if (hashes.isEmpty) Nil else live.toSeq.sorted
-      } else {
-        val liveDf = live.toSeq.toDF("file")
-        liveDf.join(
-            Store.read(spark, statsDir).select(col("file"),
-              BloomSketch.mightContainAny(col("bloom"), lit(hashes))
-                .as("keep")),
-            Seq("file"), "left_outer")
-          .filter(coalesce(col("keep"), lit(true)))
-          .select(col("file")).distinct()
-          .as[String].collect().toSeq.sorted
-      }
+      if (hashes.isEmpty) Nil
+      else if (hashes.length > maxKeys) {
+        log.info(s"dim side exceeds maxKeys=$maxKeys distinct keys; " +
+          "skipping file pruning (full fact scan, correct join)")
+        live.toSeq.sorted
+      } else decide(spark, statsDir, live, 1,
+        Some(b => Seq(hashes.exists(b.mightContainLong))),
+        array(BloomSketch.mightContainAny(col("bloom"), lit(hashes)))).map(_._1)
     val df =
       if (files.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

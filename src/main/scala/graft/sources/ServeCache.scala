@@ -26,16 +26,22 @@ private[sources] final class ServeCache[V] {
   def invalidate(statsDir: String): Unit =
     entries.remove(ServeCache.cacheKey(statsDir)): Unit
 
+  /** Number of stats stores holding an entry. */
+  private[sources] def size: Int = entries.size
+
   /** The cached (or freshly loaded) value; None when the store exceeds
     * [[ServeCache.maxBytes]]. The version is taken BEFORE `load` reads the
     * store, so a stats append racing the refresh leaves a value newer than
     * its recorded version (the next call refreshes again) — never the
-    * reverse. */
+    * reverse. A miss also drops the entries of stats stores that no longer
+    * exist (a temporary store deleted after use is never read again): after
+    * any miss, every entry belongs to a store still on disk. */
   def get(statsDir: String)(load: => V): Option[V] = {
     val key = ServeCache.cacheKey(statsDir)
     val ver = ServeCache.contentVersion(statsDir)
     val hit = entries.get(key)
     if (hit != null && hit.version == ver) return Some(hit.value)
+    entries.keySet.removeIf(k => !new java.io.File(k).exists()): Unit
     if (ServeCache.diskBytes(new java.io.File(statsDir)) > ServeCache.maxBytes) {
       entries.remove(key)
       return None

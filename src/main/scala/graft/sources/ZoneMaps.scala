@@ -2,10 +2,11 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** File-level zone maps — data skipping for plain parquet directories.
+/** File-level zone maps — data skipping for a [[Store]]: an incremental
+  * store, or a plain parquet directory (a flat base with no deltas).
   *
   * A zone map is the tiny table of per-file column ranges (`file, count,
   * min_c/max_c per tracked column`) that lets a range query prune whole
@@ -30,28 +31,14 @@ import org.apache.spark.sql.functions._
   * and [[Store.compact]] shapes that rewrite with the writers' own
   * [[Layout.clusterShape]].
   *
-  * Scale discipline: building is ONE distributed scan grouped by
+  * Scale discipline: the stats of a batch of files come from their
+  * footers where exact, else from ONE distributed scan grouped by
   * `_metadata.file_path` (the stats shuffle is |files|-scale, not
   * row-scale). Pruning collects the zone map to the driver — a BOUNDED
   * collect by construction (one row per file; a lake region with 10^6
   * files collects ~10^6 short rows, the same order as the file listing
   * Spark's own InMemoryFileIndex already drivers through). */
 object ZoneMaps {
-
-  /** One distributed pass over `dataPath`: per-file row count + min/max of
-    * each tracked column, written (overwrite) to `statsDir`. */
-  def build(spark: SparkSession, dataPath: String, cols: Seq[String],
-      statsDir: String): Unit = {
-    require(cols.nonEmpty, "track at least one column")
-    // footer-derived when exact (r13, guide §6) — the build pass otherwise
-    // re-reads every tracked column of the whole layout just to recompute
-    // numbers the writer left in the footers; scan fallback is unchanged.
-    // (The static face predates nnull_c — statsForPaths now records it,
-    // which only ADDS information consumers guard on.)
-    statsForPaths(spark, Store.liveFiles(dataPath), cols)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(statsDir)
-  }
 
   // ── Decision predicates over a stats row, shared by every read face ───
 
@@ -80,11 +67,11 @@ object ZoneMaps {
     }.reduce(_ && _)
 
   /** Files PROVEN null-free in every predicate column. Null-safe: a stats
-    * row whose nnull_c is NULL (pre-nnull rows read through mergeSchema,
-    * or stats from the static build) yields FALSE, never NULL — a NULL
-    * eligibility would fail both the metadata branch and the scan branch
-    * of [[aggregateRangeIndexed]], silently dropping the file (unknown
-    * null counts mean "scan the file, never guess"). */
+    * row whose nnull_c is NULL (pre-nnull rows read through mergeSchema)
+    * yields FALSE, never NULL — a NULL eligibility would fail both the
+    * metadata branch and the scan branch of [[aggregateRangeIndexed]],
+    * silently dropping the file (unknown null counts mean "scan the file,
+    * never guess"). */
   private def nullFree(preds: Seq[(String, Column, Column)]): Column =
     preds.map { case (c, _, _) => coalesce(col(s"nnull_$c") === 0L, lit(false)) }
       .reduce(_ && _)
@@ -98,38 +85,7 @@ object ZoneMaps {
       col(s"nnull_$c").isNotNull && col(s"nnull_$c") === col("n_rows")
     }.reduce(_ || _)
 
-  /** Scan `dataPath` for rows satisfying every `col in [lo, hi)` conjunct,
-    * reading ONLY files the zone map cannot exclude. Returns the filtered
-    * frame plus (filesRead, filesTotal) for observability — the pair every
-    * data-skipping report is built from. The residual predicate is still
-    * applied (and still pushes to parquet row groups): surviving files
-    * straddle the boundary, so pruning alone is never assumed exact.
-    *
-    * Metadata cost: ONE read of the tiny stats table decides both the
-    * candidate list and the total (the bounded collect from the header).
-    * The data directory itself is never listed unless the candidate set is
-    * empty (only then is its schema read, to shape the empty result) —
-    * avoiding a full file listing is the entire point of the zone map. */
-  def scanPrunedAll(spark: SparkSession, dataPath: String, statsDir: String,
-      preds: Seq[(String, Column, Column)]): (DataFrame, (Int, Int)) = {
-    import spark.implicits._
-    require(preds.nonEmpty, "at least one range conjunct")
-    val flagged = spark.read.parquet(statsDir)
-      .select($"file", intersects(preds).as("keep")).as[(String, Boolean)]
-      .collect() // bounded: one row per data file (see header)
-    val total = flagged.length
-    val files = flagged.collect { case (f, true) => f }.toSeq
-    val df = Store.readCandidates(spark, files, rowPred(preds),
-      emptyFrom = spark.read.parquet(dataPath))
-    (df, (files.length, total))
-  }
-
-  /** Single-conjunct convenience face of [[scanPrunedAll]]. */
-  def scanPruned(spark: SparkSession, dataPath: String, statsDir: String,
-      trackedCol: String, lo: Column, hi: Column): (DataFrame, (Int, Int)) =
-    scanPrunedAll(spark, dataPath, statsDir, Seq((trackedCol, lo, hi)))
-
-  // ── Incremental face: a zone-mapped Store ─────────────────────────────
+  // ── The index face: a zone-mapped Store ───────────────────────────────
   //
   // The range-scan sibling of [[BloomIndex]]'s bloom-indexed Store, on the
   // same [[StatsIndex]] admission/heal protocol: each admitted delta

@@ -33,10 +33,10 @@ class BloomIndexSpec extends AnyFunSuite {
     val base = tmp()
     try {
       Layout.writeClustered(li, s"$base/data", Seq("l_orderkey"), 16)
-      BloomIndex.build(spark, s"$base/data", "l_orderkey", s"$base/stats",
-        expectedPerFile = 100000L)
+      BloomIndex.maintainIndex(spark, s"$base/data", s"$base/stats",
+        "l_orderkey", expectedPerFile = 100000L)
       val key = li.agg(max($"l_orderkey")).as[Long].head()
-      val (df, (read, total)) = BloomIndex.scanPointLookup(spark,
+      val (df, (read, total)) = BloomIndex.lookupIndexed(spark,
         s"$base/data", s"$base/stats", "l_orderkey", lit(key))
       assert(total == 16, s"expected 16 file slices, saw $total")
       // one true file + at most a couple of 1% fpp stragglers
@@ -52,12 +52,12 @@ class BloomIndexSpec extends AnyFunSuite {
     val base = tmp()
     try {
       li.repartition(16).write.parquet(s"$base/data")
-      BloomIndex.build(spark, s"$base/data", "l_orderkey", s"$base/stats",
-        expectedPerFile = 100000L)
+      BloomIndex.maintainIndex(spark, s"$base/data", s"$base/stats",
+        "l_orderkey", expectedPerFile = 100000L)
       val maxKey = li.agg(max($"l_orderkey")).as[Long].head()
       // absent key: blooms answer "definitely absent" with no layout help;
       // allow fpp stragglers but the data scan must be (near-)empty
-      val (dfAbsent, (readA, totalA)) = BloomIndex.scanPointLookup(spark,
+      val (dfAbsent, (readA, totalA)) = BloomIndex.lookupIndexed(spark,
         s"$base/data", s"$base/stats", "l_orderkey", lit(maxKey + 1000001L))
       assert(totalA == 16)
       assert(readA <= 2, s"absent key must prune nearly all files: $readA")
@@ -65,7 +65,7 @@ class BloomIndexSpec extends AnyFunSuite {
       // present key on a random layout: correctness unaffected (the rows
       // are scattered, so most/all files survive — that is the documented
       // layout trade-off, not a defect)
-      val (dfHit, _) = BloomIndex.scanPointLookup(spark,
+      val (dfHit, _) = BloomIndex.lookupIndexed(spark,
         s"$base/data", s"$base/stats", "l_orderkey", lit(maxKey))
       val got = dfHit.select($"l_orderkey", $"l_linenumber", $"l_partkey")
         .as[(Long, Int, Long)].collect().toSeq.sorted
@@ -269,6 +269,27 @@ class BloomIndexSpec extends AnyFunSuite {
     } finally sweep(base)
   }
 
+  test("no stats yet (the admit's crash window): every face reads every live file") {
+    val base = tmp()
+    try {
+      val (dataDir, statsDir) = (s"$base/data", s"$base/stats")
+      sources.Store.appendIdempotent(li.repartition(4), dataDir, "raw"): Unit
+      val key = li.agg(max($"l_orderkey")).as[Long].head()
+      val (df, (read, total)) = BloomIndex.lookupIndexed(spark, dataDir,
+        statsDir, "l_orderkey", lit(key))
+      assert(total >= 1 && read == total, s"point lookup read $read/$total")
+      assert(df.count() == li.filter($"l_orderkey" === key).count())
+      val (_, perKey, (bRead, bTotal)) = BloomIndex.lookupIndexedBatch(spark,
+        dataDir, statsDir, "l_orderkey", Seq(lit(key), lit(-1L)))
+      assert(bRead == bTotal && perKey.forall(_.size == bTotal),
+        s"batch read $bRead/$bTotal, per key ${perKey.map(_.size)}")
+      val (fact, (jRead, jTotal)) = BloomIndex.prunedJoinScan(spark, dataDir,
+        statsDir, "l_orderkey", Seq(key).toDF("l_orderkey"))
+      assert(jRead == jTotal, s"join pruning read $jRead/$jTotal")
+      assert(fact.filter($"l_orderkey" === key).count() == df.count())
+    } finally sweep(base)
+  }
+
   test("duplicated stats rows (heal racing an admit) never duplicate result rows") {
     val base = tmp()
     try {
@@ -341,11 +362,11 @@ class BloomIndexSpec extends AnyFunSuite {
     try {
       li.limit(5000).coalesce(1).write.parquet(s"$base/data")
       // declare 50 expected items for ~thousands actually inserted
-      BloomIndex.build(spark, s"$base/data", "l_orderkey", s"$base/stats",
-        expectedPerFile = 50L)
+      BloomIndex.maintainIndex(spark, s"$base/data", s"$base/stats",
+        "l_orderkey", expectedPerFile = 50L)
       val key = spark.read.parquet(s"$base/data")
         .agg(max($"l_orderkey")).as[Long].head()
-      val (df, (read, total)) = BloomIndex.scanPointLookup(spark,
+      val (df, (read, total)) = BloomIndex.lookupIndexed(spark,
         s"$base/data", s"$base/stats", "l_orderkey", lit(key))
       assert(read == total, "saturated filter answers maybe — reads all")
       assert(df.count() ==

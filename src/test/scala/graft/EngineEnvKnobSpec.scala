@@ -7,8 +7,8 @@ import scala.util.Using
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine packages read no environment variable except the two scratch
-  * roots (`TMPDIR`) and the driver's serve-cache budget, which sizes the
+/** The engine packages read no environment variable except the operators'
+  * scratch root (`TMPDIR`) and the driver's serve-cache budget, which sizes the
   * driver and so is a deployment setting. A behaviour choice belongs in the
   * code, picked from what it observes (e.g. the driver-loop caps gate on
   * input size), not in a process-wide env knob no caller sets. */
@@ -18,7 +18,6 @@ class EngineEnvKnobSpec extends AnyFunSuite {
     Seq("queries", "sources", "operators", "functions", "plans", "streaming")
   private val allowed = Set(
     "operators/Pipeline.scala: TMPDIR",
-    "operators/CommandRunner.scala: TMPDIR",
     "sources/ServeCache.scala: GRAFT_SERVE_CACHE_MAX_BYTES")
   private val envRead = """(sys\.env|System\.getenv)""".r
   private val envKey = """(?:sys\.env|System\.getenv)[^"]*"([^"]*)"""".r.unanchored
@@ -40,6 +39,6 @@ class EngineEnvKnobSpec extends AnyFunSuite {
     }
     assert(reads.nonEmpty, "the scan found no env read at all")
     val unexpected = reads.filterNot(allowed)
-    assert(unexpected.isEmpty, s"engine env knobs beyond the allowed three: $unexpected")
+    assert(unexpected.isEmpty, s"engine env knobs beyond the allowed two: $unexpected")
   }
 }

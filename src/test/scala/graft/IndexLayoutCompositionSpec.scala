@@ -34,12 +34,12 @@ class IndexLayoutCompositionSpec extends AnyFunSuite {
         .postingsPartials(Tables.documents(spark, sf))
       Layout.writeClustered(postings, s"$base/postings", Seq("token"),
         numFiles = 16)
-      ZoneMaps.build(spark, s"$base/postings", Seq("token"), s"$base/stats")
+      ZoneMaps.maintainIndex(spark, s"$base/postings", s"$base/stats", Seq("token"))
 
       val terms = Seq("join", "hash")
       // per-term pruned lookups: each reads a strict subset of the files
       val perTerm = terms.map { t =>
-        val (df, (read, total)) = ZoneMaps.scanPrunedAll(
+        val (df, (read, total)) = ZoneMaps.lookupRangeIndexed(
           spark, s"$base/postings", s"$base/stats", Seq(eqRange(t)))
         assert(read < total,
           s"'$t' must not read the whole postings layout ($read/$total)")

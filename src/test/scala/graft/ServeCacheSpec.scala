@@ -210,4 +210,50 @@ class ServeCacheSpec extends AnyFunSuite {
         s"expression probe must run the distributed pass: $execs executions")
     } finally sweep(base)
   }
+
+  test("entries of deleted stats stores are dropped: lookups on fresh temp stores keep the cache bounded") {
+    val before = BloomIndex.cachedStores
+    (0 until 6).foreach { i =>
+      val base = tmp()
+      try {
+        val (dataDir, statsDir) = (s"$base/data", s"$base/stats")
+        assert(BloomIndex.admitIndexed(batch(i, 100), dataDir, statsDir, "k", "b0"))
+        val (r, _, _) = probe(dataDir, statsDir, i * 100000L + 7L)
+        assert(r == Seq(s"g$i-7"))
+      } finally sweep(base)
+    }
+    // only the last store's entry may remain: no miss has run since it was
+    // deleted; every earlier one was dropped by the next store's refresh
+    assert(BloomIndex.cachedStores <= before + 1,
+      s"cache grew from $before to ${BloomIndex.cachedStores} entries over 6 deleted stores")
+  }
+
+  test("a warm prunedJoinScan decides from the cache: no stats execution, rows equal the unpruned join") {
+    val base = tmp()
+    try {
+      val (dataDir, statsDir) = (s"$base/data", s"$base/stats")
+      (0 until 4).foreach { g =>
+        assert(BloomIndex.admitIndexed(batch(g, 1000), dataDir, statsDir, "k", s"b$g"))
+      }
+      val dim = Seq(100007L, 200042L, 999999999L).toDF("k")
+      def hashDim() = dim.select(xxhash64($"k")).distinct().limit(65537)
+        .as[Long].collect()
+      BloomIndex.prunedJoinScan(spark, dataDir, statsDir, "k", dim) // warm
+      val (_, hashOnly) = metrics.measure("dim_hash")(hashDim())
+      val (((fact, (read, total)), p), execs) = countingExecutions {
+        metrics.measure("pruned_join_warm")(
+          BloomIndex.prunedJoinScan(spark, dataDir, statsDir, "k", dim))
+      }
+      assert(p.untagged == 0, s"${p.untagged} jobs ran outside the scope's tag")
+      // the one execution is the dim-key hash: the decision ran no job
+      assert(execs == 1, s"warm join pruning ran $execs executions")
+      assert(p.total.jobs == hashOnly.total.jobs,
+        s"warm decision ran ${p.total.jobs} jobs, the dim-key hash alone ${hashOnly.total.jobs}")
+      assert(total == 4 && read <= 3, s"read $read of $total")
+      val got = fact.join(dim, "k").select($"payload").as[String].collect().toSeq.sorted
+      val unpruned = Store.read(spark, dataDir).join(dim, "k")
+        .select($"payload").as[String].collect().toSeq.sorted
+      assert(got == unpruned && got == Seq("g1-7", "g2-42"))
+    } finally sweep(base)
+  }
 }

@@ -133,17 +133,17 @@ class ZoneFooterStatsSpec extends AnyFunSuite {
       graft.sources.Layout.writeClustered(Tables.lineitem(spark, sf),
         dataDir, Seq("l_shipdate"), numFiles = 4)
       val before = ZoneMaps.footerStatsServed.get()
-      ZoneMaps.build(spark, dataDir, Seq("l_shipdate"), statsDir)
+      ZoneMaps.maintainIndex(spark, dataDir, statsDir, Seq("l_shipdate"))
       assert(ZoneMaps.footerStatsServed.get() == before + 1)
-      val stats = spark.read.parquet(statsDir)
+      val stats = Store.read(spark, statsDir)
         .select($"n_rows", $"min_l_shipdate".as("mn"),
           $"max_l_shipdate".as("mx"), $"nnull_l_shipdate".as("nn"))
         .collect().map(_.toSeq).toSet
       assert(stats == recompute(Store.liveFiles(dataDir), "l_shipdate"))
-      // the scan face still prunes and returns exact rows over these stats
-      val (df, (read, total)) = ZoneMaps.scanPruned(spark, dataDir, statsDir,
-        "l_shipdate", lit("1997-01-01").cast("timestamp"),
-        lit("1997-04-01").cast("timestamp"))
+      // the range face still prunes and returns exact rows over these stats
+      val (df, (read, total)) = ZoneMaps.lookupRangeIndexed(spark, dataDir,
+        statsDir, Seq(("l_shipdate", lit("1997-01-01").cast("timestamp"),
+          lit("1997-04-01").cast("timestamp"))))
       val expect = Tables.lineitem(spark, sf)
         .filter($"l_shipdate" >= "1997-01-01" && $"l_shipdate" < "1997-04-01")
         .count()
